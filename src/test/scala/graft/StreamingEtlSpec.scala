@@ -1212,4 +1212,54 @@ class StreamingEtlSpec extends AnyFunSuite {
     // original-id chunks may appear as output batches
     assert(streamed.nonEmpty && streamed.size <= 2)
   }
+
+  // stream gate == its batch twin, columns compared by name (the oracle's
+  // column-order-free comparison)
+  private def rowSet(df: org.apache.spark.sql.DataFrame) =
+    df.select(df.columns.sorted.map(col): _*).collect().map(_.toSeq).toSet
+
+  private def assertGateEqualsBatch(gate: String, batch: => org.apache.spark.sql.DataFrame) = {
+    val dir = "/root/testdata/sf0.001"
+    val streamed = rowSet(SparkEntry.queries(gate)(spark, dir))
+    val expected = rowSet(batch)
+    assert(streamed == expected,
+      s"$gate diverged: ${streamed.size} vs ${expected.size} rows")
+    assert(expected.nonEmpty)
+  }
+
+  test("station_day_agg_stream snapshot equals the batch station_day_agg") {
+    assertGateEqualsBatch("station_day_agg_stream",
+      SparkEntry.queries("station_day_agg")(spark, "/root/testdata/sf0.001"))
+  }
+
+  test("station_day_agg_stream_tws snapshot equals the batch station_day_agg") {
+    assertGateEqualsBatch("station_day_agg_stream_tws",
+      SparkEntry.queries("station_day_agg")(spark, "/root/testdata/sf0.001"))
+  }
+
+  test("station_day_agg_stream_restart output equals the batch station_day_agg") {
+    assertGateEqualsBatch("station_day_agg_stream_restart",
+      SparkEntry.queries("station_day_agg")(spark, "/root/testdata/sf0.001"))
+  }
+
+  test("window_anomalies_stream snapshot equals the batch window_anomalies") {
+    assertGateEqualsBatch("window_anomalies_stream",
+      SparkEntry.queries("window_anomalies")(spark, "/root/testdata/sf0.001"))
+  }
+
+  test("asof_stream_last_error_restart output equals the batch asof_last_error") {
+    // the batch twin of asOfStreamLastError (whose own spec pins
+    // stream == batch above)
+    assertGateEqualsBatch("asof_stream_last_error_restart",
+      graft.operators.Relational.lastErrorBeforePurchase(
+        graft.sources.Tables.events(spark, "/root/testdata/sf0.001")))
+  }
+
+  test("emb_hnsw_stream_restart graph equals the batch hnswBuild") {
+    val dir = "/root/testdata/sf0.001"
+    val emb = graft.sources.Tables.embeddings(spark, dir)
+    assertGateEqualsBatch("emb_hnsw_stream_restart",
+      graft.operators.Similarity.hnswBuild(emb,
+        knownCount = graft.sources.Tables.parquetRowCount(spark, dir, "embeddings")))
+  }
 }
