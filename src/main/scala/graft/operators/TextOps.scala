@@ -300,58 +300,6 @@ object TextOps {
         array_distinct(graft.functions.VectorExpressions.gramXxHashes(col("toks"), n))
           .as("sh"))
 
-  // dev-probe accessors (graft.dev.R17Probe): expose the candidate-path
-  // stages for isolated timing without widening the real API
-  private[graft] def probeShingleSets(documents: DataFrame, n: Int): DataFrame =
-    shingleSets(documents, n)
-  private[graft] def probeBenchGramSplit(documents: DataFrame, n: Int,
-                                         benchMod: Int)
-      : (DataFrame, DataFrame, DataFrame) = benchGramSplit(documents, n, benchMod)
-  private[graft] def probeNdPruned(documents: DataFrame, n: Int): DataFrame = {
-    val inverted = shingleSets(documents, n)
-      .select(col("doc_id"), explode(col("sh")).as("shk"))
-    inverted
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("shk"))))
-      .filter(col("df") <= 1000)
-      .drop("df")
-  }
-  private[graft] def probeNdCandidates(documents: DataFrame, n: Int): DataFrame = {
-    val pruned = probeNdPruned(documents, n)
-    pruned.as("a")
-      .join(pruned.as("b"),
-        col("a.shk") === col("b.shk") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-  }
-  private[graft] def probeMhSigs(documents: DataFrame, n: Int,
-                                 numHashes: Int = 64): DataFrame = {
-    val exploded = shingleSets(documents, n)
-      .select(col("doc_id"), explode(col("sh")).as("shk"))
-    val sigCols = (0 until numHashes).map(i =>
-      min(xxhash64(lit(i), col("shk"))).as(s"h$i"))
-    exploded.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
-  }
-  private[graft] def probeMhCandidates(documents: DataFrame, n: Int,
-                                       numHashes: Int = 64,
-                                       bandRows: Int = 2): DataFrame = {
-    val sigs = probeMhSigs(documents, n, numHashes)
-    val numBands = numHashes / bandRows
-    val bandCols = (0 until numBands).map { b =>
-      val parts = (0 until bandRows).map(r => col(s"h${b * bandRows + r}"))
-      struct(lit(b).as("band"), xxhash64(parts: _*).as("bh"))
-    }
-    val banded = sigs
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("band.band").as("band"), col("band.bh").as("bh"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-  }
-
   def nearDupPairs(documents: DataFrame, n: Int = 5, threshold: Double = 0.4,
                    maxShingleDf: Int = 1000): DataFrame = {
     val sh = shingleSets(documents, n)

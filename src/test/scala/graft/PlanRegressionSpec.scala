@@ -664,7 +664,8 @@ class PlanRegressionSpec extends AnyFunSuite {
       "window_anomalies_stream",
       // round-15 restart gates (T6) — same rationale; each runs TWO real
       // stream executions (stop + recover) just to hand back a plan
-      "station_day_agg_stream_restart", "asof_stream_last_error_restart")
+      "station_day_agg_stream_restart", "asof_stream_last_error_restart",
+      "emb_hnsw_stream_restart")
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(skipStreaming)
       .filter { q =>

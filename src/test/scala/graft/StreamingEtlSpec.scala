@@ -1218,9 +1218,10 @@ class StreamingEtlSpec extends AnyFunSuite {
   private def rowSet(df: org.apache.spark.sql.DataFrame) =
     df.select(df.columns.sorted.map(col): _*).collect().map(_.toSeq).toSet
 
+  private val sf0001 = "/root/testdata/sf0.001"
+
   private def assertGateEqualsBatch(gate: String, batch: => org.apache.spark.sql.DataFrame) = {
-    val dir = "/root/testdata/sf0.001"
-    val streamed = rowSet(SparkEntry.queries(gate)(spark, dir))
+    val streamed = rowSet(SparkEntry.queries(gate)(spark, sf0001))
     val expected = rowSet(batch)
     assert(streamed == expected,
       s"$gate diverged: ${streamed.size} vs ${expected.size} rows")
@@ -1229,22 +1230,22 @@ class StreamingEtlSpec extends AnyFunSuite {
 
   test("station_day_agg_stream snapshot equals the batch station_day_agg") {
     assertGateEqualsBatch("station_day_agg_stream",
-      SparkEntry.queries("station_day_agg")(spark, "/root/testdata/sf0.001"))
+      SparkEntry.queries("station_day_agg")(spark, sf0001))
   }
 
   test("station_day_agg_stream_tws snapshot equals the batch station_day_agg") {
     assertGateEqualsBatch("station_day_agg_stream_tws",
-      SparkEntry.queries("station_day_agg")(spark, "/root/testdata/sf0.001"))
+      SparkEntry.queries("station_day_agg")(spark, sf0001))
   }
 
   test("station_day_agg_stream_restart output equals the batch station_day_agg") {
     assertGateEqualsBatch("station_day_agg_stream_restart",
-      SparkEntry.queries("station_day_agg")(spark, "/root/testdata/sf0.001"))
+      SparkEntry.queries("station_day_agg")(spark, sf0001))
   }
 
   test("window_anomalies_stream snapshot equals the batch window_anomalies") {
     assertGateEqualsBatch("window_anomalies_stream",
-      SparkEntry.queries("window_anomalies")(spark, "/root/testdata/sf0.001"))
+      SparkEntry.queries("window_anomalies")(spark, sf0001))
   }
 
   test("asof_stream_last_error_restart output equals the batch asof_last_error") {
@@ -1252,14 +1253,13 @@ class StreamingEtlSpec extends AnyFunSuite {
     // stream == batch above)
     assertGateEqualsBatch("asof_stream_last_error_restart",
       graft.operators.Relational.lastErrorBeforePurchase(
-        graft.sources.Tables.events(spark, "/root/testdata/sf0.001")))
+        graft.sources.Tables.events(spark, sf0001)))
   }
 
   test("emb_hnsw_stream_restart graph equals the batch hnswBuild") {
-    val dir = "/root/testdata/sf0.001"
-    val emb = graft.sources.Tables.embeddings(spark, dir)
+    val emb = graft.sources.Tables.embeddings(spark, sf0001)
     assertGateEqualsBatch("emb_hnsw_stream_restart",
       graft.operators.Similarity.hnswBuild(emb,
-        knownCount = graft.sources.Tables.parquetRowCount(spark, dir, "embeddings")))
+        knownCount = graft.sources.Tables.parquetRowCount(spark, sf0001, "embeddings")))
   }
 }
