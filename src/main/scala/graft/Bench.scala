@@ -91,8 +91,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // dev-only subsetting (e.g. the scale-slope tool benches just the
+    // documents/embeddings queries), parsed before the session starts; the
+    // driver leaves it unset and always benches everything
+    val names = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_QUERIES"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nCores = Runtime.getRuntime.availableProcessors()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -120,6 +123,7 @@ object Bench {
 
     val lcpConsumers = Set("doc_lcp", "doc_dup_intervals", "doc_dedup_excise_sa")
 
+    val nCores = Runtime.getRuntime.availableProcessors()
     def runOnce(name: String): Sample = {
       if (lcpConsumers(name)) SparkEntry.lcpRel(spark, sfDir).count(): Unit
       val busy0 = procStatBusy()
@@ -139,17 +143,13 @@ object Bench {
       // CPU to "external" and biasing load_suspect upward (round-15 advisor)
       val ext = (for (b0 <- busy0; b1 <- procStatBusy() if cpu >= 0) yield {
         val busySec = (b1 - b0) / 100.0 // USER_HZ=100 jiffies
+        // the MACHINE's processors, not the session's: busy jiffies count
+        // every core
         math.max(0.0, (busySec - cpu) / (wall * nCores))
       }).getOrElse(0.0)
       Sample(wall, cpu, ext, gcSec)
     }
 
-    // dev-only subsetting (e.g. the scale-slope tool benches just the
-    // documents/embeddings queries): comma-separated name prefixes; the
-    // driver leaves it unset and always benches everything
-    val prefixes = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSeq)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => prefixes.forall(_.exists(n.startsWith)))
     val samples = scala.collection.mutable.LinkedHashMap[String, List[Sample]]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     def live = names.filterNot(errors.contains)
@@ -229,7 +229,7 @@ object Bench {
     val cpuPerWall = if (total > 0) cpuTotal / total else 0.0
     val diag =
       s""""cpu_sec_total":${f3(cpuTotal)},"cpu_per_wall":${f3(cpuPerWall)},""" +
-        s""""ext_busy_median":${f3(extMedian)},"cores":$nCores,""" +
+        s""""ext_busy_median":${f3(extMedian)},"cores":$cpus,""" +
         s""""load_reason":"$loadReason""""
     val line =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"samples":$sampleRec,"errors":$errs,"load_suspect":$loadSuspect,$diag,"sf":"$sfDir"}"""

@@ -49,13 +49,10 @@ object SparkEntry {
     * doc_lcp, doc_dup_intervals, and doc_dedup_excise_sa all ride the
     * same artifact — exactly how a dedup deployment uses a suffix
     * index: build once, consult many times. */
-  // capacity is a knob, not a constant (round-11 advisor): a workload
-  // alternating across capacity+1 data dirs would otherwise thrash the
-  // memo, rebuilding the corpus-scale artifact on every access — still
-  // correct, but a silent performance cliff. -Dgraft.lcpMemo.capacity=N
-  // raises it; the eviction log below makes any thrash observable.
-  private[graft] def lcpMemoCapacity: Int =
-    sys.props.get("graft.lcpMemo.capacity").map(_.toInt).getOrElse(2)
+  // a workload alternating across more data dirs than this rebuilds the
+  // corpus-scale artifact on every access — still correct, and the
+  // eviction log below makes any thrash observable
+  private[graft] val lcpMemoCapacity = 2
   // LRU-BOUNDED (round-10 verdict #2): the memo caches corpus-scale
   // persisted artifacts, so an unbounded evict-never map would pin one
   // cluster-cache-sized relation per data dir ever touched by the JVM.
@@ -78,13 +75,31 @@ object SparkEntry {
           val eldest = it.next()
           System.err.println(s"graft: lcpMemo evicting '${eldest.getKey}' " +
             s"(capacity $lcpMemoCapacity, now caching '$dir') — frequent " +
-            "evictions mean thrash; raise -Dgraft.lcpMemo.capacity")
+            "evictions mean thrash")
           eldest.getValue.unpersist(blocking = false)
           it.remove()
         }
         df
       }
     }
+
+  /** The query names a comma-separated prefix list selects — the
+    * `SPARK_GRAFT_QUERIES` subset of Bench and Verify, and Explain's
+    * argument. Prefixes are trimmed and blank ones dropped; every prefix
+    * that matches no query is reported in one error, so a typo fails
+    * before any session starts instead of running nothing. No list means
+    * every query. */
+  def selectQueries(prefixes: Option[String]): Seq[String] = {
+    val all = queries.keys.toSeq.sorted
+    prefixes.fold(all) { list =>
+      val ps = list.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+      require(ps.nonEmpty, s"no query prefix in '$list'")
+      val unmatched = ps.filterNot(p => all.exists(_.startsWith(p)))
+      require(unmatched.isEmpty,
+        s"no query matches prefix(es): ${unmatched.mkString(", ")}")
+      all.filter(n => ps.exists(n.startsWith))
+    }
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- reference parity: ETL pipeline (SURVEY.md §2.2-§2.5) ---
@@ -1060,8 +1075,8 @@ object SparkEntry {
     "emb_kmeans" -> ((s, dir) =>
       Similarity.kmeansCentroids(Tables.embeddings(s, dir), k = 8, iters = 3)),
     // product-quantization codebooks (IVF-PQ's compression half): one
-    // independent Lloyd loop per contiguous subspace slice — 64 float dims
-    // compress to numSubspaces one-byte codes against these codebooks
+    // codebook per contiguous subspace slice — 64 float dims compress to
+    // numSubspaces one-byte codes against these codebooks
     "emb_pq_codebooks" -> ((s, dir) =>
       Similarity.pqCodebooks(Tables.embeddings(s, dir))),
     // PQ encoding: each vector's 4 one-byte codes against the published

@@ -6,6 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev-only subsetting (same contract as Bench), parsed before the
+    // session starts; the driver leaves it unset and always dumps everything
+    val names = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_QUERIES")).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -44,11 +47,8 @@ object Verify {
       }
     }
     new java.io.File(outDir).mkdirs()
-    // dev-only subsetting (same contract as Bench): comma-separated name
-    // prefixes; the driver leaves it unset and always dumps everything
-    val prefixes = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSeq)
     SparkEntry.queries
-      .filter { case (n, _) => prefixes.forall(_.exists(n.startsWith)) }
+      .filter { case (n, _) => names(n) }
       .foreach { case (name, fn) =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -69,7 +69,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => prefixes.forall(_.exists(k.startsWith)) }
+      .filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

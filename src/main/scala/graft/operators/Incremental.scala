@@ -161,6 +161,7 @@ object Incremental {
         // appears ~2^slices times in the final plan. Materializing here is
         // exactly what the streaming original does with its per-batch state
         // store; the rows are run-segment scale (≤ users × segments).
+        // never released early: `closed`'s final union reads this unrecomputable block
         .localCheckpoint(true)
       closed += runs.filter(col("valid_to").isNotNull)
         .select(col("user_id"), col("event_type"), col("valid_from"),

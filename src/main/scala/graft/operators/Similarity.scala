@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.DeterministicAgg.{avgRounded, roundFixed}
+import graft.functions.DeterministicAgg.{avgRounded, exactSum, roundFixed, roundFixedLocal}
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label) — the ANN/vector side of the LLM-pipeline
@@ -324,7 +324,7 @@ object Similarity {
     * rebuilding [[ivfTopKTrained]] plans. */
   def trainedCodebook(embeddings: DataFrame, k: Int = 8,
                       iters: Int = 3): Seq[(Long, Seq[Double], Double)] =
-    reshapeCodebook(kmeansRows(embeddings, k, iters)).filter(_._3 > 0)
+    reshapeCodebook(kmeans(embeddings, k, iters).raw).filter(_._3 > 0)
 
   /** ANN index-quality report: recall@k of [[ivfTopK]] against the exact
     * [[bruteForceTopK]] baseline, per query — the eval harness every
@@ -430,25 +430,112 @@ object Similarity {
     * member count (no rounding between iterations), so every intermediate
     * double is bit-identical to DuckDB replaying the same unrolled
     * iterations. Output is the centroid table after `iters` update steps in
-    * long format (cluster_id, dim, centroid_val).
+    * long format (cluster_id, dim, centroid_val), rounded to 1e-6.
     *
-    * Per iteration: one narrow pass for assignment (N·k·d flops, no
-    * shuffle) + one posexplode/hash-agg (shuffle on (cluster, dim)) + a
+    * Per iteration ([[lloyd]]): one narrow pass for assignment (N·k·d
+    * flops) + one posexplode/hash-agg (shuffle on (dim, cluster)) + a
     * k·d-row collect — the codebook is metadata-scale by construction, the
-    * corpus never leaves its partitions. This is the coarse-quantizer
+    * corpus is never collected. This is the coarse-quantizer
     * trainer the IVF scaladoc promises ("a production system would use
     * k-means centroids").
     */
   def kmeansCentroids(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
     import embeddings.sparkSession.implicits._
-    val rows = kmeansRows(embeddings, k, iters)
     // the trainer already holds the k·d result rows — build a local
     // relation instead of a lazy plan that would RE-RUN the last iteration
     // (one full corpus pass) on evaluation
-    rows.map(r => (r._1, r._2, r._3))
-      .toDF("cluster_id", "dim", "centroid_val")
-      .select(col("cluster_id"), col("dim"),
-        roundFixed(col("centroid_val"), 6).as("centroid_val"))
+    kmeans(embeddings, k, iters).rows.toDF("cluster_id", "dim", "centroid_val")
+  }
+
+  /** One trained codebook; `raw` holds the last Lloyd update's
+    * (cluster_id, dim, centroid_val) rows. */
+  private[graft] final case class Trained(raw: Seq[(Long, Int, Double)]) {
+    /** The published rows: centroids on the 1e-6 grid, by the
+      * engine-portable rounding the oracle replays. */
+    lazy val rows: Seq[(Long, Int, Double)] =
+      raw.map { case (c, d, x) => (c, d, roundFixedLocal(x, 6)) }
+    /** The codewords an encoder assigns against: the PUBLISHED rows (the
+      * artifact a consumer holds — unrounded trainer internals would make
+      * codes unreproducible from it), zero-norm codewords dropped. */
+    lazy val codebook: Seq[(Long, Seq[Double], Double)] =
+      reshapeCodebook(rows).filter(_._3 > 0)
+  }
+
+  /** A whole-vector codebook: k-means, trained IVF, SemDeDup, RQ stages. */
+  private def kmeans(embeddings: DataFrame, k: Int, iters: Int): Trained =
+    lloyd(embeddings, k, iters)(d => Seq(0 until d)).head
+
+  /** The Lloyd loop behind every codebook in this file. `groupsOf(d)` cuts
+    * a d-dim vector into disjoint position groups, and group g trains its
+    * own k-codeword codebook on the sub-vector that reads groups(g) in
+    * order — exactly what [[kmeansCentroids]] computes on a corpus holding
+    * only that sub-vector. PQ passes contiguous slices, the OPQ distortion
+    * permuted slices, everything else the whole vector.
+    *
+    * The seeds (the first k vec_ids' vectors) are collected once and
+    * sliced on the driver. Each iteration is ONE pass for all groups: a
+    * corpus scan ([[Spread.byKey]]-spread when it is sub-parallel)
+    * assigns every group's nearest centroid in the same row (per-group
+    * cosine argmax), posexplodes the vector once into one exact-decimal
+    * aggregate on (position, cluster), and collects the G·k·w centroid
+    * rows. Groups never read each other and decimal sums are order-free,
+    * so each group's doubles equal a standalone run on its sub-vector.
+    * Empty seed set (empty corpus / k = 0) → empty codebooks. */
+  private[graft] def lloyd(embeddings: DataFrame, k: Int, iters: Int)(
+      groupsOf: Int => Seq[Seq[Int]]): IndexedSeq[Trained] = {
+    require(iters >= 1, s"k-means needs at least one iteration, got $iters")
+    val seeds = anchors(embeddings, k)
+    val d = seeds.headOption.fold(0)(_._2.length)
+    val groups = groupsOf(d).toIndexedSeq
+    if (seeds.isEmpty) return groups.map(_ => Trained(Nil))
+    require(groups.flatten.max < d,
+      s"position groups reach dim ${groups.flatten.max}, vectors have $d dims")
+    // position → (group, dim within the group)
+    val owner = (for ((ps, g) <- groups.zipWithIndex; (p, j) <- ps.zipWithIndex)
+      yield p -> (g, j)).toMap
+    val groupOf = typedLit((0 until d).map(p => owner.get(p).fold(-1)(_._1)))
+    // a contiguous group slices (cheaper per row than gathering items)
+    def sub(ps: Seq[Int]): Column =
+      if (ps == (ps.head until ps.head + ps.size)) slice(col("v"), ps.head + 1, ps.size)
+      else array(ps.map(p => col("v").getItem(p)): _*)
+    // spread across the cores: one iteration carries every group's
+    // assignment and update, which a single-split scan would run on one
+    val e = Spread.byKey(embeddings, col("vec_id"))
+      .select(vec(col("embedding")).as("v"))
+    var books = groups.map(ps => seeds.map { case (id, x, _) =>
+      val xs = ps.map(x)
+      (id, xs, math.sqrt(xs.map(y => y * y).sum))
+    })
+    var last = IndexedSeq.empty[Seq[(Long, Int, Double)]]
+    for (_ <- 1 to iters) {
+      // one scalar code per group, computed once per row below the
+      // posexplode; each position then takes the code of its group
+      val coded = e.select(col("v") +: groups.indices.map { g =>
+        nearestAnchorIds(sub(groups(g)), books(g), keep = 1).getItem(0).as(s"c$g")
+      }: _*)
+      val cluster = groups.indices.tail.foldLeft(col("c0")) { (acc, g) =>
+        when(try_element_at(groupOf, col("pos") + 1) === g, col(s"c$g"))
+          .otherwise(acc)
+      }
+      val cents = coded
+        .select(groups.indices.map(g => col(s"c$g")) :+
+          posexplode(col("v")).as(Seq("pos", "x")): _*)
+        .groupBy(col("pos"), cluster.as("cluster_id"))
+        .agg((exactSum(col("x")) / count(col("x"))).as("centroid_val"))
+        .collect().toSeq
+        // positions no group reads aggregate under some code; drop them
+        .flatMap(r => owner.get(r.getInt(0)).map { case (g, j) =>
+          g -> (r.getLong(1), j, r.getDouble(2))
+        })
+        .groupBy(_._1)
+      last = groups.indices.map(g => cents.getOrElse(g, Nil).map(_._2))
+      // zero-norm centroids (a cluster whose members cancel exactly) make
+      // the next round's cosine NaN — and Spark and DuckDB ORDER NaN
+      // differently, so they must never reach an assignment; the oracle
+      // applies the identical cnrm > 0 filter to its codebook CTE
+      books = last.map(rs => reshapeCodebook(rs).filter(_._3 > 0))
+    }
+    last.map(Trained)
   }
 
   /** Product-quantization codebooks — the memory-compression half of a
@@ -460,77 +547,27 @@ object Similarity {
     * per vector at (4, 256): a 100 TB embedding corpus fits hot in
     * cluster memory.
     *
-    * Pure composition: each subspace trains on a narrow slice projection of
-    * the SAME corpus scan shape as [[kmeansCentroids]] (per-iteration
-    * assignment pass + (cluster, dim) hash agg + k·w-row collect), and the
-    * oracle replays each subspace with the same unrolled-Lloyd replica over
-    * a sliced source — identical arithmetic, hash-exact.
+    * All subspaces train in the one [[lloyd]] loop (one pass per iteration),
+    * and the oracle replays each subspace with the same unrolled-Lloyd
+    * replica over a sliced source — identical arithmetic, hash-exact.
     */
-  /** Build the independent per-subspace artifacts CONCURRENTLY (round-16
-    * optimization, guide §2.6 "overlap independent jobs"). Each subspace's
-    * Lloyd chain is a strictly sequential ladder of tiny collect jobs
-    * (iters × (assignment scan + centroid agg)), and the subspaces never
-    * read each other — so driving them from one thread each lets the next
-    * subspace's jobs back-fill the cores the current one's tail leaves
-    * idle. Determinism is untouched: every subspace computes exactly what
-    * it computed sequentially, and the result sequence keeps ascending
-    * subspace order. Spark's scheduler is explicitly multi-thread-safe
-    * here (FIFO; thread-local job groups). SAFETY CONTRACT: the
-    * DataFrames the thunks derive from must carry NO higher-order-
-    * function lambdas (transform/filter/aggregate Columns) — a Catalyst
-    * lambda holds a NamedLambdaVariable whose value cell survives plan
-    * copies, and concurrent chains sharing one instance race on it
-    * (observed: run-to-run different kmeans codebooks until
-    * rotateVectors and pqDistortionUnder went lambda-free; SimilaritySpec
-    * pins determinism on both). Plain scans, casts, slices, getItem and
-    * native expressions are all safe. Measured: emb_opq_distortion
-    * 2.9 → ~1.6 s, emb_pq/rq/ivfpq search builds similar ratios. */
-  /** True when the analyzed plan carries any higher-order-function lambda
-    * — the one expression class the SAFETY CONTRACT above excludes. */
-  private def hasLambda(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
-    df.queryExecution.analyzed.exists(_.expressions.exists(
-      _.exists(_.isInstanceOf[LambdaFunction])))
-  }
-
-  /** `shared` is the DataFrame every thunk derives from: the SAFETY
-    * CONTRACT is now ENFORCED (round-16 advisor), not comment-trusted — a
-    * caller handing a transform()-built input falls back to the safe
-    * sequential path instead of silently reintroducing the
-    * NamedLambdaVariable race. Threads are daemons (a wedged Spark job
-    * must not pin a non-daemon pool forever) and the await is bounded:
-    * generous enough for any real build, finite so a hung subspace
-    * surfaces as a loud failure instead of an indefinite hang. */
-  private def inParallel[A](n: Int, shared: DataFrame)(f: Int => A): IndexedSeq[A] = {
-    if (n <= 1 || hasLambda(shared)) return (0 until n).map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(n,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-subspace")
-        t.setDaemon(true)
-        t
-      })
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futs = (0 until n).map(s => scala.concurrent.Future(f(s)))
-      futs.map(fu => scala.concurrent.Await.result(
-        fu, scala.concurrent.duration.Duration(30, "min")))
-    } finally pool.shutdown()
-  }
-
   def pqCodebooks(embeddings: DataFrame, numSubspaces: Int = 4, k: Int = 8,
                   iters: Int = 2, dim: Int = 64): DataFrame = {
+    import embeddings.sparkSession.implicits._
+    pqTrain(embeddings, numSubspaces, k, iters, dim).zipWithIndex
+      .flatMap { case (t, s) => t.rows.map { case (c, d, x) => (s, c, d, x) } }
+      .toDF("subspace", "cluster_id", "dim", "centroid_val")
+  }
+
+  /** The per-subspace codebooks over contiguous `dim / numSubspaces`
+    * slices. */
+  private def pqTrain(embeddings: DataFrame, numSubspaces: Int, k: Int,
+                      iters: Int, dim: Int): IndexedSeq[Trained] = {
     require(dim % numSubspaces == 0,
       s"dim $dim must divide evenly into $numSubspaces subspaces")
     val w = dim / numSubspaces
-    inParallel(numSubspaces, embeddings) { s =>
-      kmeansCentroids(
-        embeddings.select(col("vec_id"),
-          slice(col("embedding"), s * w + 1, w).as("embedding")),
-        k, iters)
-        .select(lit(s).as("subspace"), col("cluster_id"), col("dim"),
-          col("centroid_val"))
-    }.reduce(_ unionByName _)
+    lloyd(embeddings, k, iters)(_ =>
+      (0 until numSubspaces).map(s => s * w until (s + 1) * w))
   }
 
   /** PQ encoding — the companion of [[pqCodebooks]]: each vector's
@@ -551,19 +588,14 @@ object Similarity {
     */
   def pqAssignCodes(embeddings: DataFrame, numSubspaces: Int = 4, k: Int = 8,
                     iters: Int = 2, dim: Int = 64): DataFrame = {
-    require(dim % numSubspaces == 0,
-      s"dim $dim must divide evenly into $numSubspaces subspaces")
+    val books = pqTrain(embeddings, numSubspaces, k, iters, dim)
     val w = dim / numSubspaces
-    inParallel(numSubspaces, embeddings) { s =>
+    (0 until numSubspaces).map { s =>
       val sliced = embeddings.select(col("vec_id"),
         slice(col("embedding"), s * w + 1, w).as("embedding"))
-      val cb = reshapeCodebook(
-        kmeansCentroids(sliced, k, iters).collect().toSeq
-          .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))))
-        .filter(_._3 > 0)
       val e = sliced.select(col("vec_id"), vec(col("embedding")).as("v"))
       e.select(col("vec_id"), lit(s).as("subspace"),
-        nearestCodewordL2(col("v"), cb).as("code"))
+        nearestCodewordL2(col("v"), books(s).codebook).as("code"))
     }.reduce(_ unionByName _)
   }
 
@@ -654,16 +686,9 @@ object Similarity {
       ivf.map { case (c, _) => anchors(embeddings, c) }
     if (anc.exists(_.isEmpty)) return emptyTopK(embeddings)
     val w = dim / numSubspaces
-    // per-subspace ROUNDED published codebooks (same artifact pqAssignCodes
-    // assigns against), zero-norm codewords dropped before assignment
-    val cbs: Seq[Seq[(Long, Seq[Double], Double)]] = inParallel(numSubspaces, embeddings) { s =>
-      val sliced = embeddings.select(col("vec_id"),
-        slice(col("embedding"), s * w + 1, w).as("embedding"))
-      reshapeCodebook(
-        kmeansCentroids(sliced, codewords, iters).collect().toSeq
-          .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))))
-        .filter(_._3 > 0)
-    }
+    // the same published codebooks pqAssignCodes assigns against
+    val cbs = pqTrain(embeddings, numSubspaces, codewords, iters, dim)
+      .map(_.codebook)
     if (cbs.exists(_.isEmpty)) return emptyTopK(embeddings)
     // per-codeword squared norms, 0.0 for ids that never survive (a code can
     // only reference a surviving codeword, so the gaps are never looked up);
@@ -765,20 +790,19 @@ object Similarity {
     * collect); the residual is a pure per-row expression (argmin lookup
     * + zip_with subtract) layered on the scan, so stage s costs s
     * expression layers but still ZERO extra shuffles or materializations. */
-  private def rqStageRows(embeddings: DataFrame, numStages: Int, k: Int,
-                          iters: Int): Seq[Seq[(Long, Int, Double)]] = {
+  private def rqStages(embeddings: DataFrame, numStages: Int, k: Int,
+                       iters: Int): Seq[Trained] = {
     require(numStages >= 1 && numStages <= 8,
       s"numStages in [1,8], got $numStages")
     var residual = embeddings
       .select(col("vec_id"), vec(col("embedding")).as("embedding"))
-    val acc = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Int, Double)]]
+    val acc = scala.collection.mutable.ArrayBuffer.empty[Trained]
     for (s <- 0 until numStages) {
-      val rows = kmeansCentroids(residual, k, iters).collect().toSeq
-        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-      acc += rows
-      if (rows.isEmpty) return acc.toSeq // empty corpus: caller degrades
+      val stage = kmeans(residual, k, iters)
+      acc += stage
+      if (stage.raw.isEmpty) return acc.toSeq // empty corpus: caller degrades
       if (s < numStages - 1) {
-        val cb = reshapeCodebook(rows).filter(_._3 > 0)
+        val cb = stage.codebook
         require(cb.nonEmpty,
           s"RQ stage $s collapsed to an all-zero codebook — residuals are " +
             "identically zero; lower numStages")
@@ -817,13 +841,10 @@ object Similarity {
     * Output: (stage, cluster_id, dim, centroid_val). */
   def rqCodebooks(embeddings: DataFrame, numStages: Int = 2, k: Int = 8,
                   iters: Int = 2): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    rqStageRows(embeddings, numStages, k, iters).zipWithIndex.map {
-      case (rows, s) =>
-        rows.map(r => (s, r._1, r._2, r._3))
-          .toDF("stage", "cluster_id", "dim", "centroid_val")
-    }.reduce(_ unionByName _)
+    import embeddings.sparkSession.implicits._
+    rqStages(embeddings, numStages, k, iters).zipWithIndex
+      .flatMap { case (t, s) => t.rows.map { case (c, d, x) => (s, c, d, x) } }
+      .toDF("stage", "cluster_id", "dim", "centroid_val")
   }
 
   /** RQ encoding — the companion of [[rqCodebooks]] ([[pqAssignCodes]]'s
@@ -833,10 +854,9 @@ object Similarity {
     * stage structs explode row-locally). Output: (vec_id, stage, code). */
   def rqAssignCodes(embeddings: DataFrame, numStages: Int = 2, k: Int = 8,
                     iters: Int = 2): DataFrame = {
-    val cbs = rqStageRows(embeddings, numStages, k, iters)
-      .map(rows => reshapeCodebook(rows).filter(_._3 > 0))
+    val cbs = rqStages(embeddings, numStages, k, iters).map(_.codebook)
     require(cbs.forall(_.nonEmpty) || cbs.head.isEmpty,
-      "RQ stage collapsed — see rqStageRows")
+      "RQ stage collapsed — see rqStages")
     if (cbs.exists(_.isEmpty))
       return embeddings.select(col("vec_id"), lit(0).as("stage"),
         lit(0L).as("code")).filter(lit(false))
@@ -883,8 +903,8 @@ object Similarity {
   def rqSearchTopK(embeddings: DataFrame, numQueries: Int = 10, k: Int = 5,
                    numStages: Int = 2, codewords: Int = 8,
                    iters: Int = 2): DataFrame = {
-    val cbs = rqStageRows(embeddings, numStages, codewords, iters)
-      .map(rows => reshapeCodebook(rows).filter(_._3 > 0))
+    val cbs = rqStages(embeddings, numStages, codewords, iters)
+      .map(_.codebook)
     if (cbs.exists(_.isEmpty)) return emptyTopK(embeddings)
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -1028,15 +1048,8 @@ object Similarity {
     * downstream cosine semantics are unchanged. */
   private[graft] def rotateVectors(embeddings: DataFrame,
                                    r: Array[Array[Double]]): DataFrame = {
-    // LAMBDA-FREE rotation (round-16): one explicit dot expression per
-    // output dim over a native array cast, not `transform(matrix, row ->
-    // dot(row, vec(v)))`. The rotated relation is the SHARED parent of
-    // the now-concurrent per-subspace codebook chains (pqCodebooks /
-    // pqAssignCodes / adcSearch), and a Catalyst higher-order-function
-    // lambda carries a NamedLambdaVariable whose value cell survives plan
-    // copies — concurrent chains racing on it produced run-to-run
-    // different codebooks (caught by the spec's determinism assertions).
-    // Same doubles: element i is dot(r(i), cast(v)) either way.
+    // one dot expression per output dim over a native array cast:
+    // element i is dot(r(i), cast(v))
     val v = col("embedding").cast("array<double>")
     embeddings.select(col("vec_id"),
       array(r.toIndexedSeq.map(row => dot(typedLit(row.toSeq), v)): _*)
@@ -1118,26 +1131,14 @@ object Similarity {
                                        codewords: Int = 8,
                                        iters: Int = 2): DataFrame = {
     val w = perm.length / numSubspaces
-    // Each subspace projects ITS w permuted dims directly — fixed getItem
-    // positions, NO higher-order-function lambda. The previous
-    // `transform(typedLit(perm), p -> element_at(…))` parent, SHARED by
-    // the concurrent subspace chains, was the round's one real
-    // concurrency bug: a Catalyst lambda carries a NamedLambdaVariable
-    // whose value cell survives plan copies, and the chains racing on it
-    // produced run-to-run different codebooks (caught by the spec's
-    // determinism assertion; bisected with a two-runs probe — raw-slice
-    // concurrent kmeans was deterministic, shared-permuted was not).
-    // getItem(p) is element_at(p+1) exactly, including the NULL on
-    // out-of-range, so values are unchanged — there is just no shared
-    // mutable expression state left to race on.
-    inParallel(numSubspaces, embeddings) { s =>
+    val groups = (0 until numSubspaces).map(s => perm.slice(s * w, (s + 1) * w).toSeq)
+    val books = lloyd(embeddings, codewords, iters)(_ => groups)
+    (0 until numSubspaces).map { s =>
+      // the subspace's w permuted dims as fixed getItem positions — the
+      // sub-vector its codebook was trained on
       val sliced = embeddings.select(col("vec_id"),
-        array(perm.slice(s * w, (s + 1) * w).toIndexedSeq
-          .map(p => col("embedding").getItem(p)): _*).as("embedding"))
-      val cb = reshapeCodebook(
-        kmeansCentroids(sliced, codewords, iters).collect().toSeq
-          .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))))
-        .filter(_._3 > 0)
+        array(groups(s).map(p => col("embedding").getItem(p)): _*).as("embedding"))
+      val cb = books(s).codebook
       val cwByCode = typedLit(cb.map { case (id, cw, _) => id -> cw }.toMap)
       val cw = element_at(cwByCode, col("code"))
       val diff = (i: Column) =>
@@ -1151,35 +1152,6 @@ object Similarity {
             .as("distortion"))
         .select(lit(s).as("subspace"), col("n_vectors"), col("distortion"))
     }.reduce(_ unionByName _)
-  }
-
-  /** The Lloyd loop itself: returns the final (cluster_id, dim,
-    * centroid_val) rows. Empty init set (empty corpus / k = 0) → empty. */
-  private def kmeansRows(embeddings: DataFrame, k: Int,
-                         iters: Int): Seq[(Long, Int, Double)] = {
-    import org.apache.spark.sql.types.DecimalType
-    require(iters >= 1, s"k-means needs at least one iteration, got $iters")
-    var codebook = anchors(embeddings, k)
-    if (codebook.isEmpty) return Nil
-    val e = embeddings.select(col("vec_id"), vec(col("embedding")).as("v"))
-    var lastRows: Seq[(Long, Int, Double)] = Nil
-    for (_ <- 1 to iters) {
-      val assigned = e.withColumn("cluster_id",
-        nearestAnchorIds(col("v"), codebook, keep = 1).getItem(0))
-      val cents = assigned
-        .select(col("cluster_id"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy(col("cluster_id"), col("dim"))
-        .agg((sum(col("x").cast(DecimalType(38, 10))).cast("double") / count(col("x")))
-          .as("centroid_val"))
-      lastRows = cents.collect().toSeq
-        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-      // zero-norm centroids (a cluster whose members cancel exactly) make
-      // the next round's cosine NaN — and Spark and DuckDB ORDER NaN
-      // differently, so they must never reach an assignment; the oracle
-      // applies the identical cnrm > 0 filter to its codebook CTE
-      codebook = reshapeCodebook(lastRows).filter(_._3 > 0)
-    }
-    lastRows
   }
 
   /** (cluster_id, dim, value) rows → codebook entries (id, vector, norm),
@@ -1427,10 +1399,7 @@ object Similarity {
 
   def semanticDedup(embeddings: DataFrame, k: Int = 8, iters: Int = 2,
                     threshold: Double = 0.85): DataFrame = {
-    val cb = reshapeCodebook(
-      kmeansCentroids(embeddings, k, iters).collect().toSeq
-        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))))
-      .filter(_._3 > 0)
+    val cb = kmeans(embeddings, k, iters).codebook
     // materialize the assignment ONCE (round-17): `e` is referenced three
     // times (both self-join sides and the verdict spine), so the per-row
     // k·d argmin — the operator's dominant per-row cost once k tracks the

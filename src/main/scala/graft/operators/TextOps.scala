@@ -2750,7 +2750,7 @@ object TextOps {
     * decimal sum, so partition order cannot perturb the trajectory, and
     * the DuckDB oracle replays the identical unrolled iterations
     * hash-exactly (same discipline as the k-means trainer,
-    * Similarity.scala kmeansRows).
+    * Similarity.scala lloyd).
     *
     * Returns one row: corpus size, train accuracy, and the four weights.
     */

@@ -22,8 +22,8 @@ object TypedAgg {
   /** `maxTime` is event-time MICROSECONDS (TimestampType's native
     * precision). `Timestamp.getTime` alone is millis — folding through it
     * silently truncated update_time against the batch path on real data
-    * (sub-millisecond event times; caught by StreamSmoke's snapshot
-    * equality check).
+    * (sub-millisecond event times; the station_day_agg_stream_tws spec's
+    * snapshot equality on real data checks it).
     *
     * `tempSum` is a WIDE DECIMAL, not a double (round 14): the double fold
     * summed in arrival order, so the typed mean was order-dependent and

@@ -35,9 +35,9 @@ object StreamingEtl {
     * (streaming requires it anyway). The ts encoding comes from the SAME
     * footer probe as the batch reader ([[Tables.eventsReadPlan]]) — the r7
     * testdata regen flipped TIMESTAMP(NANOS) to timestamp[us], and the
-    * streaming path must branch identically (StreamSmoke caught the
-    * unconditional ns→µs divide collapsing stream timestamps to 1970
-    * while batch was already fixed).
+    * streaming path must branch identically (an unconditional ns→µs
+    * divide collapses stream timestamps to 1970; StreamingEtlSpec pins
+    * the decoded year range on real testdata).
     */
   def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
     val (schema, convertNanos) = Tables.eventsReadPlan(spark, dir)
@@ -145,7 +145,8 @@ object StreamingEtl {
     * fMGWS form is the Spark-3-compatible fallback (and runs on any state
     * store provider, where transformWithState requires RocksDB);
     * StreamingEtlSpec pins both to the identical emission sequence, and
-    * StreamSmoke exercises the TWS path on real data each round.
+    * its station_day_agg_stream_tws spec checks the TWS path against the
+    * batch aggregate on real data.
     *
     * [[punctuatedStationDayAgg]] emits on each group's OWN
     * timer; this variant arms every group's event-time timer at the same

@@ -1040,6 +1040,49 @@ class SimilaritySpec extends AnyFunSuite {
       .map(r => (2, r.getAs[Long]("cluster_id"), r.getAs[Int]("dim")) ->
         r.getAs[Double]("centroid_val")).toMap
     assert(solo == pq.filter(_._1._1 == 2), "subspace 2 diverged from solo run")
+    // a PERMUTED group — the OPQ-distortion path — equals a standalone
+    // k-means on the same dims gathered into a vector
+    val perm = Similarity.opqPermutation(emb, numSubspaces = 4)
+    val groups = (0 until 4).map(s => perm.slice(s * 16, (s + 1) * 16).toSeq)
+    val trained = Similarity.lloyd(emb, k = 4, iters = 2)(_ => groups)
+    val permSolo = Similarity.kmeansCentroids(
+      emb.select(col("vec_id"),
+        array(groups(1).map(p => col("embedding").getItem(p)): _*).as("embedding")),
+      k = 4, iters = 2).collect()
+      .map(r => (r.getAs[Long]("cluster_id"), r.getAs[Int]("dim"),
+        r.getAs[Double]("centroid_val"))).toSet
+    assert(groups(1) != (groups(1).head until groups(1).head + 16), "not permuted")
+    assert(permSolo.nonEmpty && permSolo == trained(1).rows.toSet,
+      "permuted group diverged from solo run")
+  }
+
+  test("pq codebooks: the training job count does not grow with the subspace count") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // jobs launched while the codebooks train; a marker job flushes the
+    // async listener bus, which delivers events in order
+    def trainingJobs(numSubspaces: Int): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val flushed = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          if (Option(js.properties).exists(
+                _.getProperty("spark.job.description") == "flush-marker"))
+            flushed.countDown()
+          else jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Similarity.pqCodebooks(emb, numSubspaces = numSubspaces, k = 4, iters = 2)
+        spark.sparkContext.setJobDescription("flush-marker")
+        try spark.sparkContext.parallelize(Seq(1)).count()
+        finally spark.sparkContext.setJobDescription(null)
+        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get
+    }
+    val (two, four) = (trainingJobs(2), trainingJobs(4))
+    assert(two > 0 && two == four,
+      s"training jobs: $two with 2 subspaces, $four with 4")
   }
 
   test("hnsw build: geometric layers, rank-capped out-degree, edges stay within layer membership") {

@@ -29,8 +29,7 @@ class StreamingEtlSpec extends AnyFunSuite {
     // the r7 regen flipped events.ts from TIMESTAMP(NANOS) to timestamp[us];
     // the streaming source must branch on the footer exactly like
     // Tables.events (an unconditional ns->us divide collapses every stream
-    // timestamp into 1970 — caught by StreamSmoke, pinned here so sbt test
-    // fails too)
+    // timestamp into 1970)
     val dir = "/root/testdata/sf0.001"
     val staged = java.nio.file.Files.createTempDirectory("graft-ts-probe")
     java.nio.file.Files.copy(
@@ -842,6 +841,30 @@ class StreamingEtlSpec extends AnyFunSuite {
       assert(streamed == expected)
       // state is bucket-bounded: no (type, bucket) pair exceeds the grid
       assert(streamed.keys.forall { case (_, b) => b >= 0 && b < 16 })
+    } finally q.stop()
+  }
+
+  test("streaming histogram sketch over the real events stream equals the batch histogram") {
+    val dir = "/root/testdata/sf0.001"
+    val staged = java.nio.file.Files.createTempDirectory("graft-hist-probe")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$dir/events.parquet"),
+      staged.resolve("events.parquet"))
+    val q = StreamingEtl.valueHistogramStreaming(
+        StreamingEtl.readEventsStream(spark, staged.toString), lo = 0.0, hi = 100.0)
+      .writeStream.format("memory").queryName("hist_real")
+      .outputMode("update").start()
+    try {
+      q.processAllAvailable()
+      // update mode re-emits refreshed rows; counts only grow, so the max
+      // per (type, bucket) is the maintained count
+      val streamed = spark.table("hist_real")
+        .groupBy("event_type", "bucket").agg(max(col("cnt")).as("cnt"))
+      val batch = StreamingEtl.valueHistogramStreaming(
+        graft.sources.Tables.events(spark, dir), lo = 0.0, hi = 100.0)
+      assert(batch.count() > 0)
+      assert(streamed.exceptAll(batch).count() == 0)
+      assert(batch.exceptAll(streamed).count() == 0)
     } finally q.stop()
   }
 

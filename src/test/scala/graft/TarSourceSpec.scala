@@ -289,6 +289,25 @@ class TarSourceSpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
+  test("streaming: a graft-tar stream over the packed real corpus equals the batch read") {
+    // member count, total bytes and the order-independent content-hash
+    // XOR — the wds_roundtrip oracle's invariants — on the streaming path
+    val tmp = writeCorpusShards(4)
+    def summary(df: org.apache.spark.sql.DataFrame) = df
+      .agg(count(lit(1)), sum(col("size")),
+        bit_xor(graft.operators.TextOps.portableHash64(col("content")))).head()
+    val q = spark.readStream.format("graft-tar").load(tmp)
+      .writeStream.format("memory").queryName("tar_stream_vs_batch")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val streamed = summary(spark.table("tar_stream_vs_batch"))
+      assert(streamed == summary(spark.read.format("graft-tar").load(tmp)))
+      assert(streamed.getLong(0) == sources.Tables.documents(spark, dir)
+        .filter(col("text").isNotNull).count())
+    } finally q.stop()
+  }
+
   test("statistics: pruned scans report pruned sizes; a small shard selection broadcasts") {
     import graft.sources.TarScan
     val tmp = writeCorpusShards(8)
