@@ -1241,4 +1241,83 @@ class MultimodalSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(
       r.getAs[Array[Byte]]("payload"), orig.getAs[Array[Byte]]("payload")))
   }
+
+  test("published mm_* schemas: column name and type of every multimodal query") {
+    // building a query plans it but runs no job; the literal table pins
+    // what Verify dumps and the oracle compares, column by column
+    val expected: Map[String, Seq[(String, String)]] = Map(
+      "mm_adpcm_decode" -> Seq(
+        "doc_id" -> "bigint", "sample_rate" -> "int", "n_samples" -> "bigint",
+        "sum_pcm" -> "bigint", "min_pcm" -> "int"),
+      "mm_alaw_decode" -> Seq(
+        "doc_id" -> "bigint", "sample_rate" -> "int", "n_samples" -> "bigint",
+        "sum_pcm" -> "bigint", "min_pcm" -> "int"),
+      "mm_audio_features" -> Seq(
+        "doc_id" -> "bigint", "n_samples" -> "bigint", "n_windows" -> "bigint",
+        "total_energy" -> "bigint", "total_zcr" -> "bigint", "max_energy" -> "bigint"),
+      "mm_bmp_decode" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_pixels" -> "bigint",
+        "sum_r" -> "bigint", "sum_g" -> "bigint", "sum_b" -> "bigint"),
+      "mm_feature_stats" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int",
+        "payload_bytes" -> "bigint", "mean_byte" -> "double"),
+      "mm_frame_sample" -> Seq(
+        "doc_id" -> "bigint", "n_kept_frames" -> "bigint", "kept_bytes" -> "bigint"),
+      "mm_gif_anim_decode" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_frames" -> "int",
+        "n_pixels" -> "bigint", "sum_px" -> "bigint"),
+      "mm_gif_anim_poster" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_frames" -> "int",
+        "n_pixels" -> "bigint", "sum_px" -> "bigint"),
+      "mm_gif_decode" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_pixels" -> "bigint",
+        "sum_px" -> "bigint"),
+      "mm_image_exact_dup" -> Seq(
+        "hash_lo" -> "bigint", "hash_hi" -> "bigint", "n_images" -> "bigint",
+        "canonical" -> "bigint"),
+      "mm_image_near_dup" -> Seq(
+        "img_a" -> "bigint", "img_b" -> "bigint", "hamming" -> "bigint"),
+      "mm_jpeg_decode" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_pixels" -> "bigint",
+        "sum_px" -> "bigint"),
+      "mm_mc_gop_sample" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_kept" -> "int",
+        "n_pixels_kept" -> "bigint", "sum_px" -> "bigint", "n_decoded" -> "bigint"),
+      "mm_mc_scene_cuts" -> Seq(
+        "doc_id" -> "bigint", "n_frames" -> "int", "n_cuts" -> "bigint",
+        "max_diff" -> "bigint", "sum_diff" -> "bigint"),
+      "mm_mc_video_decode" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_frames" -> "int",
+        "n_pixels" -> "bigint", "sum_px" -> "bigint"),
+      "mm_mjpeg_decode" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_frames" -> "int",
+        "n_pixels" -> "bigint", "sum_px" -> "bigint"),
+      "mm_mjpeg_sample" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_frames" -> "int",
+        "n_pixels" -> "bigint", "sum_px" -> "bigint"),
+      "mm_png_decode" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_pixels" -> "bigint",
+        "sum_r" -> "bigint", "sum_g" -> "bigint", "sum_b" -> "bigint"),
+      "mm_ppm_decode" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_pixels" -> "bigint",
+        "sum_r" -> "bigint", "sum_g" -> "bigint", "sum_b" -> "bigint"),
+      "mm_qoi_decode" -> Seq(
+        "doc_id" -> "bigint", "width" -> "int", "height" -> "int", "n_pixels" -> "bigint",
+        "sum_r" -> "bigint", "sum_g" -> "bigint", "sum_b" -> "bigint"),
+      "mm_resize_stats" -> Seq(
+        "doc_id" -> "bigint", "out_w" -> "int", "out_h" -> "int", "n_pixels" -> "bigint",
+        "sum_r" -> "bigint", "sum_g" -> "bigint", "sum_b" -> "bigint"),
+      "mm_ulaw_decode" -> Seq(
+        "doc_id" -> "bigint", "sample_rate" -> "int", "n_samples" -> "bigint",
+        "sum_pcm" -> "bigint", "min_pcm" -> "int"),
+      "mm_wav_decode" -> Seq(
+        "doc_id" -> "bigint", "sample_rate" -> "int", "n_samples" -> "bigint",
+        "sum_samples" -> "bigint", "max_sample" -> "int"))
+    val built = SparkEntry.queries.collect { case (n, f) if n.startsWith("mm_") =>
+      n -> f(spark, "/root/testdata/sf0.001").schema.fields.toSeq
+        .map(c => c.name -> c.dataType.simpleString)
+    }
+    assert(built.size == 23)
+    assert(built == expected)
+  }
 }
