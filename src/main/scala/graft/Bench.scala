@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line on stdout per the driver contract.
   *
@@ -95,15 +94,8 @@ object Bench {
     // documents/embeddings queries), parsed before the session starts; the
     // driver leaves it unset and always benches everything
     val names = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_QUERIES"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // permits TIMESTAMP(NANOS) events files if the generator reverts — see Tables.eventsReadPlan
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.devSession(defaultCpus = 32)
+    val cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("WARN")
     // The known-bounded global windows (doc_collocations' final rank runs
     // over a TakeOrderedAndProject of k rows; the incident-bin windows are

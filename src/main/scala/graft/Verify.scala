@@ -1,23 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2, "usage: graft.Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
     // dev-only subsetting (same contract as Bench), parsed before the
     // session starts; the driver leaves it unset and always dumps everything
     val names = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_QUERIES")).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // permits TIMESTAMP(NANOS) events files if the generator reverts — see Tables.eventsReadPlan
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.devSession(defaultCpus = 4)
     spark.sparkContext.setLogLevel("WARN")
     // Testdata-drift gate (r6 post-mortem): the driver regenerates the
     // parquet between rounds; if the read path misdecodes ts, every

@@ -1,39 +1,41 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
-/** Multimodal-column plumbing: media as opaque `binary` payloads + typed
-  * metadata, with decode / feature-extraction / resize / frame-sample stages.
+/** Multimodal columns: media as an opaque `binary` payload plus typed
+  * metadata, decoded by real pure-JVM codecs.
   *
-  * SIX formats are decoded for REAL in pure JVM — netpbm P6 PPM
-  * ([[Multimodal.decodePpmStats]]), uncompressed 24-bit BMP
-  * ([[Multimodal.decodeBmpStats]]), RIFF/WAVE PCM16 audio
-  * ([[Multimodal.decodeWavStats]]), the COMPRESSED QOI image codec
-  * ([[Multimodal.decodeQoiStats]] — run-length/index/delta chunk state
-  * machine), PNG ([[Multimodal.decodePngStats]] — zlib/DEFLATE
-  * inflate via `java.util.zip` plus full five-filter scanline
-  * reconstruction and per-chunk CRC32 validation), and GIF
-  * ([[Multimodal.decodeGifStats]] — variable-width LZW dictionary coder
-  * with KwKwK reconstruction, table reset, palette indirection): stills
-  * all decode for real (PPM, BMP, QOI, PNG, GIF, JPEG —
-  * [[Multimodal.decodeJpegStats]], full Huffman + IDCT), audio decodes
-  * for real (WAV PCM, G.711 mu/A-law, IMA ADPCM), intra-only video
-  * decodes for real (MJPEG in an AVI/RIFF container,
-  * [[Multimodal.decodeAviStats]] — every frame through the complete
-  * JPEG pipeline), and INTER-FRAME video now decodes for real too:
-  * [[Multimodal.parseMcVideo]] is a motion-compensated I/P codec
-  * (full-search block motion estimation, SKIP/INTER/INTRA modes,
-  * H.264-style 4x4 integer transform in its lossless configuration).
-  * Every CODEC CLASS therefore has a real implementation; the only
-  * remaining fake is [[Multimodal.decodeFeatures]], which stands in for
-  * third-party bitstream PARSERS this container cannot ship (licensed
-  * H.264/H.265 decoders): it runs a deterministic header parse + byte
-  * histogram in place of a real pixel decode. The
-  * Spark-side plumbing is real and tested: binary column construction,
-  * metadata struct schema, `mapPartitions` batch shape (the Scala analog of
-  * mapInPandas: one iterator per partition, no per-row setup cost), and
-  * narrow (shuffle-free) execution.
+  * Each format is one entry of the codec table ([[Multimodal.Codec]]):
+  * the size columns it reads from `documents`, its payload synth (a
+  * column expression for the byte-level containers, an encoder run per
+  * row for the compressed formats), whether its encode + decode chain is
+  * heavy enough to spread the scan, and its `parse*`. Every payload body
+  * is the document text cycled to the raster or sample count, so the
+  * DuckDB oracle recomputes each published statistic from the text alone.
+  *
+  * A query synthesizes its codec's media table, parses each payload and
+  * adapts the result to one of three decoded forms, each with one stats
+  * fold: an RGB raster ([[Multimodal.RgbStats]]: PPM, BMP, QOI, PNG, the
+  * PPM resize), grey frames ([[Multimodal.FrameStats]], a still is one
+  * frame: GIF, animated GIF, JPEG, MJPEG in AVI, motion-compensated
+  * video) or PCM samples ([[Multimodal.PcmStats]]: WAV, G.711 mu/A-law,
+  * IMA ADPCM). One helper, `publish`, selects the published columns. The
+  * queries with their own fold (audio features, scene cuts, GOP
+  * sampling, aHash and the feature stub) share the synth, the
+  * [[Multimodal.ByteReader]] and the text guard.
+  *
+  * The codecs are real: QOI's run/index/delta state machine, PNG's
+  * DEFLATE and five-filter reconstruction with CRC checks, GIF's
+  * variable-width LZW (with inter-frame deltas for animation), baseline
+  * JPEG (Huffman + DCT), MJPEG in an AVI/RIFF container, G.711 and IMA
+  * ADPCM audio, and a motion-compensated I/P video codec with a lossless
+  * 4x4 integer transform. The one stub, [[Multimodal.decodeFeatures]],
+  * stands in for licensed H.264/H.265 parsers. Every decode is a narrow
+  * `mapPartitions` (one iterator per partition, no shuffle), and every
+  * malformed payload fails a loud `require`.
   */
 object Multimodal {
 
@@ -45,13 +47,534 @@ object Multimodal {
       histogram: Seq[Long], meanByte: Double)
   final case class Frame(docId: Long, frameIdx: Int, frame: Array[Byte])
 
-  /** Integer-exact per-channel pixel stats from a REAL decode. */
-  final case class PpmStats(
-      docId: Long, width: Int, height: Int, nPixels: Long,
-      sumR: Long, sumG: Long, sumB: Long)
-  final case class BmpStats(
-      docId: Long, width: Int, height: Int, nPixels: Long,
-      sumR: Long, sumG: Long, sumB: Long)
+  /** Integer-exact per-channel sums of a decoded RGB raster. */
+  final case class RgbStats(docId: Long, width: Int, height: Int, nPixels: Long,
+                            sumR: Long, sumG: Long, sumB: Long)
+  /** Integer-exact pixel sum over decoded grey frames: `nFrames` is what
+    * the format holds (or a sampler kept), `nPixels` what was summed. */
+  final case class FrameStats(docId: Long, width: Int, height: Int, nFrames: Int,
+                              nPixels: Long, sumPx: Long)
+  /** Integer-exact sum, min and max of decoded PCM samples. */
+  final case class PcmStats(docId: Long, sampleRate: Int, nSamples: Long,
+                            sumPcm: Long, minPcm: Int, maxPcm: Int)
+
+  // ───────────────────────── the codec table ─────────────────────────
+
+  /** One format. `w`, `h` and `n` are its size columns over `documents`
+    * (`n` counts frames, samples or code bytes; audio has no pixel dims
+    * and sets w = h = 0), `payload` builds its bytes from them and the
+    * guarded text `t`, `spread` opts the heavy chains into [[spreadScan]],
+    * and `parse` is the format's decoder. */
+  private final case class Codec[P](mime: String, w: Column, h: Column, n: Column,
+                                    spread: Boolean, payload: Payload,
+                                    parse: Array[Byte] => P)
+
+  /** A payload is a column expression over (t, w, h, n), or, for the
+    * formats whose encoder is imperative, a function of (text bytes, w, h,
+    * n) run per row. */
+  private sealed trait Payload
+  private final case class SqlPayload(bytes: Column) extends Payload
+  private final case class CodedPayload(
+      encode: (Array[Byte], Int, Int, Int) => Array[Byte]) extends Payload
+
+  private val SampleRate = 8000
+  private val one = lit(1)
+  private val zero = lit(0)
+  private def ascii(s: String): Column = encode(lit(s), "UTF-8")
+  /** The body every synth cycles: `t` to exactly `n` chars by rpad, which
+    * pads cyclically and truncates to a prefix on Spark and DuckDB alike
+    * (the ASCII corpus makes chars == bytes; the parsers re-check sizes). */
+  private def cycled(n: String): Column = encode(expr(s"rpad(t, $n, t)"), "UTF-8")
+
+  /** P6 PPM: an ASCII header, then the raw RGB24 body. */
+  private val Ppm = Codec("image/x-portable-pixmap",
+    col("n_chars") % 16 + 8, col("doc_id") % 12 + 8, one, spread = false,
+    SqlPayload(concat(
+      encode(concat(lit("P6\n"), col("w").cast("string"), lit(" "),
+        col("h").cast("string"), lit("\n255\n")), "UTF-8"),
+      cycled("w * h * 3"))),
+    parsePpm)
+
+  /** Windows BMP: BITMAPFILEHEADER + BITMAPINFOHEADER + a bottom-up BGR
+    * raster. The width is a multiple of 4, so rows carry no padding
+    * ([[parseBmp]] still handles padded and top-down rasters). */
+  private val Bmp = {
+    val nBody = col("w") * col("h") * 3
+    Codec("image/bmp",
+      (col("n_chars") % 4 + 2) * 4, col("doc_id") % 12 + 8, one, spread = false,
+      SqlPayload(concat(
+        unhex(lit("424D")),             // 'BM'
+        le(nBody + 54, 4),              // file size
+        unhex(lit("00000000")),         // reserved
+        unhex(lit("36000000")),         // pixel-data offset = 54
+        unhex(lit("28000000")),         // BITMAPINFOHEADER size = 40
+        le(col("w"), 4),
+        le(col("h"), 4),                // positive height = bottom-up rows
+        unhex(lit("0100")),             // planes = 1
+        unhex(lit("1800")),             // bitCount = 24
+        unhex(lit("00000000")),         // compression = BI_RGB
+        le(nBody, 4),                   // imageSize
+        unhex(lit("130B0000130B0000")), // 2835 px/m x,y (72 dpi)
+        unhex(lit("0000000000000000")), // palette sizes (none at 24-bit)
+        cycled("w * h * 3"))),
+      bmpRgb)
+  }
+
+  /** RIFF/WAVE PCM16 mono: canonical 44-byte header, then `n` samples of
+    * two text bytes each (ASCII < 0x80 keeps every sample positive). */
+  private val Wav = Codec("audio/wav", zero, zero, col("n_chars") % 32 + 16, spread = false,
+    SqlPayload(concat(
+      ascii("RIFF"), le(col("n") * 2 + 36, 4), ascii("WAVE"),
+      ascii("fmt "), le(lit(16), 4),
+      le(lit(1), 2),                   // audio format = PCM
+      le(lit(1), 2),                   // channels = mono
+      le(lit(SampleRate), 4),
+      le(lit(SampleRate * 2), 4),      // byte rate = rate · block align
+      le(lit(2), 2),                   // block align = ch · bits/8
+      le(lit(16), 2),                  // bits per sample
+      ascii("data"), le(col("n") * 2, 4),
+      cycled("n * 2"))),
+    parseWav)
+
+  /** G.711 WAVE (format tag 7 = mu-law, 6 = A-law, 8 bits/sample) with the
+    * `fact` chunk non-PCM streams require; the CODE stream is the text
+    * cycled to `n` bytes, so the oracle maps each byte through the
+    * integer expand formula. */
+  private def g711(formatTag: Int, expand: Byte => Short) =
+    Codec("audio/basic", zero, zero, col("n_chars") % 32 + 16, spread = false,
+      SqlPayload(concat(
+        ascii("RIFF"), le(col("n") + 50, 4), ascii("WAVE"),
+        ascii("fmt "), le(lit(18), 4),
+        le(lit(formatTag), 2),
+        le(lit(1), 2),                   // mono
+        le(lit(SampleRate), 4),
+        le(lit(SampleRate), 4),          // byte rate = rate · blockAlign(1)
+        le(lit(1), 2),                   // block align
+        le(lit(8), 2),                   // bits per sample
+        le(lit(0), 2),                   // cbSize (no codec extension)
+        ascii("fact"), le(lit(4), 4),
+        le(col("n"), 4),                 // decoded frame count
+        ascii("data"), le(col("n"), 4),
+        cycled("n"))),
+      (p: Array[Byte]) => {
+        val (rate, codes) = parseWavMuLaw(p, formatTag)
+        (rate, codes.map(expand))
+      })
+  private val MuLaw = g711(7, muLawDecode)
+  private val ALaw = g711(6, aLawDecode)
+
+  /** IMA ADPCM WAVE (format tag 0x11): one block whose CODE stream is the
+    * text cycled to `n` bytes with header state (0, 0), so the oracle
+    * replays the decoder's state machine as a DuckDB `list_reduce` fold. */
+  private val Adpcm = {
+    val nSamples = col("n") * 2 + 1
+    // the RIFF/data sizes count CHARACTERS (rpad length) while the body is
+    // UTF-8 BYTES: equal only for ASCII text, enforced here so a non-ASCII
+    // corpus fails at generation, not as a size mismatch in the decoder
+    val body = cycled("n")
+    val checkedBody = when(octet_length(body) === col("n"), body)
+      .otherwise(raise_error(concat(
+        lit("imaAdpcmFromDocuments: non-ASCII text breaks the char==byte "),
+        lit("size assumption for doc_id "), col("doc_id").cast("string"))))
+    Codec("audio/adpcm", zero, zero, col("n_chars") % 24 + 12, spread = false,
+      SqlPayload(concat(
+        ascii("RIFF"), le(col("n") + 56, 4), ascii("WAVE"),
+        ascii("fmt "), le(lit(20), 4),
+        le(lit(0x11), 2),                // WAVE_FORMAT_IMA_ADPCM
+        le(lit(1), 2),                   // mono
+        le(lit(SampleRate), 4),
+        le(lit(SampleRate), 4),          // nominal byte rate
+        le(col("n") + 4, 2),             // block align (header + code bytes)
+        le(lit(4), 2),                   // bits per sample
+        le(lit(2), 2),                   // cbSize
+        le(nSamples, 2),                 // samplesPerBlock
+        ascii("fact"), le(lit(4), 4),
+        le(nSamples, 4),                 // decoded frame count
+        ascii("data"), le(col("n") + 4, 4),
+        le(lit(0), 2), le(lit(0), 2),    // block header: pred 0, idx 0, rsvd
+        checkedBody)),
+      parseWavImaAdpcm)
+  }
+
+  /** QOI (lossless run/index/delta chunks): the RGB stream is the text
+    * cycled to w·h·3 bytes, really compressed by [[encodeQoi]]. */
+  private val Qoi = Codec("image/qoi",
+    col("n_chars") % 12 + 4, col("doc_id") % 8 + 4, one, spread = false,
+    CodedPayload((tb, w, h, _) => encodeQoi(w, h, cycle(tb, w * h * 3))), parseQoi)
+
+  /** PNG (filtered scanlines, DEFLATE, CRC-guarded chunks). */
+  private val Png = Codec("image/png",
+    col("n_chars") % 10 + 5, col("doc_id") % 7 + 5, one, spread = true,
+    CodedPayload((tb, w, h, _) => encodePng(w, h, cycle(tb, w * h * 3))), parsePng)
+
+  /** GIF89a with a 256-entry grayscale palette (entry i = (i,i,i)), so the
+    * LZW-coded index stream is the text bytes cycled to w·h. */
+  private val Gif = Codec("image/gif",
+    col("n_chars") % 14 + 6, col("doc_id") % 9 + 6, one, spread = false,
+    CodedPayload((tb, w, h, _) => encodeGif(w, h, cycle(tb, w * h))), parseGif)
+
+  /** Animated GIF89a of `n` "ticker" frames ([[tickerFrames]]), stored as
+    * transparent-index deltas by [[encodeGifAnim]]. */
+  private val GifAnim = Codec("image/gif",
+    col("n_chars") % 14 + 6, col("doc_id") % 9 + 6, col("doc_id") % 4 + 2, spread = true,
+    CodedPayload((tb, w, h, nf) => encodeGifAnim(w, h, tickerFrames(tb, w, h, nf))),
+    parseGifAnim)
+
+  /** Baseline JPEG of an 8×8-block-constant raster ([[blockConstantGray]]):
+    * the one image class the lossy DCT codec reproduces bit-exactly. */
+  private val Jpeg = Codec("image/jpeg",
+    (col("n_chars") % 3 + 2) * 8, (col("doc_id") % 3 + 2) * 8, one, spread = true,
+    CodedPayload((tb, w, h, _) => encodeJpeg(w, h, blockConstantGray(w, h, tb, 0))),
+    parseJpeg)
+
+  /** MJPEG in an AVI container: frame k's blocks read the text cycled from
+    * offset k, so adjacent frames differ slightly, as video frames do. */
+  private val Avi = Codec("video/x-msvideo",
+    (col("n_chars") % 3 + 2) * 8, (col("doc_id") % 3 + 2) * 8, col("doc_id") % 4 + 2,
+    spread = true,
+    CodedPayload((tb, w, h, nf) => encodeAvi(w, h,
+      Array.tabulate(nf)(k => encodeJpeg(w, h, blockConstantGray(w, h, tb, k))))),
+    parseAvi)
+
+  /** Motion-compensated I/P video of the same frame class as [[Avi]]:
+    * frame k+1 is frame k shifted one block, so motion search finds exact
+    * inter predictions and most P-blocks collapse to SKIPs. A keyframe
+    * every `gop` frames (0: only the first). */
+  private def mcVideo(gop: Int) = Codec("video/x-graft-mc",
+    (col("n_chars") % 3 + 2) * 8, (col("doc_id") % 3 + 2) * 8, col("doc_id") % 3 + 3,
+    spread = true,
+    CodedPayload((tb, w, h, nf) =>
+      encodeMcVideo(w, h, Array.tabulate(nf)(k => blockConstantGray(w, h, tb, k)), gop)),
+    parseMcVideo)
+
+  // ─────────────── synth, decode, the three folds, publish ───────────────
+
+  /** The document text with null or empty replaced by one space — the
+    * guard the oracle replicates, so every synth cycles a non-empty text. */
+  private val guardedText: Column =
+    when(col("text").isNull || col("text") === "", lit(" ")).otherwise(col("text")).as("t")
+
+  /** Spread a sub-parallel documents scan before an expensive encode +
+    * decode chain. The documents table is one single-row-group parquet
+    * file, so a JPEG/AVI/MC-video chain otherwise runs on one core
+    * (mm_mjpeg_decode at sf0.1: 3.15 s before the spread, 0.38 s after).
+    * A no-op when the scan already spans the cluster. Only the heavy
+    * chains opt in: for the byte-level codecs the extra exchange measured
+    * as pure overhead. */
+  private def spreadScan(documents: DataFrame): DataFrame =
+    Spread.byKey(documents, col("doc_id"))
+
+  /** The media table (docId, payload, meta) of `c` over `documents`. */
+  private def synth(documents: DataFrame, c: Codec[_]): DataFrame = {
+    val base = (if (c.spread) spreadScan(documents) else documents).select(
+      col("doc_id"), guardedText, c.w.cast("int").as("w"), c.h.cast("int").as("h"),
+      c.n.cast("int").as("n"))
+    c.payload match {
+      case SqlPayload(bytes) =>
+        base.select(col("doc_id").as("docId"), bytes.as("payload"),
+          struct(lit(c.mime).as("format"), col("w").as("width"), col("h").as("height"),
+            length(bytes).cast("long").as("nBytes")).as("meta"))
+      case CodedPayload(encode) =>
+        val mime = c.mime
+        base.as(Encoders.product[(Long, String, Int, Int, Int)]).mapPartitions(
+          _.map { case (docId, t, w, h, n) =>
+            val payload = encode(t.getBytes("UTF-8"), w, h, n)
+            MediaFile(docId, payload, MediaMeta(mime, w, h, payload.length.toLong))
+          })(Encoders.product[MediaFile]).toDF()
+    }
+  }
+
+  /** The one decode pass: parse every payload and fold it, narrow. */
+  private def decodeMedia[P, S <: Product : TypeTag](media: Dataset[MediaFile],
+      parse: Array[Byte] => P)(fold: (MediaFile, P) => S): Dataset[S] =
+    media.mapPartitions(_.map(m => fold(m, parse(m.payload))))(Encoders.product[S])
+
+  /** [[decodeMedia]] over the media table `c` synthesizes. */
+  private def decode[P, S <: Product : TypeTag](documents: DataFrame, c: Codec[P])(
+      fold: (MediaFile, P) => S): Dataset[S] =
+    decodeMedia(asMediaDataset(synth(documents, c)), c.parse)(fold)
+
+  /** The RGB fold: per-channel sums of a packed R,G,B raster. */
+  private def rgb(m: MediaFile, raster: (Int, Int, Array[Byte])): RgbStats = {
+    val (w, h, px) = raster
+    var (sr, sg, sb) = (0L, 0L, 0L)
+    var i = 0
+    while (i + 2 < px.length) {
+      sr += px(i) & 0xff; sg += px(i + 1) & 0xff; sb += px(i + 2) & 0xff
+      i += 3
+    }
+    RgbStats(m.docId, w, h, w.toLong * h, sr, sg, sb)
+  }
+
+  /** The grey fold: the pixel sum over `frames` (a still is one frame). */
+  private def grey(m: MediaFile, w: Int, h: Int, nFrames: Int,
+                   frames: collection.Seq[Array[Byte]]): FrameStats = {
+    var s = 0L
+    frames.foreach { f =>
+      var i = 0
+      while (i < f.length) { s += f(i) & 0xff; i += 1 }
+    }
+    FrameStats(m.docId, w, h, nFrames, w.toLong * h * frames.length, s)
+  }
+
+  /** The PCM fold: sample count, sum, min and max (0 when empty). */
+  private def pcm(m: MediaFile, decoded: (Int, Array[Short])): PcmStats = {
+    val (rate, s) = decoded
+    var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
+    var i = 0
+    while (i < s.length) {
+      val v = s(i).toInt
+      sum += v; if (v < mn) mn = v; if (v > mx) mx = v
+      i += 1
+    }
+    PcmStats(m.docId, rate, s.length.toLong, sum,
+      if (s.isEmpty) 0 else mn, if (s.isEmpty) 0 else mx)
+  }
+
+  /** The published columns of a stats fold: `fields` under their
+    * snake_case names (`sumR` → `sum_r`), in order. */
+  private def publish(stats: Dataset[_], fields: String*): DataFrame =
+    stats.toDF().select(fields.map(f =>
+      col(f).as(f.replaceAll("([A-Z])", "_$1").toLowerCase)): _*)
+
+  private val RgbColumns = Seq("docId", "width", "height", "nPixels", "sumR", "sumG", "sumB")
+  private val StillColumns = Seq("docId", "width", "height", "nPixels", "sumPx")
+  private val VideoColumns = Seq("docId", "width", "height", "nFrames", "nPixels", "sumPx")
+  private val PcmColumns = Seq("docId", "sampleRate", "nSamples", "sumPcm", "minPcm")
+
+  // ───────────────────────────── queries ─────────────────────────────
+
+  def ppmDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, Ppm)(rgb), RgbColumns: _*)
+
+  def bmpDecodeStats(documents: DataFrame): DataFrame =
+    publish(decodeBmpStats(asMediaDataset(synth(documents, Bmp))), RgbColumns: _*)
+
+  /** The BMP decode as a typed Dataset; channel sums exclude row padding
+    * and are row-order invariant, so bottom-up and top-down agree. */
+  def decodeBmpStats(media: Dataset[MediaFile]): Dataset[RgbStats] =
+    decodeMedia(media, Bmp.parse)(rgb)
+
+  def qoiDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, Qoi)(rgb), RgbColumns: _*)
+
+  def pngDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, Png)(rgb), RgbColumns: _*)
+
+  /** 2x2 box-filter downscale of the PPM rasters, re-encoded to P6 and
+    * decoded again, so the sums prove the decode → filter → encode →
+    * decode chain. */
+  def resizeStats(documents: DataFrame): DataFrame =
+    publish(decodeMedia(asMediaDataset(synth(documents, Ppm)),
+      (p: Array[Byte]) => parsePpm(resizePpmHalf(p)))(rgb), RgbColumns: _*)
+      .withColumnsRenamed(Map("width" -> "out_w", "height" -> "out_h"))
+
+  def gifDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, Gif) { (m, p) =>
+      val (w, h, px) = p
+      grey(m, w, h, 1, Seq(px))
+    },
+      StillColumns: _*)
+
+  def jpegDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, Jpeg) { (m, p) =>
+      val (w, h, ncomp, px) = p
+      require(ncomp == 1, s"expected grayscale payloads, got $ncomp")
+      grey(m, w, h, 1, Seq(px))
+    }, StillColumns: _*)
+
+  /** Every frame composited through the GIF89a delta chain. */
+  def gifAnimDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, GifAnim) { (m, p) =>
+      val (w, h, frames, _) = p
+      grey(m, w, h, frames.length, frames)
+    }, VideoColumns: _*)
+
+  /** Pixel stats of the FINAL composited frame only — yet every delta
+    * before it still decodes (inter-frame dependency), unlike the MJPEG
+    * stride path where sampled-out frames skip the entropy decode. */
+  def gifAnimPosterStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, GifAnim) { (m, p) =>
+      val (w, h, frames, _) = p
+      grey(m, w, h, frames.length, Seq(frames.last))
+    }, VideoColumns: _*)
+
+  /** MJPEG video: the container walk touches every chunk, but only every
+    * `stride`-th frame runs the full Huffman + IDCT decode — the
+    * video-ingest pattern of sampling first. Frame dims must match the
+    * container header. */
+  def mjpegDecodeStats(documents: DataFrame, stride: Int = 1): DataFrame = {
+    require(stride >= 1, s"stride must be >= 1, got $stride")
+    publish(decode(documents, Avi) { (m, p) =>
+      val (w, h, frames) = p
+      val kept = frames.indices.filter(_ % stride == 0).map { k =>
+        val (fw, fh, ncomp, px) = parseJpeg(frames(k))
+        require(fw == w && fh == h, s"frame $k is ${fw}x$fh but container says ${w}x$h")
+        require(ncomp == 1, s"expected grayscale payloads, got $ncomp")
+        px
+      }
+      grey(m, w, h, kept.length, kept)
+    }, VideoColumns: _*)
+  }
+
+  /** Full decode of the motion-compensated stream; lossless, so the sum
+    * equals the generator's closed form. */
+  def mcVideoDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, mcVideo(0)) { (m, p) =>
+      val (w, h, _, frames) = p
+      require(w == m.meta.width && h == m.meta.height,
+        s"container says ${m.meta.width}x${m.meta.height}, stream ${w}x$h")
+      grey(m, w, h, frames.length, frames)
+    }, VideoColumns: _*)
+
+  /** Scene-cut (shot boundary) detection over the motion-compensated
+    * stream: a cut is an adjacent frame pair whose absolute pixel delta
+    * exceeds `tau` per pixel, tested in integers (`sum |Δ| > tau·w·h`) so
+    * the oracle replays it from the closed form (frame k's block i is
+    * text byte (k+i) mod len). The match is thus also a pairwise
+    * losslessness proof of the I/P reconstruction. */
+  def mcVideoSceneCuts(documents: DataFrame, tau: Int = 20): DataFrame =
+    decode(documents, mcVideo(0)) { (m, p) =>
+      val (w, h, _, frames) = p
+      var nCuts = 0L; var maxDiff = 0L; var sumDiff = 0L
+      var k = 1
+      while (k < frames.length) {
+        val a = frames(k - 1); val b = frames(k)
+        var d = 0L; var i = 0
+        while (i < a.length) { d += math.abs((b(i) & 0xff) - (a(i) & 0xff)); i += 1 }
+        if (d > tau.toLong * w * h) nCuts += 1
+        if (d > maxDiff) maxDiff = d
+        sumDiff += d
+        k += 1
+      }
+      (m.docId, frames.length, nCuts, maxDiff, sumDiff)
+    }.toDF("doc_id", "n_frames", "n_cuts", "max_diff", "sum_diff")
+
+  /** GOP-sampled decode: a keyframe every `gop` frames, and only every
+    * `stride`-th frame reconstructed through [[decodeMcVideoSampled]].
+    * With stride == gop the samples are exactly the I-frames and every
+    * P-frame's bytes are skipped through the index — under inter-frame
+    * coding the keyframe interval, not the stride, sets the decode cost. */
+  def mcVideoGopSampleStats(documents: DataFrame, gop: Int = 2,
+                            stride: Int = 2): DataFrame =
+    decodeMedia(asMediaDataset(synth(documents, mcVideo(gop))),
+      decodeMcVideoSampled(_, stride)) { (m, p) =>
+      val (w, h, decoded, sampled) = p
+      require(w == m.meta.width && h == m.meta.height,
+        s"container says ${m.meta.width}x${m.meta.height}, stream ${w}x$h")
+      (m.docId, w, h, sampled.length, w.toLong * h * sampled.length,
+        sampled.map(_._2).sum, decoded.toLong)
+    }.toDF("doc_id", "width", "height", "n_kept", "n_pixels_kept", "sum_px", "n_decoded")
+
+  def wavDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, Wav)(pcm), "docId", "sampleRate", "nSamples", "sumPcm", "maxPcm")
+      .withColumnsRenamed(Map("sum_pcm" -> "sum_samples", "max_pcm" -> "max_sample"))
+
+  def muLawDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, MuLaw)(pcm), PcmColumns: _*)
+
+  def aLawDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, ALaw)(pcm), PcmColumns: _*)
+
+  def imaAdpcmDecodeStats(documents: DataFrame): DataFrame =
+    publish(decode(documents, Adpcm)(pcm), PcmColumns: _*)
+
+  /** Audio DSP over the WAV decode: non-overlapping 8-sample windows, each
+    * with its short-time energy (Σ s²) and zero-crossing count, all in
+    * integers so the oracle replays them; a trailing partial window is
+    * dropped, the standard framing convention. */
+  def audioFeatureStats(documents: DataFrame): DataFrame =
+    decode(documents, Wav) { (m, p) =>
+      val (_, samples) = p
+      val (totalEnergy, totalZcr, maxEnergy) = audioWindowFeatures(samples, 8)
+      (m.docId, samples.length.toLong, (samples.length / 8).toLong,
+        totalEnergy, totalZcr, maxEnergy)
+    }.toDF("doc_id", "n_samples", "n_windows", "total_energy", "total_zcr",
+      "max_energy")
+
+  /** The G.711 and ADPCM synths, as media tables. */
+  def muLawFromDocuments(documents: DataFrame): DataFrame = synth(documents, MuLaw)
+  def imaAdpcmFromDocuments(documents: DataFrame): DataFrame = synth(documents, Adpcm)
+
+  // ───────────────────────────── byte layer ─────────────────────────────
+
+  /** Bounds-checked reads over one payload: little- and big-endian words
+    * at an offset, plus a cursor for the sequential (varint) streams. A
+    * read outside the payload fails the loud `require` contract, naming
+    * the format, instead of throwing an index exception. */
+  private[graft] final class ByteReader(val bytes: Array[Byte], format: String) {
+    var pos = 0
+    private def need(i: Int, n: Int): Unit =
+      require(n >= 0 && i >= 0 && n <= bytes.length - i,
+        s"$format truncated: need $n bytes at offset $i of ${bytes.length}")
+    def u8(i: Int): Int = { need(i, 1); bytes(i) & 0xff }
+    def le16(i: Int): Int = { need(i, 2); (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8) }
+    def le32(i: Int): Int = le16(i) | (le16(i + 2) << 16)
+    def be16(i: Int): Int = { need(i, 2); ((bytes(i) & 0xff) << 8) | (bytes(i + 1) & 0xff) }
+    def be32(i: Int): Int = (be16(i) << 16) | be16(i + 2)
+    def tag(i: Int): String = { need(i, 4); new String(bytes, i, 4, "US-ASCII") }
+    def u8(): Int = { val b = u8(pos); pos += 1; b }
+    def skip(n: Int): Unit = { need(pos, n); pos += n }
+    def varint(): Int = {
+      var shift = 0; var v = 0
+      var b = u8()
+      while ((b & 0x80) != 0) {
+        v |= (b & 0x7f) << shift; shift += 7; b = u8()
+        require(shift <= 28, s"$format varint overlong")
+      }
+      v | (b << shift)
+    }
+    def svarint(): Int = { val z = varint(); (z >>> 1) ^ -(z & 1) }
+  }
+
+  /** The encoders' byte sink, writing the words [[ByteReader]] reads. */
+  private[graft] final class ByteWriter extends java.io.ByteArrayOutputStream {
+    def le16(v: Int): Unit = { write(v & 0xff); write((v >>> 8) & 0xff) }
+    def le32(v: Int): Unit = { le16(v & 0xffff); le16((v >>> 16) & 0xffff) }
+    def be16(v: Int): Unit = { write((v >>> 8) & 0xff); write(v & 0xff) }
+    def be32(v: Int): Unit = { be16(v >>> 16); be16(v & 0xffff) }
+    def tag(s: String): Unit = write(s.getBytes("US-ASCII"))
+    def varint(v0: Int): Unit = {
+      var v = v0
+      require(v >= 0, s"varint needs nonnegative, got $v")
+      while ((v & ~0x7f) != 0) { write((v & 0x7f) | 0x80); v >>>= 7 }
+      write(v)
+    }
+    def svarint(v: Int): Unit = varint((v << 1) ^ (v >> 31)) // sign into bit 0
+  }
+
+  /** The RIFF chunk walk of every RIFF parser: `visit(id, body offset,
+    * size)` per chunk in [from, until), word-aligned; a chunk header or
+    * body that overruns `until` fails loudly. */
+  private def riffChunks(in: ByteReader, from: Int, until: Int)(
+      visit: (String, Int, Int) => Unit): Unit = {
+    var pos = from
+    while (pos < until) {
+      require(until - pos >= 8, s"RIFF chunk header at $pos overruns its parent ($until)")
+      val id = in.tag(pos); val size = in.le32(pos + 4)
+      require(size >= 0 && size <= until - pos - 8,
+        s"RIFF chunk '$id' size $size overruns its parent at $pos")
+      visit(id, pos + 8, size)
+      pos += 8 + size + (size & 1)
+    }
+  }
+
+  /** The RIFF/WAVE envelope of the three WAVE parsers — magic, declared
+    * size, chunk walk; each parser checks its own `fmt `/`fact` chunks. */
+  private def waveChunks(in: ByteReader, minLength: Int)(
+      visit: (String, Int, Int) => Unit): Unit = {
+    val n = in.bytes.length
+    require(n >= minLength && in.tag(0) == "RIFF" && in.tag(8) == "WAVE",
+      "not a RIFF/WAVE payload")
+    require(in.le32(4) == n - 8, s"RIFF size ${in.le32(4)} != payload length - 8 (${n - 8})")
+    riffChunks(in, 12, n)(visit)
+  }
+
+  /** `tb` cycled to exactly `n` bytes — the Scala side of the synths' rpad. */
+  private def cycle(tb: Array[Byte], n: Int): Array[Byte] =
+    Array.tabulate(n)(i => tb(i % tb.length))
+
+  // ─────────────────────────── codec kernels ───────────────────────────
 
   /** Synthesize a deterministic media table from `documents`: the payload is
     * an 8-byte big-endian (width, height) header followed by the UTF-8 text
@@ -59,20 +582,6 @@ object Multimodal {
     * (doc_id, payload binary, meta struct). Pure column ops; at 100 TB this
     * is a narrow map over the scan.
     */
-  /** SPREAD a sub-parallel documents scan before an EXPENSIVE synth/decode
-    * kernel (round-16 optimization; the covarianceMatrix discipline). The
-    * driver's documents table is one single-row-group parquet file = ONE
-    * input split, so a full JPEG/AVI/MC-video encode+decode chain ran on
-    * one core of 32 (mm_mjpeg_decode measured cpu/wall ≈ 1.07; after the
-    * spread 3.15 s → 0.38 s at sf0.1). Skipped whenever the scan already
-    * spans the cluster — at 100 TB the plan is unchanged. Hash on doc_id
-    * (unique): even spread, no round-robin pre-sort, retry-deterministic.
-    * Only the HEAVY codec chains opt in — for the sub-0.3 s byte-level
-    * codecs (PPM/WAV/G.711/QOI/BMP) the extra exchange measured as pure
-    * overhead. */
-  private def spreadScan(documents: DataFrame): DataFrame =
-    Spread.byKey(documents, col("doc_id"))
-
   def mediaFromDocuments(documents: DataFrame): DataFrame = {
     val width = (col("n_chars") % 64 + 16).cast("int")
     val height = (col("doc_id") % 48 + 16).cast("int")
@@ -88,62 +597,6 @@ object Multimodal {
         width.as("width"),
         height.as("height"),
         length(payload).cast("long").as("nBytes")).as("meta"))
-  }
-
-  /** Synthesize REAL binary P6 PPM images from `documents` (round-4 verdict
-    * stretch: one format decoded for real, no sandbox codecs needed — P6 is
-    * an ASCII header + raw RGB24, decodable in pure JVM). The pixel body is
-    * the document's ASCII text cycled to exactly width·height·3 bytes, so a
-    * SQL oracle can recompute channel sums from (text, doc_id, n_chars)
-    * without touching binary. Pure column ops, narrow over the scan.
-    */
-  def ppmFromDocuments(documents: DataFrame): DataFrame = {
-    val base = documents.select(
-      col("doc_id"),
-      // identical empty/null guard must exist in any oracle replica
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      (col("n_chars") % 16 + 8).cast("int").as("w"),
-      (col("doc_id") % 12 + 8).cast("int").as("h"))
-      .withColumn("n_body", (col("w") * col("h") * lit(3)).cast("int"))
-    // rpad(t, n, t) cycles the text to exactly n chars on Spark AND DuckDB
-    // (pad repeats cyclically; truncates to a prefix when n < len) — the
-    // ASCII corpus makes chars == bytes, which decodePpmStats re-checks
-    val body = expr("rpad(t, n_body, t)")
-    val header = concat(lit("P6\n"), col("w").cast("string"), lit(" "),
-      col("h").cast("string"), lit("\n255\n"))
-    val payload = concat(encode(header, "UTF-8"), encode(body, "UTF-8"))
-    base.select(
-      col("doc_id").as("docId"),
-      payload.as("payload"),
-      struct(
-        lit("image/x-portable-pixmap").as("format"),
-        col("w").as("width"),
-        col("h").as("height"),
-        length(payload).cast("long").as("nBytes")).as("meta"))
-  }
-
-  /** REAL P6 PPM decode — not a stub: parses the netpbm header (magic,
-    * whitespace, `#` comments, width/height/maxval) and the raw RGB24 body,
-    * and folds integer-exact per-channel sums. Same `mapPartitions` batch
-    * shape as [[decodeFeatures]] (per-partition codec init amortized; narrow,
-    * shuffle-free). Throws on malformed input — a decode error at 100 TB
-    * should fail the task loudly, not silently zero a feature column.
-    */
-  def decodePpmStats(media: Dataset[MediaFile]): Dataset[PpmStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, body) = parsePpm(m.payload)
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        var i = 0
-        while (i + 2 < body.length) {
-          sr += body(i) & 0xff; sg += body(i + 1) & 0xff; sb += body(i + 2) & 0xff
-          i += 3
-        }
-        PpmStats(m.docId, w, h, w.toLong * h, sr, sg, sb)
-      }
-    }
   }
 
   /** Minimal-but-real netpbm P6 parser: magic, whitespace runs, `#` comment
@@ -186,24 +639,10 @@ object Multimodal {
     (width, height, java.util.Arrays.copyOfRange(payload, pos, pos + n))
   }
 
-  /** Driver-facing query over the REAL decode path: generate P6 payloads
-    * from `documents`, binary-parse them back, report integer-exact
-    * per-channel sums (no float in the oracled projection). */
-  def ppmDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(ppmFromDocuments(documents))
-    decodePpmStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("width"), col("height"),
-        col("nPixels").as("n_pixels"), col("sumR").as("sum_r"),
-        col("sumG").as("sum_g"), col("sumB").as("sum_b"))
-  }
-
   /** REAL image resize — pixels, not metadata: 2x2 box-filter downscale
     * of a P6 PPM raster (each output channel is the floor-average of its
     * four source bytes; odd trailing rows/columns are cropped, the
-    * convention box filters use), then a RE-ENCODE back to P6. The
-    * whole decode → filter → encode chain runs per row inside one
-    * narrow mapPartitions — the batch shape a vectorized image pipeline
-    * needs, no shuffle, partitioning preserved. */
+    * convention box filters use), then a RE-ENCODE back to P6. */
   private[graft] def resizePpmHalf(payload: Array[Byte]): Array[Byte] = {
     val (w, h, body) = parsePpm(payload)
     val ow = w / 2; val oh = h / 2
@@ -233,54 +672,6 @@ object Multimodal {
     System.arraycopy(header, 0, full, 0, header.length)
     System.arraycopy(out, 0, full, header.length, out.length)
     full
-  }
-
-  /** Driver query for the resize: generate PPMs, halve them, RE-DECODE
-    * the re-encoded output (so the emitted stats prove the full
-    * decode → filter → encode → decode chain), and report the resized
-    * channel sums the oracle recomputes pixel-by-pixel in SQL. */
-  def resizeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(ppmFromDocuments(documents))
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val resized = resizePpmHalf(m.payload)
-        val (ow, oh, body) = parsePpm(resized)
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        var i = 0
-        while (i + 2 < body.length) {
-          sr += body(i) & 0xff; sg += body(i + 1) & 0xff; sb += body(i + 2) & 0xff
-          i += 3
-        }
-        PpmStats(m.docId, ow, oh, ow.toLong * oh, sr, sg, sb)
-      }
-    }.toDF()
-      .select(col("docId").as("doc_id"), col("width").as("out_w"),
-        col("height").as("out_h"), col("nPixels").as("n_pixels"),
-        col("sumR").as("sum_r"), col("sumG").as("sum_g"), col("sumB").as("sum_b"))
-  }
-
-  /** AUDIO feature extraction — the DSP pass an audio-data pipeline runs
-    * after decode: non-overlapping 8-sample windows over the REAL
-    * `parseWav` output, per-window short-time ENERGY (Σ s², the exact
-    * integer form of frame power) and ZERO-CROSSING count (strict sign
-    * flips between in-window neighbors — the classic voiced/unvoiced,
-    * silence-vs-content discriminator). Everything stays in integer
-    * arithmetic, so the DuckDB oracle replays it exactly; trailing
-    * samples short of a full window are dropped, the standard framing
-    * convention. One narrow mapPartitions, no shuffle. */
-  def audioFeatureStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(wavFromDocuments(documents))
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (_, samples) = parseWav(m.payload)
-        val (totalEnergy, totalZcr, maxEnergy) = audioWindowFeatures(samples, 8)
-        (m.docId, samples.length.toLong, (samples.length / 8).toLong,
-          totalEnergy, totalZcr, maxEnergy)
-      }
-    }.toDF("doc_id", "n_samples", "n_windows", "total_energy", "total_zcr",
-      "max_energy")
   }
 
   /** The windowed-DSP kernel itself — exposed so the SIGN path of the
@@ -340,21 +731,14 @@ object Multimodal {
   def imageAHashes(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val base = documents.select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"))
-      .as[(Long, String)]
-    base.mapPartitions { rows =>
+    documents.select(col("doc_id"), guardedText).as[(Long, String)].mapPartitions { rows =>
       rows.flatMap { case (docId, t) =>
-        val s = t.getBytes("UTF-8")
-        val n = AHashW * AHashH * 3
-        val body = Array.tabulate[Byte](n)(j => s(j % s.length))
+        val body = cycle(t.getBytes("UTF-8"), AHashW * AHashH * 3)
         val orig = (docId, ahashOfBody(body))
         if (docId % 50 == 0) {
           val tb = body.clone()
           var j = 0
-          while (j < n) { tb(j) = ((tb(j) & 0xff) + 16).toByte; j += 97 }
+          while (j < tb.length) { tb(j) = ((tb(j) & 0xff) + 16).toByte; j += 97 }
           // twin ids live in the NEGATIVE id space (-doc_id - 1): disjoint
           // from real doc_ids at ANY corpus size — an additive offset
           // would collide once the corpus outgrows it
@@ -451,89 +835,14 @@ object Multimodal {
     concat((0 until nBytes).map(k =>
       unhex(lpad(hex(shiftright(c, 8 * k) % 256), 2, "0"))): _*)
 
-  /** Synthesize REAL Windows BMP images (BITMAPFILEHEADER +
-    * BITMAPINFOHEADER + uncompressed 24-bit BGR raster) from `documents` —
-    * the second pure-JVM-decodable format (round-5 verdict stretch). The
-    * generated width is always a multiple of 4, so rows need no padding and
-    * the raster is exactly the document's ASCII text cycled to w·h·3
-    * bytes — which is what lets a SQL oracle recompute the channel sums
-    * from (text, doc_id, n_chars) without touching binary ([[parseBmp]]
-    * still handles padded/top-down rasters generically; the padded case is
-    * spec-covered with a hand-built image). Pure column ops, narrow.
-    */
-  def bmpFromDocuments(documents: DataFrame): DataFrame = {
-    val base = documents.select(
-      col("doc_id"),
-      // identical empty/null guard must exist in any oracle replica
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      ((col("n_chars") % 4 + 2) * 4).cast("int").as("w"), // 8|12|16|20: 4-aligned, zero row padding
-      (col("doc_id") % 12 + 8).cast("int").as("h"))
-      .withColumn("n_body", (col("w") * col("h") * lit(3)).cast("int"))
-    val body = expr("rpad(t, n_body, t)") // cycles identically on both engines
-    val header = concat(
-      unhex(lit("424D")),             // 'BM'
-      le(col("n_body") + 54, 4),      // file size
-      unhex(lit("00000000")),         // reserved
-      unhex(lit("36000000")),         // pixel-data offset = 54
-      unhex(lit("28000000")),         // BITMAPINFOHEADER size = 40
-      le(col("w"), 4),
-      le(col("h"), 4),                // positive height = bottom-up rows
-      unhex(lit("0100")),             // planes = 1
-      unhex(lit("1800")),             // bitCount = 24
-      unhex(lit("00000000")),         // compression = BI_RGB
-      le(col("n_body"), 4),           // imageSize
-      unhex(lit("130B0000130B0000")), // 2835 px/m x,y (72 dpi)
-      unhex(lit("0000000000000000"))) // palette sizes (none at 24-bit)
-    val payload = concat(header, encode(body, "UTF-8"))
-    base.select(
-      col("doc_id").as("docId"),
-      payload.as("payload"),
-      struct(
-        lit("image/bmp").as("format"),
-        col("w").as("width"),
-        col("h").as("height"),
-        length(payload).cast("long").as("nBytes")).as("meta"))
-  }
-
-  /** REAL BMP decode — not a stub: validates both headers (magic, plane
-    * count, 24-bit depth, BI_RGB), honors the declared pixel-data offset,
-    * 4-byte row padding, and bottom-up vs top-down (negative height) row
-    * order, and folds integer-exact per-channel sums over the pixels only
-    * (padding bytes excluded). Same `mapPartitions` batch shape and
-    * loud-failure contract as [[decodePpmStats]]. */
-  def decodeBmpStats(media: Dataset[MediaFile]): Dataset[BmpStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, stride, body) = parseBmp(m.payload)
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        var r = 0
-        while (r < h) {
-          var i = r * stride
-          val end = i + w * 3 // row padding bytes never enter the sums
-          while (i < end) {
-            sb += body(i) & 0xff; sg += body(i + 1) & 0xff; sr += body(i + 2) & 0xff
-            i += 3
-          }
-          r += 1
-        }
-        // channel sums are row-order-invariant, so bottom-up vs top-down
-        // needs no re-assembly here; parseBmp has already validated it
-        BmpStats(m.docId, w, h, w.toLong * h, sr, sg, sb)
-      }
-    }
-  }
-
   /** Minimal-but-real BMP parser: BITMAPFILEHEADER ('BM', pixel-data
     * offset) + BITMAPINFOHEADER (>=40 bytes; width, signed height, planes,
     * bit depth, compression), uncompressed 24-bit only. Returns (width,
     * rowCount, rowStride, raster bytes from the declared offset); the
     * stride includes each row's 4-byte-alignment padding. */
   private[graft] def parseBmp(payload: Array[Byte]): (Int, Int, Int, Array[Byte]) = {
-    def u8(i: Int) = payload(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
+    val in = new ByteReader(payload, "BMP")
+    import in.{le16, le32}
     require(payload.length >= 54 && payload(0) == 'B' && payload(1) == 'M',
       "not a BMP payload")
     val dataOffset = le32(10)
@@ -560,132 +869,49 @@ object Multimodal {
       java.util.Arrays.copyOfRange(payload, dataOffset, payload.length))
   }
 
-  /** Synthesize REAL RIFF/WAVE audio (canonical 44-byte header +
-    * 16-bit-PCM mono little-endian samples) from `documents` — the THIRD
-    * pure-JVM-decodable format, and the first AUDIO one: uncompressed PCM
-    * needs no codec, just the RIFF chunk walk + LE sample decode. The
-    * sample body is the document's ASCII text cycled to 2·n bytes, so each
-    * 16-bit sample is `low + 256·high` of two text bytes (ASCII < 0x80
-    * keeps every sample positive — no sign split in the SQL oracle, which
-    * recomputes sums/max from (text, doc_id, n_chars) without touching
-    * binary). Pure column ops, narrow over the scan.
-    */
-  def wavFromDocuments(documents: DataFrame, sampleRate: Int = 8000): DataFrame = {
-    val base = documents.select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      (col("n_chars") % 32 + 16).cast("int").as("n_samples"))
-      .withColumn("n_body", (col("n_samples") * 2).cast("int"))
-    val body = expr("rpad(t, n_body, t)")
-    val header = concat(
-      encode(lit("RIFF"), "UTF-8"), le(col("n_body") + 36, 4),
-      encode(lit("WAVE"), "UTF-8"),
-      encode(lit("fmt "), "UTF-8"), le(lit(16), 4),
-      le(lit(1), 2),                   // audio format = PCM
-      le(lit(1), 2),                   // channels = mono
-      le(lit(sampleRate), 4),
-      le(lit(sampleRate * 2), 4),      // byte rate = rate · block align
-      le(lit(2), 2),                   // block align = ch · bits/8
-      le(lit(16), 2),                  // bits per sample
-      encode(lit("data"), "UTF-8"), le(col("n_body"), 4))
-    val payload = concat(header, encode(body, "UTF-8"))
-    base.select(
-      col("doc_id").as("docId"),
-      payload.as("payload"),
-      struct(
-        lit("audio/wav").as("format"),
-        lit(0).as("width"),            // not an image: no pixel dims
-        lit(0).as("height"),
-        length(payload).cast("long").as("nBytes")).as("meta"))
-  }
-
-  /** Integer-exact PCM stats from a REAL audio decode. */
-  final case class WavStats(docId: Long, sampleRate: Int, nSamples: Long,
-                            sumSamples: Long, maxSample: Int)
-
-  /** REAL WAV decode — not a stub: validates the RIFF container (magic,
-    * declared riff size), walks sub-chunks to `fmt ` and `data` (tolerating
-    * unknown chunks in between, per the RIFF spec), requires uncompressed
-    * 16-bit mono PCM, and folds integer-exact sample sum/max over the
-    * signed little-endian samples. Same `mapPartitions` batch shape and
-    * loud-failure contract as [[decodePpmStats]]/[[decodeBmpStats]]. */
-  def decodeWavStats(media: Dataset[MediaFile]): Dataset[WavStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (rate, samples) = parseWav(m.payload)
-        var sum = 0L
-        var mx = Int.MinValue
-        var i = 0
-        while (i < samples.length) {
-          val s = samples(i).toInt
-          sum += s; if (s > mx) mx = s
-          i += 1
-        }
-        WavStats(m.docId, rate, samples.length.toLong, sum,
-          if (samples.isEmpty) 0 else mx)
-      }
+  /** [[parseBmp]]'s BGR rows, padding dropped, as the packed RGB raster
+    * the RGB fold reads (channel sums do not depend on row order). */
+  private def bmpRgb(payload: Array[Byte]): (Int, Int, Array[Byte]) = {
+    val (w, h, stride, body) = parseBmp(payload)
+    val rgb = new Array[Byte](w * h * 3)
+    var i = 0
+    while (i < w * h) {
+      val at = (i / w) * stride + (i % w) * 3
+      rgb(3 * i) = body(at + 2); rgb(3 * i + 1) = body(at + 1); rgb(3 * i + 2) = body(at)
+      i += 1
     }
+    (w, h, rgb)
   }
 
-  /** Minimal-but-real RIFF/WAVE parser: 'RIFF' + size + 'WAVE', then a
-    * spec-compliant chunk walk (ids + LE32 sizes, word-aligned) to the
-    * `fmt ` chunk (PCM format 1, mono, 16-bit required) and the `data`
-    * chunk (even byte count). Returns (sampleRate, signed LE16 samples). */
+  /** Minimal-but-real RIFF/WAVE parser: 'RIFF' + size + 'WAVE', then the
+    * spec-compliant chunk walk (unknown chunks skipped) to the `fmt `
+    * chunk (PCM format 1, mono, 16-bit required) and the `data` chunk
+    * (even byte count). Returns (sampleRate, signed LE16 samples). */
   private[graft] def parseWav(payload: Array[Byte]): (Int, Array[Short]) = {
-    def u8(i: Int) = payload(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def tag(i: Int) = new String(payload, i, 4, "US-ASCII")
-    require(payload.length >= 44 && tag(0) == "RIFF" && tag(8) == "WAVE",
-      "not a RIFF/WAVE payload")
-    require(le32(4) == payload.length - 8,
-      s"RIFF size ${le32(4)} != payload length - 8 (${payload.length - 8})")
-    var pos = 12
+    val in = new ByteReader(payload, "WAVE")
+    import in.{le16, le32}
     var rate = -1
     var dataAt = -1
     var dataLen = -1
-    while (pos + 8 <= payload.length && (rate < 0 || dataAt < 0)) {
-      val id = tag(pos)
-      val size = le32(pos + 4)
-      require(size >= 0 && pos + 8 + size <= payload.length,
-        s"RIFF chunk '$id' overruns the payload")
+    waveChunks(in, minLength = 44) { (id, at, size) =>
       if (id == "fmt ") {
         require(size >= 16, s"fmt chunk too small ($size)")
-        require(le16(pos + 8) == 1, "compressed WAV unsupported (PCM only)")
-        require(le16(pos + 10) == 1, "only mono WAV supported")
-        require(le16(pos + 22) == 16, "only 16-bit PCM supported")
-        rate = le32(pos + 12)
+        require(le16(at) == 1, "compressed WAV unsupported (PCM only)")
+        require(le16(at + 2) == 1, "only mono WAV supported")
+        require(le16(at + 14) == 16, "only 16-bit PCM supported")
+        rate = le32(at + 4)
         require(rate > 0, s"malformed sample rate $rate")
       } else if (id == "data") {
         require(size % 2 == 0, s"odd PCM16 data size $size")
-        dataAt = pos + 8
+        dataAt = at
         dataLen = size
       }
-      pos += 8 + size + (size & 1) // RIFF chunks are word-aligned
     }
     require(rate > 0, "missing fmt chunk")
     require(dataAt > 0, "missing data chunk")
-    val out = new Array[Short](dataLen / 2)
-    var i = 0
-    while (i < out.length) {
-      out(i) = (u8(dataAt + 2 * i) | (u8(dataAt + 2 * i + 1) << 8)).toShort
-      i += 1
-    }
-    (rate, out)
+    (rate, Array.tabulate(dataLen / 2)(i => le16(dataAt + 2 * i).toShort))
   }
 
-  /** Driver-facing query over the audio decode path: generate WAV payloads
-    * from `documents`, binary-parse them back, report integer-exact sample
-    * stats. */
-  def wavDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(wavFromDocuments(documents))
-    decodeWavStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("sampleRate").as("sample_rate"),
-        col("nSamples").as("n_samples"), col("sumSamples").as("sum_samples"),
-        col("maxSample").as("max_sample"))
-  }
 
   // ─────────────── G.711 µ-law (companded audio, ITU-T) ───────────────
 
@@ -739,88 +965,30 @@ object Multimodal {
     (if ((a & 0x80) != 0) t else -t).toShort
   }
 
-  /** Synthesize REAL G.711 µ-law WAVE files from `documents` — the first
-    * LOSSY-companded audio format (WAVE format tag 7, 8 bits/sample, with
-    * the `fact` chunk the spec requires for non-PCM streams). The µ-law
-    * CODE STREAM is the document text cycled to `n_samples` bytes, so the
-    * closed-form oracle maps each text byte through the (integer-exact)
-    * expand formula — the codec genuinely runs while the text-side replica
-    * stays algebraic. */
-  def muLawFromDocuments(documents: DataFrame, sampleRate: Int = 8000): DataFrame =
-    compandedWavFromDocuments(documents, sampleRate, formatTag = 7)
-
-  /** [[muLawFromDocuments]] with the A-law format tag (6): the CODE stream
-    * is the same cycled text, decoded through [[aLawDecode]] instead. */
-  def aLawFromDocuments(documents: DataFrame, sampleRate: Int = 8000): DataFrame =
-    compandedWavFromDocuments(documents, sampleRate, formatTag = 6)
-
-  private def compandedWavFromDocuments(documents: DataFrame, sampleRate: Int,
-                                        formatTag: Int): DataFrame = {
-    val base = documents.select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      (col("n_chars") % 32 + 16).cast("int").as("n_samples"))
-    val body = expr("rpad(t, n_samples, t)")
-    val header = concat(
-      encode(lit("RIFF"), "UTF-8"), le(col("n_samples") + 50, 4),
-      encode(lit("WAVE"), "UTF-8"),
-      encode(lit("fmt "), "UTF-8"), le(lit(18), 4),
-      le(lit(formatTag), 2),           // WAVE_FORMAT_MULAW (7) / ALAW (6)
-      le(lit(1), 2),                   // mono
-      le(lit(sampleRate), 4),
-      le(lit(sampleRate), 4),          // byte rate = rate · blockAlign(1)
-      le(lit(1), 2),                   // block align
-      le(lit(8), 2),                   // bits per sample
-      le(lit(0), 2),                   // cbSize (no codec extension)
-      encode(lit("fact"), "UTF-8"), le(lit(4), 4),
-      le(col("n_samples"), 4),         // decoded frame count
-      encode(lit("data"), "UTF-8"), le(col("n_samples"), 4))
-    val payload = concat(header, encode(body, "UTF-8"))
-    base.select(
-      col("doc_id").as("docId"),
-      payload.as("payload"),
-      struct(
-        lit("audio/basic").as("format"),
-        lit(0).as("width"), lit(0).as("height"),
-        length(payload).cast("long").as("nBytes")).as("meta"))
-  }
-
-  /** Parse a µ-law WAVE container: same RIFF walk contract as [[parseWav]]
-    * but requiring format tag 7 / 8-bit / mono, and cross-checking the
-    * `fact` chunk's frame count against the data size (one byte per
-    * sample). Returns (sampleRate, raw µ-law codes). */
+  /** Parse a G.711 WAVE container: the [[parseWav]] chunk walk, but
+    * requiring format tag `formatTag` (7 = mu-law, 6 = A-law) / 8-bit /
+    * mono, and cross-checking the `fact` chunk's frame count against the
+    * data size (one byte per sample). Returns (sampleRate, raw codes). */
   private[graft] def parseWavMuLaw(payload: Array[Byte],
                                    formatTag: Int = 7): (Int, Array[Byte]) = {
-    def u8(i: Int) = payload(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def tag(i: Int) = new String(payload, i, 4, "US-ASCII")
-    require(payload.length >= 12 && tag(0) == "RIFF" && tag(8) == "WAVE",
-      "not a RIFF/WAVE payload")
-    require(le32(4) == payload.length - 8,
-      s"RIFF size ${le32(4)} != payload length - 8 (${payload.length - 8})")
-    var pos = 12
+    val in = new ByteReader(payload, "WAVE")
+    import in.{le16, le32}
     var rate = -1; var dataAt = -1; var dataLen = -1; var factFrames = -1
-    while (pos + 8 <= payload.length) {
-      val id = tag(pos); val size = le32(pos + 4)
-      require(size >= 0 && pos + 8 + size <= payload.length,
-        s"RIFF chunk '$id' overruns the payload")
+    waveChunks(in, minLength = 12) { (id, at, size) =>
       if (id == "fmt ") {
         require(size >= 16, s"fmt chunk too small ($size)")
-        require(le16(pos + 8) == formatTag,
-          s"expected WAVE format tag $formatTag, got ${le16(pos + 8)}")
-        require(le16(pos + 10) == 1, "only mono supported")
-        require(le16(pos + 22) == 8, "mu-law samples are 8-bit")
-        rate = le32(pos + 12)
+        require(le16(at) == formatTag,
+          s"expected WAVE format tag $formatTag, got ${le16(at)}")
+        require(le16(at + 2) == 1, "only mono supported")
+        require(le16(at + 14) == 8, "mu-law samples are 8-bit")
+        rate = le32(at + 4)
         require(rate > 0, s"malformed sample rate $rate")
       } else if (id == "fact") {
         require(size >= 4, "fact chunk too small")
-        factFrames = le32(pos + 8)
+        factFrames = le32(at)
       } else if (id == "data") {
-        dataAt = pos + 8; dataLen = size
+        dataAt = at; dataLen = size
       }
-      pos += 8 + size + (size & 1)
     }
     require(rate > 0, "missing fmt chunk")
     require(dataAt > 0, "missing data chunk")
@@ -828,66 +996,6 @@ object Multimodal {
     require(factFrames == dataLen,
       s"fact declares $factFrames frames, data holds $dataLen mu-law bytes")
     (rate, java.util.Arrays.copyOfRange(payload, dataAt, dataAt + dataLen))
-  }
-
-  /** Integer-exact stats from a REAL companded-audio decode. */
-  final case class MuLawStats(docId: Long, sampleRate: Int, nSamples: Long,
-                              sumPcm: Long, minPcm: Int)
-
-  /** Container walk + full µ-law expansion of every sample. */
-  def decodeMuLawStats(media: Dataset[MediaFile]): Dataset[MuLawStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (rate, codes) = parseWavMuLaw(m.payload)
-        var sum = 0L; var mn = Int.MaxValue
-        var i = 0
-        while (i < codes.length) {
-          val s = muLawDecode(codes(i)).toInt
-          sum += s; if (s < mn) mn = s
-          i += 1
-        }
-        MuLawStats(m.docId, rate, codes.length.toLong, sum,
-          if (codes.isEmpty) 0 else mn)
-      }
-    }
-  }
-
-  /** Container walk + full A-law expansion of every sample. */
-  def decodeALawStats(media: Dataset[MediaFile]): Dataset[MuLawStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (rate, codes) = parseWavMuLaw(m.payload, formatTag = 6)
-        var sum = 0L; var mn = Int.MaxValue
-        var i = 0
-        while (i < codes.length) {
-          val s = aLawDecode(codes(i)).toInt
-          sum += s; if (s < mn) mn = s
-          i += 1
-        }
-        MuLawStats(m.docId, rate, codes.length.toLong, sum,
-          if (codes.isEmpty) 0 else mn)
-      }
-    }
-  }
-
-  /** Driver-facing query over the companded-audio path. */
-  def muLawDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(muLawFromDocuments(documents))
-    decodeMuLawStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("sampleRate").as("sample_rate"),
-        col("nSamples").as("n_samples"), col("sumPcm").as("sum_pcm"),
-        col("minPcm").as("min_pcm"))
-  }
-
-  /** Driver-facing query over the A-law path. */
-  def aLawDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(aLawFromDocuments(documents))
-    decodeALawStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("sampleRate").as("sample_rate"),
-        col("nSamples").as("n_samples"), col("sumPcm").as("sum_pcm"),
-        col("minPcm").as("min_pcm"))
   }
 
   // ───────────── IMA ADPCM (DVI4, WAVE format tag 0x11) ─────────────
@@ -1005,12 +1113,10 @@ object Multimodal {
       samples: Array[Short], sampleRate: Int, blockAlign: Int): Array[Byte] = {
     val data = imaAdpcmEncode(samples, blockAlign)
     val perBlock = (blockAlign - 4) * 2 + 1
-    val out = new java.io.ByteArrayOutputStream()
-    def cc(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    def le32(v: Int): Unit = { le16(v & 0xffff); le16((v >>> 16) & 0xffff) }
-    cc("RIFF"); le32(4 + 28 + 12 + 8 + data.length); cc("WAVE")
-    cc("fmt "); le32(20)
+    val out = new ByteWriter
+    import out.{le16, le32, tag}
+    tag("RIFF"); le32(4 + 28 + 12 + 8 + data.length); tag("WAVE")
+    tag("fmt "); le32(20)
     le16(0x11)                       // WAVE_FORMAT_IMA_ADPCM
     le16(1)                          // mono
     le32(sampleRate)
@@ -1019,54 +1125,42 @@ object Multimodal {
     le16(4)                          // bits per sample
     le16(2)                          // cbSize
     le16(perBlock)                   // samplesPerBlock
-    cc("fact"); le32(4); le32(samples.length)
-    cc("data"); le32(data.length)
+    tag("fact"); le32(4); le32(samples.length)
+    tag("data"); le32(data.length)
     out.write(data)
     out.toByteArray
   }
 
-  /** Parse + fully decode an IMA ADPCM WAVE file: RIFF walk (same
-    * contract as [[parseWavMuLaw]]), format tag 0x11 / 4-bit / mono
-    * validation, samplesPerBlock ≡ (blockAlign−4)·2+1 cross-check,
-    * per-block state-machine decode, fact-count truncation of the final
-    * block's padding. Returns (sampleRate, decoded PCM16). */
+  /** Parse + fully decode an IMA ADPCM WAVE file: the [[parseWav]] chunk
+    * walk, format tag 0x11 / 4-bit / mono validation, samplesPerBlock ≡
+    * (blockAlign−4)·2+1 cross-check, per-block state-machine decode,
+    * fact-count truncation of the final block's padding. Returns
+    * (sampleRate, decoded PCM16). */
   private[graft] def parseWavImaAdpcm(payload: Array[Byte]): (Int, Array[Short]) = {
-    def u8(i: Int) = payload(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def s16(i: Int) = le16(i).toShort.toInt
-    def le32(i: Int) = le16(i) | (le16(i + 2) << 16)
-    def tag(i: Int) = new String(payload, i, 4, "US-ASCII")
-    require(payload.length >= 12 && tag(0) == "RIFF" && tag(8) == "WAVE",
-      "not a RIFF/WAVE payload")
-    require(le32(4) == payload.length - 8,
-      s"RIFF size ${le32(4)} != payload length - 8 (${payload.length - 8})")
-    var pos = 12
+    val in = new ByteReader(payload, "WAVE")
+    import in.{u8, le16, le32}
     var rate = -1; var blockAlign = -1; var perBlock = -1
     var dataAt = -1; var dataLen = -1; var factFrames = -1
-    while (pos + 8 <= payload.length) {
-      val id = tag(pos); val size = le32(pos + 4)
-      require(size >= 0 && pos + 8 + size <= payload.length,
-        s"RIFF chunk '$id' overruns the payload")
+    waveChunks(in, minLength = 12) { (id, at, size) =>
       if (id == "fmt ") {
         require(size >= 20, s"ADPCM fmt chunk too small ($size): needs cbSize+samplesPerBlock")
-        require(le16(pos + 8) == 0x11,
-          s"expected WAVE format tag 17 (IMA ADPCM), got ${le16(pos + 8)}")
-        require(le16(pos + 10) == 1, "only mono supported")
-        require(le16(pos + 22) == 4, "IMA ADPCM samples are 4-bit")
-        rate = le32(pos + 12)
+        require(le16(at) == 0x11,
+          s"expected WAVE format tag 17 (IMA ADPCM), got ${le16(at)}")
+        require(le16(at + 2) == 1, "only mono supported")
+        require(le16(at + 14) == 4, "IMA ADPCM samples are 4-bit")
+        rate = le32(at + 4)
         require(rate > 0, s"malformed sample rate $rate")
-        blockAlign = le16(pos + 20)
-        require(le16(pos + 24) >= 2, "fmt cbSize must carry samplesPerBlock")
-        perBlock = le16(pos + 26)
+        blockAlign = le16(at + 12)
+        require(le16(at + 16) >= 2, "fmt cbSize must carry samplesPerBlock")
+        perBlock = le16(at + 18)
         require(blockAlign >= 5 && perBlock == (blockAlign - 4) * 2 + 1,
           s"samplesPerBlock $perBlock inconsistent with blockAlign $blockAlign")
       } else if (id == "fact") {
         require(size >= 4, "fact chunk too small")
-        factFrames = le32(pos + 8)
+        factFrames = le32(at)
       } else if (id == "data") {
-        dataAt = pos + 8; dataLen = size
+        dataAt = at; dataLen = size
       }
-      pos += 8 + size + (size & 1)
     }
     require(rate > 0, "missing fmt chunk")
     require(dataAt > 0, "missing data chunk")
@@ -1081,7 +1175,7 @@ object Multimodal {
     var block = 0; var emitted = 0
     while (block < nBlocks) {
       val o = dataAt + block * blockAlign
-      val pred0 = s16(o)
+      val pred0 = le16(o).toShort.toInt
       val idx0 = u8(o + 2)
       require(idx0 <= 88, s"block $block step index $idx0 out of range")
       require(u8(o + 3) == 0, s"block $block reserved header byte nonzero")
@@ -1092,134 +1186,6 @@ object Multimodal {
       block += 1
     }
     (rate, out)
-  }
-
-  /** Synthesize REAL IMA ADPCM WAVE files from `documents`: one block
-    * whose CODE stream is the text cycled to `nb` bytes (2 nibbles per
-    * byte, low first) with header state (0, 0) — so the closed-form
-    * oracle replays the decoder's integer state machine as a DuckDB
-    * `list_reduce` fold while the real container walk + stateful decode
-    * runs on the Spark side. The real ENCODER half is spec-tested
-    * against this decoder and an independently computed vector. */
-  def imaAdpcmFromDocuments(documents: DataFrame, sampleRate: Int = 8000): DataFrame = {
-    val base = documents.select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      (col("n_chars") % 24 + 12).cast("int").as("nb"))
-    val body = expr("rpad(t, nb, t)")
-    val nSamples = col("nb") * 2 + 1
-    val header = concat(
-      encode(lit("RIFF"), "UTF-8"), le(col("nb") + 56, 4),
-      encode(lit("WAVE"), "UTF-8"),
-      encode(lit("fmt "), "UTF-8"), le(lit(20), 4),
-      le(lit(0x11), 2),                // WAVE_FORMAT_IMA_ADPCM
-      le(lit(1), 2),                   // mono
-      le(lit(sampleRate), 4),
-      le(lit(sampleRate), 4),          // nominal byte rate
-      le(col("nb") + 4, 2),            // block align (header + code bytes)
-      le(lit(4), 2),                   // bits per sample
-      le(lit(2), 2),                   // cbSize
-      le(nSamples, 2),                 // samplesPerBlock
-      encode(lit("fact"), "UTF-8"), le(lit(4), 4),
-      le(nSamples, 4),                 // decoded frame count
-      encode(lit("data"), "UTF-8"), le(col("nb") + 4, 4),
-      le(lit(0), 2), le(lit(0), 2))    // block header: pred 0, idx 0, rsvd
-    // the RIFF/data sizes above count CHARACTERS (rpad length); the body
-    // is emitted as UTF-8 BYTES. Equal only for ASCII text — enforced
-    // loudly here so a non-ASCII corpus fails at generation, not as a
-    // RIFF-size mismatch deep in the decoder
-    val bodyBytes = encode(body, "UTF-8")
-    val checkedBody = when(octet_length(bodyBytes) === col("nb"), bodyBytes)
-      .otherwise(raise_error(concat(
-        lit("imaAdpcmFromDocuments: non-ASCII text breaks the char==byte "),
-        lit("size assumption for doc_id "), col("doc_id").cast("string"))))
-    val payload = concat(header, checkedBody)
-    base.select(
-      col("doc_id").as("docId"),
-      payload.as("payload"),
-      struct(
-        lit("audio/adpcm").as("format"),
-        lit(0).as("width"), lit(0).as("height"),
-        length(payload).cast("long").as("nBytes")).as("meta"))
-  }
-
-  /** Container walk + full stateful ADPCM decode of every block. */
-  def decodeImaAdpcmStats(media: Dataset[MediaFile]): Dataset[MuLawStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (rate, pcm) = parseWavImaAdpcm(m.payload)
-        var sum = 0L; var mn = Int.MaxValue
-        var i = 0
-        while (i < pcm.length) {
-          val s = pcm(i).toInt
-          sum += s; if (s < mn) mn = s
-          i += 1
-        }
-        MuLawStats(m.docId, rate, pcm.length.toLong, sum,
-          if (pcm.isEmpty) 0 else mn)
-      }
-    }
-  }
-
-  /** Driver-facing query over the predictive-audio path. */
-  def imaAdpcmDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(imaAdpcmFromDocuments(documents))
-    decodeImaAdpcmStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("sampleRate").as("sample_rate"),
-        col("nSamples").as("n_samples"), col("sumPcm").as("sum_pcm"),
-        col("minPcm").as("min_pcm"))
-  }
-
-  /** Driver-facing query over the second REAL decode path: generate BMP
-    * payloads from `documents`, binary-parse them back, report
-    * integer-exact per-channel sums. */
-  def bmpDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(bmpFromDocuments(documents))
-    decodeBmpStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("width"), col("height"),
-        col("nPixels").as("n_pixels"), col("sumR").as("sum_r"),
-        col("sumG").as("sum_g"), col("sumB").as("sum_b"))
-  }
-
-  /** Integer-exact pixel stats from a REAL COMPRESSED-format decode. */
-  final case class QoiStats(
-      docId: Long, width: Int, height: Int, nPixels: Long,
-      sumR: Long, sumG: Long, sumB: Long, compressedBytes: Long)
-
-  /** Synthesize REAL QOI images (qoiformat.org — the public-domain
-    * lossless codec: run-length, 64-slot color-index, and delta chunks)
-    * from `documents`: the RGB pixel stream is the text cycled to
-    * w·h·3 bytes — the same text-side-oracle trick as PPM/BMP/WAV — then
-    * ACTUALLY compressed through [[encodeQoi]]. This is the first
-    * COMPRESSED format in the media path: the decoder must reconstruct
-    * pixels through codec state (previous-pixel, index table, runs), not
-    * just walk a container. Generation is a `mapPartitions` encode (a
-    * compressor is imperative by nature); narrow, shuffle-free.
-    */
-  def qoiFromDocuments(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val base = documents.select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      (col("n_chars") % 12 + 4).cast("int").as("w"),
-      (col("doc_id") % 8 + 4).cast("int").as("h"))
-      .as[(Long, String, Int, Int)]
-    base.mapPartitions { rows =>
-      rows.map { case (docId, t, w, h) =>
-        val n = w * h * 3
-        val tb = t.getBytes("UTF-8")
-        val rgb = new Array[Byte](n)
-        var i = 0
-        while (i < n) { rgb(i) = tb(i % tb.length); i += 1 }
-        val payload = encodeQoi(w, h, rgb)
-        MediaFile(docId, payload,
-          MediaMeta("image/qoi", w, h, payload.length.toLong))
-      }
-    }.toDF("docId", "payload", "meta")
   }
 
   /** QOI color hash — the spec's (r·3 + g·5 + b·7 + a·11) % 64 with the
@@ -1234,13 +1200,9 @@ object Multimodal {
     * hand-built fixtures in MultimodalSpec. */
   private[graft] def encodeQoi(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
     require(rgb.length == w * h * 3, s"pixel body ${rgb.length} != $w*$h*3")
-    val out = new java.io.ByteArrayOutputStream()
-    out.write('q'); out.write('o'); out.write('i'); out.write('f')
-    def be32(v: Int): Unit = {
-      out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-      out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-    }
-    be32(w); be32(h)
+    val out = new ByteWriter
+    out.tag("qoif")
+    out.be32(w); out.be32(h)
     out.write(3) // channels
     out.write(0) // colorspace: sRGB with linear alpha
     val index = new Array[Int](64) // packed 0xRRGGBB + (1 << 24) occupancy
@@ -1298,11 +1260,11 @@ object Multimodal {
     * and loud failure on truncation, overrun, or trailing garbage.
     * Returns (w, h, rgb24). */
   private[graft] def parseQoi(payload: Array[Byte]): (Int, Int, Array[Byte]) = {
-    def u8(i: Int) = payload(i) & 0xff
+    val in = new ByteReader(payload, "QOI")
+    import in.{u8, be32}
     require(payload.length >= 22 &&
       payload(0) == 'q' && payload(1) == 'o' &&
       payload(2) == 'i' && payload(3) == 'f', "not a QOI payload")
-    def be32(i: Int) = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
     val w = be32(4); val h = be32(8)
     require(w > 0 && h > 0, s"malformed QOI dims ${w}x$h")
     val channels = u8(12)
@@ -1356,74 +1318,6 @@ object Multimodal {
     (w, h, rgb)
   }
 
-  /** Channel sums over a REAL compressed decode — the [[decodePpmStats]]
-    * contract through an actual codec state machine. */
-  def decodeQoiStats(media: Dataset[MediaFile]): Dataset[QoiStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, body) = parseQoi(m.payload)
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        var i = 0
-        while (i + 2 < body.length) {
-          sr += body(i) & 0xff; sg += body(i + 1) & 0xff; sb += body(i + 2) & 0xff
-          i += 3
-        }
-        QoiStats(m.docId, w, h, (w.toLong * h), sr, sg, sb, m.payload.length.toLong)
-      }
-    }
-  }
-
-  /** Driver-facing query over the compressed decode path: generate REAL
-    * QOI payloads from `documents`, decode them back through the codec,
-    * report integer-exact channel sums. `compressedBytes` stays out of
-    * the driver projection (a codec's output size is engine-defined —
-    * the spec covers it); the pixel stats oracle from text alone. */
-  def qoiDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(qoiFromDocuments(documents))
-    decodeQoiStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("width"), col("height"),
-        col("nPixels").as("n_pixels"), col("sumR").as("sum_r"),
-        col("sumG").as("sum_g"), col("sumB").as("sum_b"))
-  }
-
-  /** Integer-exact pixel stats from a REAL PNG decode. */
-  final case class PngStats(
-      docId: Long, width: Int, height: Int, nPixels: Long,
-      sumR: Long, sumG: Long, sumB: Long, compressedBytes: Long)
-
-  /** Synthesize REAL PNG images (W3C PNG spec — zlib/DEFLATE-compressed,
-    * filtered scanlines, CRC-guarded chunks) from `documents`: the RGB
-    * pixel stream is the text cycled to w·h·3 bytes — the same
-    * text-side-oracle trick as PPM/BMP/WAV/QOI — then filtered and
-    * deflated through [[encodePng]]. Second compressed format in the
-    * media path, and the first with an entropy-coded backend (DEFLATE via
-    * `java.util.zip.Deflater` — pure JVM, no native codec libs).
-    */
-  def pngFromDocuments(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val base = spreadScan(documents).select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      (col("n_chars") % 10 + 5).cast("int").as("w"),
-      (col("doc_id") % 7 + 5).cast("int").as("h"))
-      .as[(Long, String, Int, Int)]
-    base.mapPartitions { rows =>
-      rows.map { case (docId, t, w, h) =>
-        val n = w * h * 3
-        val tb = t.getBytes("UTF-8")
-        val rgb = new Array[Byte](n)
-        var i = 0
-        while (i < n) { rgb(i) = tb(i % tb.length); i += 1 }
-        val payload = encodePng(w, h, rgb)
-        MediaFile(docId, payload,
-          MediaMeta("image/png", w, h, payload.length.toLong))
-      }
-    }.toDF("docId", "payload", "meta")
-  }
-
   /** PNG Paeth predictor (spec §9.4) — exact integer form. */
   private def paeth(a: Int, b: Int, c: Int): Int = {
     val p = a + b - c
@@ -1472,30 +1366,22 @@ object Multimodal {
     deflater.end()
     val z = zbuf.toByteArray
 
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new ByteWriter
     out.write(Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a))
     def writeChunk(typ: String, data: Array[Byte]): Unit = {
-      def be32(v: Int): Unit = {
-        out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-        out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-      }
-      be32(data.length)
+      out.be32(data.length)
       val tb = typ.getBytes("US-ASCII")
       out.write(tb); out.write(data)
       val crc = new java.util.zip.CRC32()
       crc.update(tb); crc.update(data)
-      be32(crc.getValue.toInt)
+      out.be32(crc.getValue.toInt)
     }
-    val ihdr = new Array[Byte](13)
-    def put32(off: Int, v: Int): Unit = {
-      ihdr(off) = ((v >>> 24) & 0xff).toByte; ihdr(off + 1) = ((v >>> 16) & 0xff).toByte
-      ihdr(off + 2) = ((v >>> 8) & 0xff).toByte; ihdr(off + 3) = (v & 0xff).toByte
-    }
-    put32(0, w); put32(4, h)
-    ihdr(8) = 8 // bit depth
-    ihdr(9) = 2 // color type: truecolor RGB
-    // ihdr(10..12) = 0: compression, filter method, no interlace
-    writeChunk("IHDR", ihdr)
+    val ihdr = new ByteWriter
+    ihdr.be32(w); ihdr.be32(h)
+    ihdr.write(8) // bit depth
+    ihdr.write(2) // color type: truecolor RGB
+    ihdr.write(Array[Byte](0, 0, 0)) // compression, filter method, no interlace
+    writeChunk("IHDR", ihdr.toByteArray)
     // multi-IDAT: decoders must treat all IDAT data as ONE zlib stream
     val idatChunk = 512
     var off = 0
@@ -1517,8 +1403,8 @@ object Multimodal {
     * CRC, wrong inflated size, unknown filter, or trailing data.
     * Returns (w, h, rgb24). */
   private[graft] def parsePng(payload: Array[Byte]): (Int, Int, Array[Byte]) = {
-    def u8(i: Int) = payload(i) & 0xff
-    def be32(i: Int) = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
+    val in = new ByteReader(payload, "PNG")
+    import in.{u8, be32}
     require(payload.length >= 8 + 25 + 12 &&
       u8(0) == 0x89 && payload(1) == 'P' && payload(2) == 'N' && payload(3) == 'G' &&
       u8(4) == 0x0d && u8(5) == 0x0a && u8(6) == 0x1a && u8(7) == 0x0a,
@@ -1604,75 +1490,6 @@ object Multimodal {
     (w, h, rgb)
   }
 
-  /** Channel sums over a REAL PNG decode — the [[decodeQoiStats]] contract
-    * through DEFLATE + filter reconstruction. */
-  def decodePngStats(media: Dataset[MediaFile]): Dataset[PngStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, body) = parsePng(m.payload)
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        var i = 0
-        while (i + 2 < body.length) {
-          sr += body(i) & 0xff; sg += body(i + 1) & 0xff; sb += body(i + 2) & 0xff
-          i += 3
-        }
-        PngStats(m.docId, w, h, (w.toLong * h), sr, sg, sb, m.payload.length.toLong)
-      }
-    }
-  }
-
-  /** Driver-facing query over the PNG path: generate REAL PNG payloads
-    * from `documents`, decode them back through DEFLATE + the filter
-    * machinery, report integer-exact channel sums. `compressedBytes`
-    * stays out of the driver projection (DEFLATE output size is
-    * library-defined; the spec covers the round-trip). */
-  def pngDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(pngFromDocuments(documents))
-    decodePngStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("width"), col("height"),
-        col("nPixels").as("n_pixels"), col("sumR").as("sum_r"),
-        col("sumG").as("sum_g"), col("sumB").as("sum_b"))
-  }
-
-  /** Integer-exact pixel stats from a REAL GIF/LZW decode. */
-  final case class GifStats(
-      docId: Long, width: Int, height: Int, nPixels: Long,
-      sumPx: Long, compressedBytes: Long)
-
-  /** Synthesize REAL GIF89a images from `documents`: a 256-entry
-    * GRAYSCALE global color table (entry i = (i,i,i)) makes the palette
-    * index stream literally the text bytes cycled to w·h — so the
-    * text-side oracle survives the palette indirection — and the index
-    * stream is REALLY compressed through [[encodeGif]]'s variable-width
-    * LZW (clear/EOI codes, 9→12-bit growth, table reset at 4096,
-    * 255-byte sub-block framing). Third compressed format in the media
-    * path, and the first dictionary coder.
-    */
-  def gifFromDocuments(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val base = documents.select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      (col("n_chars") % 14 + 6).cast("int").as("w"),
-      (col("doc_id") % 9 + 6).cast("int").as("h"))
-      .as[(Long, String, Int, Int)]
-    base.mapPartitions { rows =>
-      rows.map { case (docId, t, w, h) =>
-        val n = w * h
-        val tb = t.getBytes("UTF-8")
-        val idx = new Array[Byte](n)
-        var i = 0
-        while (i < n) { idx(i) = tb(i % tb.length); i += 1 }
-        val payload = encodeGif(w, h, idx)
-        MediaFile(docId, payload,
-          MediaMeta("image/gif", w, h, payload.length.toLong))
-      }
-    }.toDF("docId", "payload", "meta")
-  }
-
   /** REAL GIF89a encoder (8-bit palette, no interlace): grayscale global
     * color table, then the classic ppmtogif-convention LZW — initial code
     * size 9 (min-code-size 8), clear=256/EOI=257, dictionary keyed
@@ -1681,9 +1498,9 @@ object Multimodal {
     * (4096) table — packed LSB-first into 255-byte sub-blocks. */
   private[graft] def encodeGif(w: Int, h: Int, indices: Array[Byte]): Array[Byte] = {
     require(indices.length == w * h, s"index body ${indices.length} != $w*$h")
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GIF89a".getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
+    val out = new ByteWriter
+    import out.le16
+    out.tag("GIF89a")
     le16(w); le16(h)
     out.write(0xf7) // GCT present, 8-bit color resolution, 256 entries
     out.write(0)    // background color index
@@ -1760,14 +1577,10 @@ object Multimodal {
     * Returns (w, h, gray bytes — the palette's R channel per pixel).
     */
   private[graft] def parseGif(payload: Array[Byte]): (Int, Int, Array[Byte]) = {
-    // bounds-checked accessor: a payload truncated inside an extension or
-    // descriptor must fail with the same loud require contract as every
-    // other malformed-input path, not an ArrayIndexOutOfBoundsException
-    def u8(i: Int) = {
-      require(i >= 0 && i < payload.length, s"GIF truncated at offset $i")
-      payload(i) & 0xff
-    }
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
+    // bounds-checked reads: a payload truncated inside an extension or
+    // descriptor fails the loud require contract, not with an index error
+    val in = new ByteReader(payload, "GIF")
+    import in.{u8, le16}
     require(payload.length >= 14, "GIF too short")
     val magic = new String(payload, 0, 6, "US-ASCII")
     require(magic == "GIF89a" || magic == "GIF87a", s"not a GIF payload: $magic")
@@ -1816,10 +1629,8 @@ object Multimodal {
     * byte after the block terminator. */
   private[graft] def lzwDecodeGifBody(
       payload: Array[Byte], startPos: Int, nPx: Int): (Array[Byte], Int) = {
-    def u8(i: Int) = {
-      require(i >= 0 && i < payload.length, s"GIF truncated at offset $i")
-      payload(i) & 0xff
-    }
+    val in = new ByteReader(payload, "GIF")
+    import in.u8
     var pos = startPos
     // reassemble sub-blocks
     val z = new java.io.ByteArrayOutputStream()
@@ -1899,38 +1710,7 @@ object Multimodal {
     (gray, pos)
   }
 
-  /** Pixel-sum stats over a REAL GIF/LZW decode. */
-  def decodeGifStats(media: Dataset[MediaFile]): Dataset[GifStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, gray) = parseGif(m.payload)
-        var s = 0L
-        var i = 0
-        while (i < gray.length) { s += gray(i) & 0xff; i += 1 }
-        GifStats(m.docId, w, h, (w.toLong * h), s, m.payload.length.toLong)
-      }
-    }
-  }
-
-  /** Driver-facing query over the GIF path: generate REAL LZW-compressed
-    * payloads from `documents`, decode through the dictionary coder +
-    * palette, report the integer-exact pixel sum. `compressedBytes`
-    * stays out of the driver projection (specs cover it). */
-  def gifDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(gifFromDocuments(documents))
-    decodeGifStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("width"), col("height"),
-        col("nPixels").as("n_pixels"), col("sumPx").as("sum_px"))
-  }
-
   // ─────────── animated GIF (GIF89a inter-frame delta coding) ───────────
-
-  /** Integer-exact stats from a REAL animated-GIF decode: every frame is
-    * composited from the inter-frame deltas that precede it. */
-  final case class GifAnimStats(
-      docId: Long, width: Int, height: Int, nFrames: Int,
-      nPixels: Long, sumPx: Long, deltaFrames: Int, compressedBytes: Long)
 
   /** REAL GIF89a ANIMATION encoder — the first INTER-frame coder in the
     * media path (every earlier video/image codec is intra-only). Each
@@ -1953,16 +1733,16 @@ object Multimodal {
     val used = new Array[Boolean](256)
     frames.foreach(f => f.foreach(b => used(b & 0xff) = true))
     val transIdx = used.indexOf(false) // -1 when every index is in use
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GIF89a".getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
+    val out = new ByteWriter
+    import out.le16
+    out.tag("GIF89a")
     le16(w); le16(h)
     out.write(0xf7); out.write(0); out.write(0)
     var ci = 0
     while (ci < 256) { out.write(ci); out.write(ci); out.write(ci); ci += 1 }
     // NETSCAPE2.0 looping application extension (loop count 0 = forever)
     out.write(0x21); out.write(0xff); out.write(11)
-    out.write("NETSCAPE2.0".getBytes("US-ASCII"))
+    out.tag("NETSCAPE2.0")
     out.write(3); out.write(1); le16(0); out.write(0)
     var k = 0
     while (k < frames.length) {
@@ -2031,11 +1811,8 @@ object Multimodal {
     * palette-mapped gray frames). */
   private[graft] def parseGifAnim(
       payload: Array[Byte]): (Int, Int, Array[Array[Byte]], Int) = {
-    def u8(i: Int) = {
-      require(i >= 0 && i < payload.length, s"GIF truncated at offset $i")
-      payload(i) & 0xff
-    }
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
+    val in = new ByteReader(payload, "GIF")
+    import in.{u8, le16}
     require(payload.length >= 14, "GIF too short")
     val magic = new String(payload, 0, 6, "US-ASCII")
     require(magic == "GIF89a", s"not an animated GIF payload: $magic")
@@ -2115,106 +1892,30 @@ object Multimodal {
     (w, h, framesOut.toArray, deltaFrames)
   }
 
-  /** Synthesize REAL animated GIFs from `documents` with the "ticker"
-    * evolution: frame 0 shows the text laid out row by row (row r reads
-    * the text cycled from offset w·r); every later frame j repaints ONE
-    * row — row (j mod h) gets the text cycled from offset w·j — so
-    * adjacent frames differ in at most one row and the encoder's delta
-    * coding has real sparse changes to exploit. The composited frame k
-    * is closed-form: row r reads offset w·(r + h·max(0, ⌊(k−r)/h⌋)),
-    * which keeps the DuckDB text-side oracle exact through palette,
-    * LZW, transparency, and compositing. */
-  def gifAnimFromDocuments(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val base = spreadScan(documents).select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      (col("n_chars") % 14 + 6).cast("int").as("w"),
-      (col("doc_id") % 9 + 6).cast("int").as("h"),
-      (col("doc_id") % 4 + 2).cast("int").as("nf"))
-      .as[(Long, String, Int, Int, Int)]
-    base.mapPartitions { rows =>
-      rows.map { case (docId, t, w, h, nf) =>
-        val tb = t.getBytes("UTF-8")
-        val frames = Array.tabulate(nf) { k =>
-          val f = new Array[Byte](w * h)
-          var r = 0
-          while (r < h) {
-            // Scala's / truncates toward zero, but k−r > −h here, so the
-            // negative case lands on 0 exactly like the oracle's floor+clamp
-            val j = r + h * math.max(0, (k - r) / h)
-            val off = w * j
-            var c = 0
-            while (c < w) { f(r * w + c) = tb((off + c) % tb.length); c += 1 }
-            r += 1
-          }
-          f
-        }
-        val payload = encodeGifAnim(w, h, frames)
-        MediaFile(docId, payload,
-          MediaMeta("image/gif", w, h, payload.length.toLong))
+  /** The "ticker" frames of the animated-GIF synth: frame 0 lays the text
+    * out row by row (row r reads the text cycled from offset w·r); every
+    * later frame j repaints ONE row — row (j mod h) gets the text from
+    * offset w·j — so adjacent frames differ in at most one row and the
+    * delta coder has real sparse changes to exploit. Composited frame k
+    * is closed-form: row r reads offset w·(r + h·max(0, ⌊(k−r)/h⌋)), which
+    * keeps the text-side oracle exact through palette, LZW, transparency
+    * and compositing. */
+  private def tickerFrames(tb: Array[Byte], w: Int, h: Int, nf: Int): Array[Array[Byte]] =
+    Array.tabulate(nf) { k =>
+      val f = new Array[Byte](w * h)
+      var r = 0
+      while (r < h) {
+        // Scala's / truncates toward zero, but k−r > −h here, so the
+        // negative case lands on 0 exactly like the oracle's floor+clamp
+        val off = w * (r + h * math.max(0, (k - r) / h))
+        var c = 0
+        while (c < w) { f(r * w + c) = tb((off + c) % tb.length); c += 1 }
+        r += 1
       }
-    }.toDF("docId", "payload", "meta")
-  }
-
-  /** Full-decode stats over a REAL animated GIF: every frame composited
-    * through the delta chain. `posterOnly` reports pixel stats for the
-    * LAST composited frame only — but the delta chain still forces a
-    * full decode of every predecessor (the inter-frame contrast with
-    * MJPEG's strided sampling, where skipping IS free). */
-  def decodeGifAnimStats(media: Dataset[MediaFile],
-                         posterOnly: Boolean = false): Dataset[GifAnimStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, frames, deltaFrames) = parseGifAnim(m.payload)
-        var s = 0L
-        var counted = 0
-        var k = if (posterOnly) frames.length - 1 else 0
-        while (k < frames.length) {
-          val f = frames(k)
-          var i = 0
-          while (i < f.length) { s += f(i) & 0xff; i += 1 }
-          counted += 1
-          k += 1
-        }
-        GifAnimStats(m.docId, w, h, frames.length,
-          w.toLong * h * counted, s, deltaFrames, m.payload.length.toLong)
-      }
+      f
     }
-  }
-
-  /** Driver-facing query over the animated-GIF path: real delta-coded
-    * GIF89a payloads, every frame composited, integer-exact pixel sums
-    * across all frames. */
-  def gifAnimDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(gifAnimFromDocuments(documents))
-    decodeGifAnimStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("width"), col("height"),
-        col("nFrames").as("n_frames"), col("nPixels").as("n_pixels"),
-        col("sumPx").as("sum_px"))
-  }
-
-  /** Poster-frame variant: pixel stats over the FINAL composited frame
-    * only. Every preceding delta still decodes (inter-frame dependency),
-    * unlike the MJPEG stride path where sampled-out frames skip entropy
-    * decode entirely. */
-  def gifAnimPosterStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(gifAnimFromDocuments(documents))
-    decodeGifAnimStats(media, posterOnly = true).toDF()
-      .select(col("docId").as("doc_id"), col("width"), col("height"),
-        col("nFrames").as("n_frames"), col("nPixels").as("n_pixels"),
-        col("sumPx").as("sum_px"))
-  }
 
   // ─────────────── JPEG (baseline sequential DCT, JFIF) ───────────────
-
-  /** Integer-exact pixel stats from a REAL baseline-JPEG decode. */
-  final case class JpegStats(
-      docId: Long, width: Int, height: Int, nPixels: Long,
-      sumPx: Long, compressedBytes: Long)
 
   /** Zig-zag scan order: coded position k → raster index in the 8×8 block
     * (ITU-T T.81 figure A.6). */
@@ -2310,12 +2011,12 @@ object Multimodal {
       s"pixel body ${pixels.length} != $w*$h*$components")
     require(qtab.length == 64 && qtab.forall(q => q >= 1 && q <= 255),
       "quant table must be 64 entries in [1,255]")
-    val out = new java.io.ByteArrayOutputStream()
-    def be16(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
+    val out = new ByteWriter
+    import out.be16
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
     marker(0xd8) // SOI
     marker(0xe0) // APP0/JFIF
-    be16(16); out.write("JFIF".getBytes("US-ASCII")); out.write(0)
+    be16(16); out.tag("JFIF"); out.write(0)
     out.write(1); out.write(1) // version 1.1
     out.write(0); be16(1); be16(1) // no units, 1:1 aspect
     out.write(0); out.write(0)     // no thumbnail
@@ -2491,11 +2192,8 @@ object Multimodal {
     * Returns (w, h, components, pixel bytes interleaved).
     */
   private[graft] def parseJpeg(payload: Array[Byte]): (Int, Int, Int, Array[Byte]) = {
-    def u8(i: Int) = {
-      require(i >= 0 && i < payload.length, s"JPEG truncated at offset $i")
-      payload(i) & 0xff
-    }
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
+    val in = new ByteReader(payload, "JPEG")
+    import in.{u8, be16}
     require(payload.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8,
       "not a JPEG payload (missing SOI)")
     var pos = 2
@@ -2757,34 +2455,6 @@ object Multimodal {
     (w, h, ncomp, outPx)
   }
 
-  /** Synthesize REAL baseline JPEGs from `documents`: dims are multiples
-    * of 8 and every 8×8 block is CONSTANT (value = text byte cycled by
-    * block index), quant tables all ones — the one image class a lossy
-    * DCT codec reproduces bit-exactly (each block is DC-only with an
-    * integer coefficient 8·(v−128)), so the text-side closed form remains
-    * a valid driver oracle while the full entropy/DCT pipeline really
-    * runs. Lossy-parameter coverage (nontrivial qtables, restart
-    * intervals, 3-component scans) lives in MultimodalSpec against the
-    * JDK's independent ImageIO codec. */
-  def jpegFromDocuments(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val base = spreadScan(documents).select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      ((col("n_chars") % 3 + 2) * 8).cast("int").as("w"),
-      ((col("doc_id") % 3 + 2) * 8).cast("int").as("h"))
-      .as[(Long, String, Int, Int)]
-    base.mapPartitions { rows =>
-      rows.map { case (docId, t, w, h) =>
-        val payload = encodeJpeg(w, h, blockConstantGray(w, h, t.getBytes("UTF-8"), 0))
-        MediaFile(docId, payload,
-          MediaMeta("image/jpeg", w, h, payload.length.toLong))
-      }
-    }.toDF("docId", "payload", "meta")
-  }
-
   /** 8×8-block-constant grayscale raster: block i takes text byte
     * `(off + i) % len` — the one image class a lossy DCT codec with
     * all-ones quant tables reproduces bit-exactly (DC-only blocks,
@@ -2810,37 +2480,7 @@ object Multimodal {
     gray
   }
 
-  /** Pixel-sum stats over a REAL baseline-JPEG decode. */
-  def decodeJpegStats(media: Dataset[MediaFile]): Dataset[JpegStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, ncomp, px) = parseJpeg(m.payload)
-        require(ncomp == 1, s"expected grayscale driver payloads, got $ncomp")
-        var s = 0L
-        var i = 0
-        while (i < px.length) { s += px(i) & 0xff; i += 1 }
-        JpegStats(m.docId, w, h, w.toLong * h, s, m.payload.length.toLong)
-      }
-    }
-  }
-
-  /** Driver-facing query over the JPEG path: generate REAL baseline
-    * payloads from `documents`, decode through the full Huffman + IDCT
-    * pipeline, report the integer-exact pixel sum. */
-  def jpegDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(jpegFromDocuments(documents))
-    decodeJpegStats(media).toDF()
-      .select(col("docId").as("doc_id"), col("width"), col("height"),
-        col("nPixels").as("n_pixels"), col("sumPx").as("sum_px"))
-  }
-
   // ─────────────── MJPEG video in an AVI (RIFF) container ───────────────
-
-  /** Integer-exact stats from a REAL video decode: every frame of an
-    * MJPEG stream runs through the full baseline-JPEG pipeline. */
-  final case class AviStats(docId: Long, width: Int, height: Int,
-                            nFrames: Int, nPixels: Long, sumPx: Long)
 
   /** REAL AVI (RIFF) writer carrying an MJPEG video stream — each frame
     * is a standalone baseline JPEG ([[encodeJpeg]]), the classic
@@ -2852,10 +2492,8 @@ object Multimodal {
   private[graft] def encodeAvi(w: Int, h: Int, frames: Array[Array[Byte]],
                                usPerFrame: Int = 100000): Array[Byte] = {
     require(frames.nonEmpty, "AVI needs at least one frame")
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    def le32(v: Int): Unit = { le16(v & 0xffff); le16((v >>> 16) & 0xffff) }
-    def fourcc(s: String): Unit = out.write(s.getBytes("US-ASCII"))
+    val out = new ByteWriter
+    import out.{le16, le32, tag}
     val n = frames.length
     val maxFrame = frames.map(_.length).max
     val pad = frames.map(f => f.length & 1)
@@ -2865,17 +2503,17 @@ object Multimodal {
     val hdrlSize = 4 + (8 + 56) + (8 + strlSize)
     val riffSize = 4 + (8 + hdrlSize) + (8 + moviSize) + (8 + idx1Size)
 
-    fourcc("RIFF"); le32(riffSize); fourcc("AVI ")
-    fourcc("LIST"); le32(hdrlSize); fourcc("hdrl")
-    fourcc("avih"); le32(56)
+    tag("RIFF"); le32(riffSize); tag("AVI ")
+    tag("LIST"); le32(hdrlSize); tag("hdrl")
+    tag("avih"); le32(56)
     le32(usPerFrame); le32(maxFrame * (1000000 / usPerFrame).max(1))
     le32(0) /* padding granularity */ ; le32(0x10) // AVIF_HASINDEX
     le32(n); le32(0) /* initial frames */ ; le32(1) /* streams */
     le32(maxFrame); le32(w); le32(h)
     le32(0); le32(0); le32(0); le32(0) // reserved
-    fourcc("LIST"); le32(strlSize); fourcc("strl")
-    fourcc("strh"); le32(56)
-    fourcc("vids"); fourcc("MJPG")
+    tag("LIST"); le32(strlSize); tag("strl")
+    tag("strh"); le32(56)
+    tag("vids"); tag("MJPG")
     le32(0) /* flags */ ; le16(0) /* priority */ ; le16(0) /* language */
     le32(0) /* initial frames */
     le32(usPerFrame) /* scale */ ; le32(1000000) /* rate: fps = rate/scale */
@@ -2883,98 +2521,76 @@ object Multimodal {
     le32(maxFrame) /* suggested buffer */ ; le32(-1) /* default quality */
     le32(0) /* sample size: varies per frame */
     le16(0); le16(0); le16(w); le16(h) // rcFrame
-    fourcc("strf"); le32(40) // BITMAPINFOHEADER
+    tag("strf"); le32(40) // BITMAPINFOHEADER
     le32(40); le32(w); le32(h); le16(1) /* planes */ ; le16(24)
-    fourcc("MJPG") /* biCompression */ ; le32(w * h * 3)
+    tag("MJPG") /* biCompression */ ; le32(w * h * 3)
     le32(0); le32(0); le32(0); le32(0)
-    fourcc("LIST"); le32(moviSize); fourcc("movi")
+    tag("LIST"); le32(moviSize); tag("movi")
     val chunkOffsets = new Array[Int](n) // relative to the 'movi' fourcc
     var off = 4
     frames.indices.foreach { i =>
       chunkOffsets(i) = off
-      fourcc("00dc"); le32(frames(i).length); out.write(frames(i))
+      tag("00dc"); le32(frames(i).length); out.write(frames(i))
       if (pad(i) == 1) out.write(0)
       off += 8 + frames(i).length + pad(i)
     }
-    fourcc("idx1"); le32(idx1Size)
+    tag("idx1"); le32(idx1Size)
     frames.indices.foreach { i =>
-      fourcc("00dc"); le32(0x10) /* AVIIF_KEYFRAME */
+      tag("00dc"); le32(0x10) /* AVIIF_KEYFRAME */
       le32(chunkOffsets(i)); le32(frames(i).length)
     }
     out.toByteArray
   }
 
   /** REAL AVI container parse — not a stub: validates the RIFF magic and
-    * EXACT declared size, walks the top-level chunk list with bounds
-    * checks on every read (truncation fails loudly, same contract as the
-    * other codecs), requires one `vids`/`MJPG` stream, reads the frame
-    * count + dimensions from `avih`, collects every `00dc`/`00db` chunk
-    * of the `movi` list (skipping `JUNK`/unknown chunks per the RIFF
-    * spec, honoring word alignment), and cross-checks the collected
-    * frame count against the header's. Returns (width, height, frames —
-    * each a standalone JPEG payload for [[parseJpeg]]). */
+    * EXACT declared size, walks the chunk tree with [[riffChunks]] (every
+    * read bounds-checked, truncation fails loudly), requires one
+    * `vids`/`MJPG` stream, reads the frame count + dimensions from
+    * `avih`, collects every `00dc`/`00db` chunk of the `movi` list
+    * (skipping `JUNK`/unknown chunks per the RIFF spec, honoring word
+    * alignment), and cross-checks the collected frame count against the
+    * header's. Returns (width, height, frames — each a standalone JPEG
+    * payload for [[parseJpeg]]). */
   private[graft] def parseAvi(payload: Array[Byte]): (Int, Int, Array[Array[Byte]]) = {
-    def in(pos: Int, nBytes: Int): Unit =
-      require(pos >= 0 && pos + nBytes <= payload.length,
-        s"AVI truncated: need $nBytes bytes at $pos of ${payload.length}")
-    def u8(i: Int) = { in(i, 1); payload(i) & 0xff }
-    def le32(i: Int) = { in(i, 4)
-      (payload(i) & 0xff) | ((payload(i + 1) & 0xff) << 8) |
-        ((payload(i + 2) & 0xff) << 16) | ((payload(i + 3) & 0xff) << 24) }
-    def cc(i: Int): String = { in(i, 4)
-      new String(payload, i, 4, "US-ASCII") }
-    require(cc(0) == "RIFF", s"not a RIFF file: ${cc(0)}")
+    val in = new ByteReader(payload, "AVI")
+    import in.{le32, tag}
+    require(tag(0) == "RIFF", s"not a RIFF file: ${tag(0)}")
     val riffSize = le32(4)
     require(riffSize >= 4 && riffSize + 8 == payload.length,
       s"RIFF size $riffSize disagrees with payload ${payload.length}")
-    require(cc(8) == "AVI ", s"RIFF form ${cc(8)} is not AVI")
+    require(tag(8) == "AVI ", s"RIFF form ${tag(8)} is not AVI")
 
     var width = -1; var height = -1; var declaredFrames = -1
     var streamOk = false
     val frames = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
 
-    // one recursive-descent chunk walk; `limit` is the parent's end
-    def walk(start: Int, limit: Int): Unit = {
-      var pos = start
-      while (pos < limit) {
-        val id = cc(pos); val size = le32(pos + 4)
-        require(size >= 0 && pos + 8 + size <= limit,
-          s"chunk $id size $size overruns parent at $pos")
-        id match {
-          case "LIST" =>
-            val listType = cc(pos + 8)
-            listType match {
-              case "hdrl" | "strl" => walk(pos + 12, pos + 8 + size)
-              case "movi" =>
-                var p = pos + 12
-                while (p < pos + 8 + size) {
-                  val cid = cc(p); val csz = le32(p + 4)
-                  require(csz >= 0 && p + 8 + csz <= pos + 8 + size,
-                    s"movi chunk $cid size $csz overruns list at $p")
-                  if (cid == "00dc" || cid == "00db") {
-                    in(p + 8, csz)
-                    frames += java.util.Arrays.copyOfRange(payload, p + 8, p + 8 + csz)
-                  } // skip rec LISTs/JUNK/other streams
-                  p += 8 + csz + (csz & 1)
-                }
-              case _ => () // unknown list: skip
-            }
-          case "avih" =>
-            require(size >= 40, s"avih segment too short: $size")
-            declaredFrames = le32(pos + 8 + 16)
-            width = le32(pos + 8 + 32)
-            height = le32(pos + 8 + 36)
-          case "strh" =>
-            require(size >= 8, s"strh segment too short: $size")
-            if (cc(pos + 8) == "vids") {
-              val handler = cc(pos + 12)
-              require(handler == "MJPG",
-                s"unsupported video handler $handler (MJPEG only)")
-              streamOk = true
-            }
-          case _ => () // JUNK / idx1 / unknown: skip (RIFF contract)
-        }
-        pos += 8 + size + (size & 1)
+    // one recursive-descent chunk walk over the header lists
+    def walk(from: Int, until: Int): Unit = riffChunks(in, from, until) { (id, at, size) =>
+      id match {
+        case "LIST" =>
+          tag(at) match {
+            case "hdrl" | "strl" => walk(at + 4, at + size)
+            case "movi" =>
+              riffChunks(in, at + 4, at + size) { (cid, c, csz) =>
+                if (cid == "00dc" || cid == "00db")
+                  frames += java.util.Arrays.copyOfRange(payload, c, c + csz)
+              } // skip rec LISTs/JUNK/other streams
+            case _ => () // unknown list: skip
+          }
+        case "avih" =>
+          require(size >= 40, s"avih segment too short: $size")
+          declaredFrames = le32(at + 16)
+          width = le32(at + 32)
+          height = le32(at + 36)
+        case "strh" =>
+          require(size >= 8, s"strh segment too short: $size")
+          if (tag(at) == "vids") {
+            val handler = tag(at + 4)
+            require(handler == "MJPG",
+              s"unsupported video handler $handler (MJPEG only)")
+            streamOk = true
+          }
+        case _ => () // JUNK / idx1 / unknown: skip (RIFF contract)
       }
     }
     walk(12, 8 + riffSize)
@@ -2985,86 +2601,10 @@ object Multimodal {
     (width, height, frames.toArray)
   }
 
-  /** Synthesize REAL MJPEG/AVI videos from `documents`: `doc_id % 4 + 2`
-    * frames of the same 8×8-block-constant grayscale scheme as
-    * [[jpegFromDocuments]], with frame k's blocks reading the text cycled
-    * from OFFSET k — adjacent frames differ the way adjacent video frames
-    * do (slightly), and the lossless-round-trip property that makes the
-    * closed-form text oracle valid per frame is preserved. */
-  def aviFromDocuments(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val base = spreadScan(documents).select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      ((col("n_chars") % 3 + 2) * 8).cast("int").as("w"),
-      ((col("doc_id") % 3 + 2) * 8).cast("int").as("h"),
-      (col("doc_id") % 4 + 2).cast("int").as("nf"))
-      .as[(Long, String, Int, Int, Int)]
-    base.mapPartitions { rows =>
-      rows.map { case (docId, t, w, h, nf) =>
-        val tb = t.getBytes("UTF-8")
-        val frames = Array.tabulate(nf) { k =>
-          encodeJpeg(w, h, blockConstantGray(w, h, tb, k))
-        }
-        val payload = encodeAvi(w, h, frames)
-        MediaFile(docId, payload,
-          MediaMeta("video/x-msvideo", w, h, payload.length.toLong))
-      }
-    }.toDF("docId", "payload", "meta")
-  }
-
-  /** Full-decode stats over a REAL MJPEG video: container walk, then
-    * EVERY frame through the complete Huffman + IDCT JPEG pipeline;
-    * frame dimensions are cross-checked against the container header
-    * (a mismatch is corruption and must fail the task). `stride` > 1
-    * decodes only every stride-th frame — the video-ingest access
-    * pattern (sample first, decode only what survives): the container
-    * walk still touches every chunk header, but the expensive entropy
-    * decode runs solely on kept frames. */
-  def decodeAviStats(media: Dataset[MediaFile], stride: Int = 1): Dataset[AviStats] = {
-    import media.sparkSession.implicits._
-    require(stride >= 1, s"stride must be >= 1, got $stride")
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, frames) = parseAvi(m.payload)
-        var s = 0L; var kept = 0
-        var k = 0
-        while (k < frames.length) {
-          if (k % stride == 0) {
-            val (fw, fh, ncomp, px) = parseJpeg(frames(k))
-            require(fw == w && fh == h,
-              s"frame $k is ${fw}x$fh but container says ${w}x$h")
-            require(ncomp == 1, s"expected grayscale driver payloads, got $ncomp")
-            var i = 0
-            while (i < px.length) { s += px(i) & 0xff; i += 1 }
-            kept += 1
-          }
-          k += 1
-        }
-        AviStats(m.docId, w, h, kept, w.toLong * h * kept, s)
-      }
-    }
-  }
-
-  /** Driver-facing query over the video path: real MJPEG/AVI payloads
-    * from `documents`, every frame fully decoded, integer-exact pixel
-    * sums across frames. */
-  def mjpegDecodeStats(documents: DataFrame, stride: Int = 1): DataFrame = {
-    val media = asMediaDataset(aviFromDocuments(documents))
-    decodeAviStats(media, stride).toDF()
-      .select(col("docId").as("doc_id"), col("width"), col("height"),
-        col("nFrames").as("n_frames"), col("nPixels").as("n_pixels"),
-        col("sumPx").as("sum_px"))
-  }
-
-  /** STUB DECODE — deterministic fake in place of a real decode, now
-    * scoped to THIRD-PARTY BITSTREAMS only (licensed H.264/H.265
-    * parsers this container cannot ship). Every codec CLASS has a real
-    * implementation above — stills (PPM, BMP, QOI, PNG, GIF, JPEG),
-    * audio (WAV PCM, G.711, ADPCM), intra video (AVI/MJPEG), and
-    * motion-compensated inter video ([[parseMcVideo]]). Parses the
+  /** STUB DECODE — deterministic fake in place of a real decode, scoped
+    * to THIRD-PARTY BITSTREAMS only (licensed H.264/H.265 parsers this
+    * container cannot ship); every codec class has a real implementation
+    * in this file. Parses the
     * 8-byte header and computes a 16-bin byte histogram + mean byte over
     * the body, standing in for frame-level features. `mapPartitions`
     * processes a whole partition per call — the batch shape a vectorized
@@ -3155,7 +2695,7 @@ object Multimodal {
   }
 
   // ───── MOTION-COMPENSATED inter-frame video (I/P frames, 4x4 integer
-  // transform in its LOSSLESS configuration — the last stub retired) ─────
+  // transform in its LOSSLESS configuration) ─────
   //
   // The coding tools are the real thing: full-search block motion
   // estimation against the RECONSTRUCTED previous frame, SKIP/INTER/INTRA
@@ -3174,10 +2714,6 @@ object Multimodal {
   // Container-level scale story is the same as every codec here: the
   // payload is one opaque binary cell, decode is mapPartitions (narrow,
   // no shuffle), and only the sampled/projected frames pay decode cost.
-
-  final case class McVideoStats(docId: Long, width: Int, height: Int,
-                                nFrames: Int, nPixels: Long, sumPx: Long,
-                                nSkipBlocks: Long, payloadBytes: Long)
 
   private val McTransform = Array(
     Array(1, 1, 1, 1), Array(2, 1, -1, -2),
@@ -3247,38 +2783,6 @@ object Multimodal {
     w
   }
 
-  private def mcVarint(out: java.io.ByteArrayOutputStream, v0: Int): Unit = {
-    var v = v0
-    require(v >= 0, s"varint needs nonnegative, got $v")
-    while ((v & ~0x7f) != 0) { out.write((v & 0x7f) | 0x80); v >>>= 7 }
-    out.write(v)
-  }
-  private def mcSvarint(out: java.io.ByteArrayOutputStream, v: Int): Unit =
-    mcVarint(out, (v << 1) ^ (v >> 31)) // zigzag-map sign into bit 0
-
-  private final class McReader(payload: Array[Byte]) {
-    var pos = 0
-    def u8(): Int = {
-      require(pos < payload.length, "MC bitstream truncated")
-      val b = payload(pos) & 0xff; pos += 1; b
-    }
-    def varint(): Int = {
-      var shift = 0; var v = 0
-      var b = u8()
-      while ((b & 0x80) != 0) {
-        v |= (b & 0x7f) << shift; shift += 7; b = u8()
-        require(shift <= 28, "MC varint overlong")
-      }
-      v | (b << shift)
-    }
-    def svarint(): Int = { val z = varint(); (z >>> 1) ^ -(z & 1) }
-    def skip(n: Int): Unit = {
-      require(n >= 0 && pos + n <= payload.length,
-        s"MC bitstream truncated: cannot skip $n bytes at $pos")
-      pos += n
-    }
-  }
-
   /** Encode grayscale frames into the GMC2 bitstream. Frame layout is a
     * GOP structure: frame fi is an I-frame (all-INTRA, no reference) when
     * fi == 0 or, with `gop > 0`, when fi % gop == 0; every other frame is
@@ -3310,15 +2814,15 @@ object Multimodal {
       }
       r
     }
-    def writeCoeffs(out: java.io.ByteArrayOutputStream, y: Array[Int]): Unit = {
+    def writeCoeffs(out: ByteWriter, y: Array[Int]): Unit = {
       var nnz = 0
       var i = 0
       while (i < 16) { if (y(McZigzag4(i)) != 0) nnz += 1; i += 1 }
-      mcVarint(out, nnz)
+      out.varint(nnz)
       i = 0
       while (i < 16) {
         val v = y(McZigzag4(i))
-        if (v != 0) { mcVarint(out, i); mcSvarint(out, v) }
+        if (v != 0) { out.varint(i); out.svarint(v) }
         i += 1
       }
     }
@@ -3327,7 +2831,7 @@ object Multimodal {
     val coded = frames.zipWithIndex.map { case (cur, fi) =>
       require(cur.length == w * h, s"frame $fi is ${cur.length} bytes, want ${w * h}")
       val isI = fi == 0 || (gop > 0 && fi % gop == 0)
-      val fout = new java.io.ByteArrayOutputStream()
+      val fout = new ByteWriter
       val recon = new Array[Byte](w * h)
       fout.write(if (isI) 'I' else 'P')
       var by = 0
@@ -3374,7 +2878,7 @@ object Multimodal {
               ref((by + bestDy + dy) * w + bx + bestDx + dx) & 0xff)
             else (2, (_: Int, _: Int) => 128)
           if (!isI) fout.write(mode)
-          if (mode != 2) { mcSvarint(fout, bestDx); mcSvarint(fout, bestDy) }
+          if (mode != 2) { fout.svarint(bestDx); fout.svarint(bestDy) }
           val res = residualBlock(cur, bx, by, pred)
           if (mode != 0) writeCoeffs(fout, mcForward(res))
           // reconstruct through the decoder's path; must be drift-free
@@ -3396,17 +2900,17 @@ object Multimodal {
       fout.toByteArray
     }
 
-    val out = new java.io.ByteArrayOutputStream()
-    out.write('G'); out.write('M'); out.write('C'); out.write('2')
-    mcVarint(out, w); mcVarint(out, h); mcVarint(out, frames.length)
-    mcVarint(out, gop)
-    coded.foreach(f => mcVarint(out, f.length)) // the seek index
+    val out = new ByteWriter
+    out.tag("GMC2")
+    out.varint(w); out.varint(h); out.varint(frames.length)
+    out.varint(gop)
+    coded.foreach(f => out.varint(f.length)) // the seek index
     coded.foreach(out.write)
     out.toByteArray
   }
 
   /** Shared GMC2 header walk: (w, h, nf, gop, per-frame byte lengths). */
-  private def mcHeader(in: McReader): (Int, Int, Int, Int, Array[Int]) = {
+  private def mcHeader(in: ByteReader): (Int, Int, Int, Int, Array[Int]) = {
     require(in.u8() == 'G' && in.u8() == 'M' && in.u8() == 'C' && in.u8() == '2',
       "bad MC video magic")
     val w = in.varint(); val h = in.varint(); val nf = in.varint()
@@ -3423,7 +2927,7 @@ object Multimodal {
   /** Decode ONE coded frame in place; returns the reconstruction and
     * bumps the caller's skip counter. `ref` is null iff the frame must
     * be an I-frame. */
-  private def decodeMcFrame(in: McReader, w: Int, h: Int, expectI: Boolean,
+  private def decodeMcFrame(in: ByteReader, w: Int, h: Int, expectI: Boolean,
                             ref: Array[Byte], addSkips: Long => Unit): Array[Byte] = {
     val ft = in.u8()
     require((expectI && ft == 'I') || (!expectI && ft == 'P'),
@@ -3485,7 +2989,7 @@ object Multimodal {
     * length drift, trailing bytes) fails loudly. */
   private[graft] def parseMcVideo(payload: Array[Byte]):
       (Int, Int, Long, Array[Array[Byte]]) = {
-    val in = new McReader(payload)
+    val in = new ByteReader(payload, "MC bitstream")
     val (w, h, nf, gop, lens) = mcHeader(in)
     var skips = 0L
     var ref: Array[Byte] = null
@@ -3514,7 +3018,7 @@ object Multimodal {
   private[graft] def decodeMcVideoSampled(payload: Array[Byte], stride: Int):
       (Int, Int, Int, Array[(Int, Long)]) = {
     require(stride >= 1, s"stride must be >= 1, got $stride")
-    val in = new McReader(payload)
+    val in = new ByteReader(payload, "MC bitstream")
     val (w, h, nf, gop, lens) = mcHeader(in)
     val gopLen = if (gop > 0) gop else nf
     var decoded = 0
@@ -3556,121 +3060,4 @@ object Multimodal {
     (w, h, decoded, out.toArray)
   }
 
-  /** Driver generator: same block-constant frame class as the MJPEG
-    * videos (frame k's block i reads text byte (k+i) mod len), so the
-    * closed-form oracle carries over — but the codec path is the full
-    * motion-compensated I/P pipeline, and because frame k+1's blocks are
-    * frame k's shifted one block left, motion search really finds exact
-    * inter predictions and most of each P-frame collapses to SKIPs. */
-  def mcVideoFromDocuments(documents: DataFrame, gop: Int = 0): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val base = spreadScan(documents).select(
-      col("doc_id"),
-      when(col("text").isNull || col("text") === "", lit(" "))
-        .otherwise(col("text")).as("t"),
-      ((col("n_chars") % 3 + 2) * 8).cast("int").as("w"),
-      ((col("doc_id") % 3 + 2) * 8).cast("int").as("h"),
-      (col("doc_id") % 3 + 3).cast("int").as("nf"))
-      .as[(Long, String, Int, Int, Int)]
-    base.mapPartitions { rows =>
-      rows.map { case (docId, t, w, h, nf) =>
-        val tb = t.getBytes("UTF-8")
-        val frames = Array.tabulate(nf)(k => blockConstantGray(w, h, tb, k))
-        val payload = encodeMcVideo(w, h, frames, gop)
-        MediaFile(docId, payload,
-          MediaMeta("video/x-graft-mc", w, h, payload.length.toLong))
-      }
-    }.toDF("docId", "payload", "meta")
-  }
-
-  /** Full-decode stats over the motion-compensated stream; `sum_px` is
-    * the reconstruction sum (lossless ⇒ equals the source closed form,
-    * which is what the oracle recomputes). Narrow mapPartitions. */
-  def mcVideoDecodeStats(documents: DataFrame): DataFrame = {
-    val media = asMediaDataset(mcVideoFromDocuments(documents))
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, skips, frames) = parseMcVideo(m.payload)
-        require(w == m.meta.width && h == m.meta.height,
-          s"container says ${m.meta.width}x${m.meta.height}, stream ${w}x$h")
-        var s = 0L
-        frames.foreach { f =>
-          var i = 0
-          while (i < f.length) { s += f(i) & 0xff; i += 1 }
-        }
-        McVideoStats(m.docId, w, h, frames.length,
-          w.toLong * h * frames.length, s, skips, m.payload.length.toLong)
-      }
-    }.toDF()
-      .select(col("docId").as("doc_id"), col("width"), col("height"),
-        col("nFrames").as("n_frames"), col("nPixels").as("n_pixels"),
-        col("sumPx").as("sum_px"))
-  }
-
-  /** SCENE-CUT (shot boundary) detection over the motion-compensated
-    * stream — the video-curation primitive that decides WHERE to sample
-    * keyframes for vision-language training (one frame per shot, not one
-    * per N): decode adjacent frame pairs, sum the absolute pixel delta,
-    * and flag a cut when the delta exceeds `tau` per pixel. The
-    * comparison is kept INTEGER-exact (`sum |Δ| > tau · w · h` — no
-    * float mean) so the oracle replays it bit-for-bit from the generator
-    * closed form (frame k's block i is text byte (k+i) mod len, so the
-    * pair delta is 64 · Σ_blocks |t[k+i+1] − t[k+i]|, no codec needed).
-    * The hash match is therefore also a LOSSLESSNESS proof of the full
-    * I/P reconstruction, pairwise this time. Narrow mapPartitions over
-    * the payload, one row per doc — embarrassingly parallel at scale;
-    * only the two live frames are held, not the clip.
-    */
-  def mcVideoSceneCuts(documents: DataFrame, tau: Int = 20): DataFrame = {
-    val media = asMediaDataset(mcVideoFromDocuments(documents))
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, _, frames) = parseMcVideo(m.payload)
-        var nCuts = 0L
-        var maxDiff = 0L
-        var sumDiff = 0L
-        var k = 1
-        while (k < frames.length) {
-          val a = frames(k - 1); val b = frames(k)
-          var d = 0L; var i = 0
-          while (i < a.length) {
-            d += math.abs((b(i) & 0xff) - (a(i) & 0xff)); i += 1
-          }
-          if (d > tau.toLong * w * h) nCuts += 1
-          if (d > maxDiff) maxDiff = d
-          sumDiff += d
-          k += 1
-        }
-        (m.docId, frames.length, nCuts, maxDiff, sumDiff)
-      }
-    }.toDF("doc_id", "n_frames", "n_cuts", "max_diff", "sum_diff")
-  }
-
-  /** GOP-sampled decode stats: encode with a keyframe every `gop` frames,
-    * then reconstruct only every `stride`-th frame through
-    * [[decodeMcVideoSampled]]. With stride == gop the sampled frames are
-    * exactly the I-frames, so every P-frame's bytes are SKIPPED through
-    * the index without entropy decode — the inter-frame analog of the
-    * MJPEG stride sampler, and the honest statement of sampled-decode
-    * cost under inter-frame coding (the keyframe interval, not the
-    * stride, is what you pay). */
-  def mcVideoGopSampleStats(documents: DataFrame, gop: Int = 2,
-                            stride: Int = 2): DataFrame = {
-    val media = asMediaDataset(mcVideoFromDocuments(documents, gop))
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val (w, h, decoded, sampled) = decodeMcVideoSampled(m.payload, stride)
-        require(w == m.meta.width && h == m.meta.height,
-          s"container says ${m.meta.width}x${m.meta.height}, stream ${w}x$h")
-        val sum = sampled.map(_._2).sum
-        (m.docId, w, h, sampled.length, w.toLong * h * sampled.length, sum,
-          decoded.toLong)
-      }
-    }.toDF("doc_id", "width", "height", "n_kept", "n_pixels_kept", "sum_px",
-      "n_decoded")
-  }
 }

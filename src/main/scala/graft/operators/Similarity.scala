@@ -318,13 +318,14 @@ object Similarity {
     if (codebook.isEmpty) emptyTopK(embeddings)
     else ivfWithCodebook(embeddings, codebook.sortBy(_._1), numQueries, k, nprobe)
 
-  /** Train-once k-means codebook for [[ivfTopKPrecomputed]]: the k·d
-    * centroid table as (cluster_id, vector, l2norm), zero-norm centroids
-    * dropped (their cosine is NaN). One Lloyd run — cache this instead of
-    * rebuilding [[ivfTopKTrained]] plans. */
+  /** Train-once k-means codebook for [[ivfTopKPrecomputed]]: the
+    * published [[kmeansCentroids]] rows as (cluster_id, vector, l2norm),
+    * zero-norm centroids dropped (their cosine is NaN), so a partitioning
+    * can be rebuilt from the published centroids. One Lloyd run — cache
+    * this instead of rebuilding [[ivfTopKTrained]] plans. */
   def trainedCodebook(embeddings: DataFrame, k: Int = 8,
                       iters: Int = 3): Seq[(Long, Seq[Double], Double)] =
-    reshapeCodebook(kmeans(embeddings, k, iters).raw).filter(_._3 > 0)
+    kmeans(embeddings, k, iters).codebook
 
   /** ANN index-quality report: recall@k of [[ivfTopK]] against the exact
     * [[bruteForceTopK]] baseline, per query — the eval harness every
@@ -1155,8 +1156,8 @@ object Similarity {
   }
 
   /** (cluster_id, dim, value) rows → codebook entries (id, vector, norm),
-    * id-ascending, dims in index order. ONE implementation shared by the
-    * trainer and [[ivfTopKTrained]]. */
+    * id-ascending, dims in index order: the one reshape behind every
+    * [[Trained.codebook]]. */
   private def reshapeCodebook(
       rows: Seq[(Long, Int, Double)]): Seq[(Long, Seq[Double], Double)] =
     rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (cid, rs) =>

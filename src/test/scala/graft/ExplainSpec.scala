@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The one query-subset parser of Bench, Verify and Explain
-  * ([[SparkEntry.selectQueries]]). */
+/** The argument parsers Bench, Verify and Explain share: the query-subset
+  * prefixes ([[SparkEntry.selectQueries]]) and `SPARK_GRAFT_CPUS`
+  * ([[SparkEntry.graftCpus]]). */
 class ExplainSpec extends AnyFunSuite {
   test("Explain's name list ignores spaces and blank names") {
     assert(SparkEntry.selectQueries(Some(" station_day_agg , ,window_anomalies,")) ==
@@ -36,5 +37,20 @@ class ExplainSpec extends AnyFunSuite {
       SparkEntry.selectQueries(Some("emb_pq,emb_nosuch"))
     }
     assert(e.getMessage.contains("emb_nosuch"), e.getMessage)
+  }
+
+  test("SPARK_GRAFT_CPUS: unset takes the caller's default, a positive integer wins") {
+    assert(SparkEntry.graftCpus(None, 32) == 32)
+    assert(SparkEntry.graftCpus(None, 4) == 4)
+    assert(SparkEntry.graftCpus(Some("8"), 32) == 8)
+    assert(SparkEntry.graftCpus(Some("1"), 4) == 1)
+  }
+
+  test("SPARK_GRAFT_CPUS: anything but a positive integer fails, naming the variable") {
+    for (bad <- Seq("0", "-2", "", " 8", "8 ", "four", "4.5", "+4", "99999999999")) {
+      val e = intercept[IllegalArgumentException](SparkEntry.graftCpus(Some(bad), 4))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
   }
 }

@@ -426,6 +426,15 @@ class SimilaritySpec extends AnyFunSuite {
     val trained = topkSet(Similarity.ivfTopKTrained(emb, numQueries = 10, k = 5,
       c = 8, iters = 3, nprobe = 4))
     assert(fromCache == trained)
+    // the codebook IS the published centroids: assigning against it can be
+    // reproduced from the kmeansCentroids rows alone
+    val published = Similarity.kmeansCentroids(emb, k = 8, iters = 3).collect()
+      .groupBy(_.getAs[Long]("cluster_id"))
+      .map { case (cid, rs) =>
+        cid -> rs.sortBy(_.getAs[Int]("dim")).map(_.getAs[Double]("centroid_val")).toSeq
+      }
+    assert(cb.map { case (cid, v, _) => cid -> v.toSeq }.toMap ==
+      published.filter { case (_, v) => v.exists(_ != 0.0) })
   }
 
   test("kmeans: more Lloyd iterations do not worsen the clustering objective") {

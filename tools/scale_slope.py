@@ -1,13 +1,21 @@
 #!/usr/bin/env python3
-"""Scale-slope evidence (dev tool, not engine code — round-3 verdict #7).
+"""Scale-slope evidence (dev tool, not engine code), in two modes.
 
-Builds a 10x documents/embeddings corpus from a base sf directory,
-benches the documents/embeddings queries at 1x and 10x, and writes the
-wall-time ratios to SCALE.md. A query whose plan is ~linear in corpus size
-should show a ratio well under ~15x for 10x data (superlinear candidate
-generation or an unbounded buffer would blow past it).
+`sweep` (the default) builds a 10x documents/embeddings/events corpus from
+a base sf directory, benches the documents/embeddings/event-time queries
+at 1x and 10x, and writes the wall-time ratios to SCALE.md. A query whose
+plan is ~linear in corpus size should show a ratio well under ~15x for 10x
+data (superlinear candidate generation or an unbounded buffer would blow
+past it).
 
-The 10x corpus preserves WORKLOAD STRUCTURE instead of naively replicating
+`100x` adds one more decade on the three steepest 10x queries
+(doc_pii_redact, doc_bpe_stats, events_in_windows — all believed
+per-character/per-row linear): it benches them at 1x, 10x and 100x and
+writes SCALE100.md in cwd for manual merge into SCALE.md. A second-decade
+ratio (100x/10x) of ~10x again shows no quadratic onset the first decade
+hid.
+
+The replica corpus preserves WORKLOAD STRUCTURE instead of naively replicating
 rows (naive replication plants 10 exact copies of every document/vector,
 which multiplies true near-dup pairs ~100x and makes any pair-finder look
 superlinear through no fault of its plan):
@@ -24,28 +32,29 @@ superlinear through no fault of its plan):
     cosines ~0 (sign flips decorrelate).
 Other tables are symlinked from the base dir so graft.Bench runs unchanged.
 
-Usage: python3 tools/scale_slope.py [base_sf_dir] [work_dir]
+Usage: python3 tools/scale_slope.py [--mode sweep|100x] base_sf_dir [work_dir]
+  (GRAFT_BENCH_CMD='tools/run_main.sh graft.Bench' benches a classes
+  snapshot instead of running sbt)
 """
+import argparse
 import json
 import os
 import subprocess
-import sys
 
 import duckdb
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-COPIES = 10
 ID_STRIDE = 1_000_000
-# the documents/embeddings queries whose slopes the verdict asks for
-# (mm_ queries are documents-derived, so they scale with the corpus too),
-# plus the event-time family (r7: slopes were never measured on real
-# timestamps — the r6 numbers predate the events replica entirely)
-PREFIXES = "doc_,emb_,mm_,station_,window_,user_,event,trip_,asof_,wds_,jsonl"
+# the documents/embeddings queries (mm_ queries are documents-derived, so
+# they scale with the corpus too), plus the event-time family
+SWEEP_PREFIXES = "doc_,emb_,mm_,station_,window_,user_,event,trip_,asof_,wds_,jsonl"
+# the three steepest stable 10x queries, re-measured one decade further
+SPOT_QUERIES = "doc_pii_redact,doc_bpe_stats,events_in_windows"
 
 
-def build_corpus(base: str, out: str) -> None:
+def build_corpus(base: str, out: str, copies: int) -> None:
     os.makedirs(out, exist_ok=True)
     replicated = ("documents.parquet", "embeddings.parquet", "events.parquet")
     for f in os.listdir(base):
@@ -54,7 +63,7 @@ def build_corpus(base: str, out: str) -> None:
             if not os.path.exists(dst):
                 os.symlink(os.path.join(base, f), dst)
 
-    # events: copy k > 0 strides event_id AND user_id — 10x distinct users
+    # events: copy k > 0 strides event_id AND user_id — `copies`x distinct users
     # with IDENTICAL per-user event sequences and the same 30-day ts range.
     # This preserves workload structure: sessions/funnels/SCD2 runs per user
     # are unchanged (row counts scale linearly with users), the user_id%10
@@ -63,7 +72,7 @@ def build_corpus(base: str, out: str) -> None:
     # "more traffic, same schema" growth a real deployment sees.
     ev = duckdb.sql(f"SELECT * FROM '{base}/events.parquet'").df()
     parts = []
-    for k in range(COPIES):
+    for k in range(copies):
         c = ev.copy()
         c["event_id"] = c["event_id"] + ID_STRIDE * k
         c["user_id"] = c["user_id"] + ID_STRIDE * k
@@ -76,7 +85,7 @@ def build_corpus(base: str, out: str) -> None:
 
     d = duckdb.sql(f"SELECT * FROM '{base}/documents.parquet'").df()
     ids, texts, langs, sources, nchars = [], [], [], [], []
-    for k in range(COPIES):
+    for k in range(copies):
         for _, r in d.iterrows():
             ids.append(int(r["doc_id"]) + ID_STRIDE * k)
             text = (r["text"] if k == 0 else
@@ -95,7 +104,7 @@ def build_corpus(base: str, out: str) -> None:
     e = duckdb.sql(f"SELECT * FROM '{base}/embeddings.parquet'").df()
     vecs = np.array([np.array(v, dtype=np.float32) for v in e["embedding"]])
     vids, embs, labels = [], [], []
-    for k in range(COPIES):
+    for k in range(copies):
         mask = (np.random.default_rng(k).integers(0, 2, vecs.shape[1]) * 2 - 1
                 ).astype(np.float32) if k else np.ones(vecs.shape[1], np.float32)
         for i in range(len(e)):
@@ -109,12 +118,12 @@ def build_corpus(base: str, out: str) -> None:
         os.path.join(out, "embeddings.parquet"))
 
 
-def bench(sf_dir: str, reps: int = 2) -> dict:
+def bench(sf_dir: str, prefixes: str, reps: int = 2) -> dict:
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32",
-               SPARK_GRAFT_QUERIES=PREFIXES)
+               SPARK_GRAFT_QUERIES=prefixes)
     # graft.Bench writes bench.json in cwd — the repo's TRACKED driver
     # snapshot; save/restore it so a dev-tool run never clobbers committed
-    # bench data (round-4 review finding)
+    # bench data
     saved = None
     if os.path.exists("bench.json"):
         with open("bench.json") as f:
@@ -146,11 +155,11 @@ def bench(sf_dir: str, reps: int = 2) -> dict:
                 f.write(saved)
 
 
-def main(base: str, work: str) -> int:
+def sweep(base: str, work: str) -> int:
     out10 = os.path.join(work, "scale10")
-    build_corpus(base, out10)
-    t1 = bench(base)
-    t10 = bench(out10)
+    build_corpus(base, out10, 10)
+    t1 = bench(base, SWEEP_PREFIXES)
+    t10 = bench(out10, SWEEP_PREFIXES)
     lines = [
         "# Scale slope: 10x documents/embeddings/events corpus",
         "",
@@ -184,7 +193,7 @@ def main(base: str, work: str) -> int:
             # exempt a ratio from the bound only when BOTH sides sit in the
             # start-up-jitter band (~2s of 10x work is measurement, not
             # jitter): a tiny 1x with a large 10x is a real superlinear
-            # blow-up and must count (round-4 review findings, twice)
+            # blow-up and must count
             stable = t1[q] >= 0.75 or t10[q] >= 2.0
             if stable and q not in output_quadratic:
                 worst = max(worst, ratio)
@@ -198,7 +207,7 @@ def main(base: str, work: str) -> int:
               f"data. Worst stable per-query ratio: {worst:.1f}x (bound: 15x)."]
     # PRESERVE every manually-written section (the 100x addenda, round
     # addenda): only the generated table up to the first "## " heading is
-    # replaced — r8 lost the 100x addendum to exactly this overwrite
+    # replaced, so an overwrite never loses the 100x addendum
     tail = ""
     if os.path.exists("SCALE.md"):
         with open("SCALE.md") as f:
@@ -212,7 +221,47 @@ def main(base: str, work: str) -> int:
     return 0 if worst < 15 and total < 15 else 1
 
 
+def spot100(base: str, work: str) -> int:
+    out10 = os.path.join(work, "scale10")
+    out100 = os.path.join(work, "scale100")
+    if not os.path.isdir(out10):
+        build_corpus(base, out10, 10)
+    if not os.path.isdir(out100):
+        build_corpus(base, out100, 100)
+    t1 = bench(base, SPOT_QUERIES)
+    t10 = bench(out10, SPOT_QUERIES)
+    t100 = bench(out100, SPOT_QUERIES)
+    lines = [
+        "## 100x addendum: the three steepest 10x queries",
+        "",
+        "One more decade (100 copies, same structure-preserving replica "
+        "rules) on the queries whose 10x ratios were the steepest. A "
+        "per-character/per-row linear plan shows a second-decade ratio "
+        "(100x/10x) of ~10x again; a quadratic onset would blow past it.",
+        "",
+        "| query | 1x sec | 10x sec | 100x sec | 10x/1x | 100x/10x |",
+        "|---|---|---|---|---|---|",
+    ]
+    worst2 = 0.0
+    for q in sorted(t1):
+        if q in t10 and q in t100:
+            r1 = t10[q] / t1[q] if t1[q] > 0 else float("inf")
+            r2 = t100[q] / t10[q] if t10[q] > 0 else float("inf")
+            worst2 = max(worst2, r2)
+            lines.append(f"| {q} | {t1[q]:.2f} | {t10[q]:.2f} | "
+                         f"{t100[q]:.2f} | {r1:.1f}x | {r2:.1f}x |")
+    lines += ["", f"Worst second-decade ratio: {worst2:.1f}x "
+              "(linear expectation ~10x; bound 15x)."]
+    with open("SCALE100.md", "w") as f:
+        f.write("\n".join(lines) + "\n")
+    print("\n".join(lines))
+    return 0 if worst2 < 15 else 1
+
+
 if __name__ == "__main__":
-    base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    work = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_scale"
-    sys.exit(main(base, work))
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--mode", choices=("sweep", "100x"), default="sweep")
+    ap.add_argument("base", help="the base sf directory, e.g. .../sf0.1")
+    ap.add_argument("work", nargs="?", default="/tmp/graft_scale")
+    a = ap.parse_args()
+    raise SystemExit((sweep if a.mode == "sweep" else spot100)(a.base, a.work))
