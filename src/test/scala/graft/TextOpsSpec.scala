@@ -1151,6 +1151,42 @@ class TextOpsSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), s"cdcChunkStats must not shuffle:\n$plan")
   }
 
+  /** Brute-force suffix ranks: every token suffix of every document,
+    * sorted with the engine's sentinel order (the sentinel of a document
+    * sorts below every token, and sentinels order by doc ordinal).
+    * (doc_id, pos) → rank in 1..Ntokens. */
+  private def bruteSuffixRanks(docs: Seq[(Long, String)]): Map[(Long, Int), Long] = {
+    val toks = docs.map { case (id, t) =>
+      id -> (if (t == null) Array.empty[String]
+             else t.trim.split("\\s+").filter(_.nonEmpty)) }
+    val ids = toks.map(_._1).sorted
+    val docOrd = ids.zipWithIndex.toMap // sentinel order = doc order
+    // suffix as token seq + sentinel marker; compare lexicographically,
+    // sentinel of doc d < every token and sentinels order by doc
+    val sufs = for ((id, ts) <- toks; p <- ts.indices)
+      yield (id, p, ts.drop(p))
+    def cmp(a: (Long, Int, Array[String]), b: (Long, Int, Array[String])): Boolean = {
+      val (x, y) = (a._3, b._3)
+      var i = 0
+      while (i < x.length && i < y.length) {
+        val c = x(i) compareTo y(i)
+        if (c != 0) return c < 0
+        i += 1
+      }
+      // shorter suffix hits its sentinel first: sentinel < any token,
+      // and two sentinels order by doc ordinal (never equal here since
+      // a suffix pair exhausting together implies same doc+pos)
+      if (x.length != y.length) x.length < y.length
+      else docOrd(a._1) < docOrd(b._1)
+    }
+    sufs.sortWith(cmp).zipWithIndex
+      .map { case ((id, p, _), r) => (id, p) -> (r + 1).toLong }.toMap
+  }
+
+  private def suffixRankMap(documents: org.apache.spark.sql.DataFrame): Map[(Long, Int), Long] =
+    TextOps.suffixRanks(documents).collect()
+      .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+
   test("suffix ranks: prefix doubling equals brute-force suffix sort") {
     import spark.implicits._
     // fixture with repeated content, a shared prefix run, an empty doc,
@@ -1162,62 +1198,44 @@ class TextOpsSpec extends AnyFunSuite {
       (40L, null.asInstanceOf[String]),
       (50L, "b a n a n a") // exact duplicate of doc 10
     ).toDF("doc_id", "text")
-    def brute(docs: Seq[(Long, String)]): Map[(Long, Int), Long] = {
-      val toks = docs.map { case (id, t) =>
-        id -> (if (t == null) Array.empty[String]
-               else t.trim.split("\\s+").filter(_.nonEmpty)) }
-      val ids = toks.map(_._1).sorted
-      val docOrd = ids.zipWithIndex.toMap // sentinel order = doc order
-      // suffix as token seq + sentinel marker; compare lexicographically,
-      // sentinel of doc d < every token and sentinels order by doc
-      val sufs = for ((id, ts) <- toks; p <- ts.indices)
-        yield (id, p, ts.drop(p))
-      def cmp(a: (Long, Int, Array[String]), b: (Long, Int, Array[String])): Boolean = {
-        val (x, y) = (a._3, b._3)
-        var i = 0
-        while (i < x.length && i < y.length) {
-          val c = x(i) compareTo y(i)
-          if (c != 0) return c < 0
-          i += 1
-        }
-        // shorter suffix hits its sentinel first: sentinel < any token,
-        // and two sentinels order by doc ordinal (never equal here since
-        // a suffix pair exhausting together implies same doc+pos)
-        if (x.length != y.length) x.length < y.length
-        else docOrd(a._1) < docOrd(b._1)
-      }
-      sufs.sortWith(cmp).zipWithIndex
-        .map { case ((id, p, _), r) => (id, p) -> (r + 1).toLong }.toMap
-    }
-    val expected = brute(Seq(10L -> "b a n a n a", 20L -> "a n a b a n",
+    val expected = bruteSuffixRanks(Seq(10L -> "b a n a n a", 20L -> "a n a b a n",
       30L -> "", 40L -> null, 50L -> "b a n a n a"))
-    val got = TextOps.suffixRanks(fix).collect()
-      .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val got = suffixRankMap(fix)
     assert(got == expected)
     // empty/null docs contribute no positions
     assert(!got.keys.exists(k => k._1 == 30L || k._1 == 40L))
     // an entirely empty corpus returns the empty relation, not an NPE
     assert(TextOps.suffixRanks(fix.filter(col("doc_id") < 0)).collect().isEmpty)
-    // real-data check at sf0.001: ranks are a dense permutation and the
-    // suffix order they induce is sorted (spot-check adjacent pairs)
-    val real = TextOps.suffixRanks(docs).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val n = real.length
-    assert(real.map(_._3).toSet == (1L to n).toSet, "ranks must be 1..N dense")
-    val tokMap = docs.select("doc_id", "text").na.drop().as[(Long, String)]
-      .collect().map { case (id, t) =>
-        id -> t.trim.split("\\s+").filter(_.nonEmpty) }.toMap
-    val byRank = real.sortBy(_._3)
-    // every adjacent pair in rank order must satisfy suffix <= successor
-    // on their first 3 tokens (cheap necessary condition over ALL pairs)
-    byRank.sliding(2).foreach { case Array(a, b) =>
-      val sa = tokMap(a._1).drop(a._2).take(3).mkString(" ")
-      val sb = tokMap(b._1).drop(b._2).take(3).mkString(" ")
-      assert(sa.split(" ").zip(sb.split(" ")).dropWhile(p => p._1 == p._2)
-        .headOption.forall(p => p._1 <= p._2),
-        s"rank order violated: '$sa' !<= '$sb' at ranks ${a._3},${b._3}")
-      case _ => ()
-    }
+    // real-data check at sf0.001: the full rank map equals the brute force
+    val texts = docs.select("doc_id", "text").as[(Long, String)].collect().toSeq
+    val real = suffixRankMap(docs)
+    assert(real.values.toSet == (1L to real.size).toSet, "ranks must be 1..N dense")
+    val want = bruteSuffixRanks(texts)
+    assert(real.size == want.size)
+    val wrong = want.filter { case (k, r) => !real.get(k).contains(r) }
+    assert(wrong.isEmpty, s"${wrong.size} ranks differ, e.g. ${wrong.take(3)}")
+  }
+
+  test("suffix ranks beyond the seed window: a periodic long doc, duplicates, prefixes, window-boundary lengths") {
+    import spark.implicits._
+    // k: the token window the rank build seeds its doubling with
+    val k = 16
+    def abDoc(n: Int) = Seq.tabulate(n)(j => if (j % 2 == 0) "a" else "b").mkString(" ")
+    val texts = Seq(
+      // longer than 17·k tokens with period 2: a tie group survives the
+      // seed window AND one doubling round before the full resolve fires
+      1L -> abDoc(17 * 32 + 9),
+      2L -> "b a n a n a b a n a n a",
+      3L -> "b a n a n a b a n a n a", // exact duplicate
+      4L -> "b a n a n a",              // a prefix of doc 2
+      5L -> abDoc(k - 1),               // the sentinel inside the window,
+      6L -> abDoc(k),                   // just past it,
+      7L -> abDoc(k + 1),               // and one token further
+      8L -> ("b " + abDoc(k)),
+      9L -> "",
+      11L -> null.asInstanceOf[String])
+    val got = suffixRankMap(texts.toDF("doc_id", "text"))
+    assert(got == bruteSuffixRanks(texts))
   }
 
   test("suffix LCP array: matches a brute-force sorted-suffix comparison exactly") {
