@@ -3293,76 +3293,54 @@ object TextOps {
 
   // ---------------------------------------------- suffix array (prefix doubling)
 
-  /** Exclusive prefix sum of `valCol` in ascending `keyCol` order —
-    * (key, offset) where offset = Σ val over all smaller keys — WITHOUT
-    * the single-partition window a naive global cumsum plans. The classic
-    * two-pass ranged scan: range-partition (partition i's keys all
-    * precede partition i+1's), sort within partitions, collect P
-    * driver-scale partition totals (pass 1), emit running sums seeded by
-    * their exclusive prefix (pass 2). localCheckpoint pins the sampled
-    * range bounds and the sort so both passes read one materialization;
-    * the result is a pure function of the data, never the partitioning. */
-  private[graft] def exclusivePrefixSum(df: DataFrame, keyCol: String,
-                                        valCol: String): DataFrame = {
+  /** Sorted runs of `key`, without the single-partition window a global
+    * row number plans: range-partition `df` by the key (equal keys share
+    * a partition), sort within partitions and checkpoint, collect the P
+    * per-partition (rows, Σ weight) totals, then one pass emits every row
+    * with the rows (`before`) and the weight (`wbefore`) of all rows of a
+    * smaller key, and the size of its run of equal keys (`run`). A run is
+    * buffered while it is counted, so a task holds at most the largest
+    * run. Keys compare in their binary row form, the equality Spark's
+    * own grouping uses. Output: the `carry` columns as longs, then
+    * before, wbefore, run — a pure function of the data, never of the
+    * partitioning. */
+  private def sortedRuns(df: DataFrame, key: Column, weight: Column,
+                         carry: Seq[String]): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
-    val spark = df.sparkSession
-    val sorted = df.select(col(keyCol), col(valCol).cast("long").as(valCol))
-      .repartitionByRange(col(keyCol))
-      .sortWithinPartitions(keyCol)
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val sorted = df.select(struct(key).as("key") +: weight.cast("long").as("w")
+        +: carry.map(c => col(c).cast("long")): _*)
+      .repartitionByRange(col("key"))
+      .sortWithinPartitions(col("key"))
       .localCheckpoint(false)
-    val totals = sorted.rdd
-      .mapPartitionsWithIndex((pid, it) =>
-        Iterator((pid, it.map(_.getLong(1)).sum)))
-      .collect().sortBy(_._1)
-    val offs = { var acc = 0L
-      totals.map { case (pid, n) => val o = (pid, acc); acc += n; o }.toMap }
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(sorted.schema.head).add("offset", LongType, nullable = false)
-    val rows = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = offs(pid)
-      it.map { r => val o = acc; acc += r.getLong(1); Row(r.get(0), o) }
-    }
-    spark.createDataFrame(rows, schema)
-  }
-
-  /** [[exclusivePrefixSum]] over TWO value columns in one sorted pass →
-    * (key, offset1, offset2). Exists because [[suffixRanks]] needs both
-    * the token-offset and the doc-ordinal prefix sums over the SAME
-    * doc_id order — fusing them removes one eager range-sort + scan
-    * from the prelude (measured ~0.5 s of the query at sf0.1). */
-  private[graft] def exclusivePrefixSum2(df: DataFrame, keyCol: String,
-                                         v1: String, v2: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
-    val spark = df.sparkSession
-    val sorted = df.select(col(keyCol), col(v1).cast("long").as(v1),
-        col(v2).cast("long").as(v2))
-      .repartitionByRange(col(keyCol))
-      .sortWithinPartitions(keyCol)
-      .localCheckpoint(false)
-    val totals = sorted.rdd
+    val rows = sorted.queryExecution.toRdd
+    val offs = rows
       .mapPartitionsWithIndex { (pid, it) =>
-        var s1 = 0L; var s2 = 0L
-        it.foreach { r => s1 += r.getLong(1); s2 += r.getLong(2) }
-        Iterator((pid, s1, s2))
+        var n = 0L; var w = 0L
+        it.foreach { r => n += 1; w += r.getLong(1) }
+        Iterator((pid, n, w))
       }
       .collect().sortBy(_._1)
-    val offs = { var a1 = 0L; var a2 = 0L
-      totals.map { case (pid, n1, n2) =>
-        val o = (pid, (a1, a2)); a1 += n1; a2 += n2; o }.toMap }
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add(sorted.schema.head)
-      .add("offset1", LongType, nullable = false)
-      .add("offset2", LongType, nullable = false)
-    val rows = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var (a1, a2) = offs(pid)
-      it.map { r =>
-        val o = Row(r.get(0), a1, a2)
-        a1 += r.getLong(1); a2 += r.getLong(2); o
+      .scanLeft((0L, 0L)) { case ((n, w), (_, pn, pw)) => (n + pn, w + pw) }
+    val nc = carry.size
+    val runs = rows.mapPartitionsWithIndex { (pid, it) =>
+      val in = it.buffered
+      var (n, w) = offs(pid)
+      Iterator.continually(()).takeWhile(_ => in.hasNext).flatMap { _ =>
+        val k = in.head.getStruct(0, 1).copy()
+        val (n0, w0) = (n, w)
+        val run = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+        while (in.hasNext && in.head.getStruct(0, 1) == k) {
+          val r = in.next()
+          w += r.getLong(1)
+          run += (2 until 2 + nc).map(r.getLong)
+        }
+        n += run.size
+        run.iterator.map(v => Row.fromSeq(v ++ Seq(n0, w0, run.size.toLong)))
       }
     }
-    spark.createDataFrame(rows, schema)
+    df.sparkSession.createDataFrame(runs, StructType(
+      (carry ++ Seq("before", "wbefore", "run")).map(StructField(_, LongType, nullable = false))))
   }
 
   /** Distributed suffix-array construction over the WHOLE corpus by
@@ -3376,53 +3354,49 @@ object TextOps {
     * a document boundary, and the final ranks are a permutation.
     *
     * Rank representation is the BUCKET START — tied suffixes share
-    * r = 1 + (number of positions provably smaller) — which makes each
-    * doubling round GROUP-LOCAL: a tie group refines by the rank 2^k
-    * positions ahead (r₂), new r = r + rank-within-group(r₂), and every
-    * other rank in the corpus is untouched. That turns the working set
-    * into ONLY the still-tied positions: settled rows (group size 1)
-    * leave the loop permanently and serve as a read-only lookup side,
-    * so round k's cost is O(unresolved positions), not O(corpus) — on
-    * real text ties collapse in ~log_vocab(L) rounds and the tail rounds
-    * touch just the planted duplicate-document runs. The worst case
-    * stays ceil(log2(maxDocLen+1)) rounds (sentinels bound every
-    * within-document tie), derived from one tiny agg, not guessed — and
-    * once the contested set is small AND the whole remaining prefix fits
-    * a ≤16-column composite key, a FULL-RESOLVE round finishes the sort
-    * in one pass (the remaining rounds' keys, consulted at once): the
-    * per-round scheduling floor, not data volume, was the measured tail
-    * cost (round-9 verdict #5).
+    * r = 1 + (number of positions provably smaller). The seed ranks
+    * every position by its first [[seedTokens]] symbols in ONE sorted
+    * pass ([[sortedRuns]] over a (token window, doc ordinal) key), so
+    * doubling starts at step = seedTokens. Each doubling round is then
+    * GROUP-LOCAL: a tie group refines by the rank `step` positions ahead
+    * (r₂), new r = r + rank-within-group(r₂), and every other rank is
+    * untouched. Settled rows (group size 1) leave the loop permanently
+    * and serve as a read-only lookup side, so a round costs
+    * O(unresolved positions), not O(corpus). Once the contested set is
+    * small AND the whole remaining suffix fits a ≤16-column composite
+    * key, a FULL-RESOLVE round finishes the sort in one pass (the
+    * remaining rounds' keys, consulted at once). The worst case stays
+    * ceil(log2(maxDocLen / seedTokens)) rounds: sentinels bound every
+    * within-document tie.
     *
-    * Distribution shape: r₀ comes from [[exclusivePrefixSum]] ranked
-    * scans (token counts in token order; doc ordinals in doc order —
-    * never a single-partition global window); each round is one
-    * measured-size-gated broadcast join of the contested rows against
-    * the shifted rank lookup (partner absent ⇔ gpos+2^k ≥ L, decided
-    * arithmetically — positions are dense — so the join stays INNER and
-    * broadcastable) plus two bounded windows (partition = one tie
-    * group — bounded by the largest surviving duplicate run, so a
-    * degenerate single-token corpus would serialize into one task; the
-    * general-refinement bound, same class as any bucket algorithm's hot
-    * bucket). localCheckpoint truncates per-round lineage (the pagerank
-    * BSP discipline). The equal-first-component argument makes the
-    * missing-partner rank 0 provably never tie-breaking: equal r means
-    * both 2^k windows are sentinel-free, so both partners exist.
+    * Bounds: the seed key holds at most seedTokens tokens per position,
+    * so the sort's key bytes stay within seedTokens × the corpus, and
+    * the whole build within O(L log maxLen). A run of equal seed keys is
+    * buffered while it is counted, and a round's window partition is one
+    * tie group: both are bounded by the largest group of identical
+    * seedTokens-token prefixes, so a degenerate single-token corpus would
+    * serialize into one task (the hot bucket of any bucket algorithm).
+    * Each round is one measured-size-gated broadcast join of the
+    * contested rows against the shifted rank lookup (partner absent ⇔
+    * gpos+step ≥ L, decided arithmetically — positions are dense — so the
+    * join stays INNER and broadcastable) plus two windows over one
+    * exchange; localCheckpoint truncates per-round lineage. The missing-
+    * partner rank 0 is never tie-breaking: equal r means both windows are
+    * sentinel-free, so both partners exist.
     *
     * Output: (doc_id, pos, suffix_rank) for every TOKEN position —
-    * suffix_rank ∈ 1..Ntokens densely (sentinel suffixes, provably the
-    * lowest ndocs ranks, are subtracted out; once every group has size
-    * 1, bucket-start rank ≡ dense rank ≡ position in suffix order). The
-    * DuckDB oracle replays the construction with 12 unrolled dense_rank
-    * doubling stages — dense and bucket-start ranks are order-isomorphic
-    * at every stage, so the final permutations provably coincide
-    * (stages past uniqueness are no-ops; 2^12 = 4096 bounds the oracle's
-    * valid doc length — the operator handles any length by running more
-    * rounds). */
+    * suffix_rank ∈ 1..Ntokens densely (sentinel suffixes, the lowest
+    * ndocs ranks, are subtracted out; once every group has size 1,
+    * bucket-start rank ≡ dense rank ≡ position in suffix order). The
+    * DuckDB oracle replays the construction from single-token ranks with
+    * 12 unrolled dense_rank doubling stages — dense and bucket-start
+    * ranks are order-isomorphic at every stage, so the final permutations
+    * coincide (stages past uniqueness are no-ops; 2^12 = 4096 bounds the
+    * oracle's valid doc length — the operator handles any length by
+    * running more rounds). */
   def suffixRanks(documents: DataFrame): DataFrame = {
-    // the tokenization is cached for the build's lifetime (see
-    // suffixRanksToked — the prelude alone scans it four times);
-    // released before returning, by which point every consumer is
-    // checkpoint-materialized
+    // the tokenization is cached while the ranks are built; released
+    // before returning, by which point the result reads only checkpoints
     val toked = tokedDocs(documents)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try suffixRanksToked(toked)
@@ -3434,58 +3408,31 @@ object TextOps {
     documents.select(col("doc_id"),
       coalesce(tokens(col("text")), array().cast("array<string>")).as("toks"))
 
-  /** [[suffixRanks]] over a PRE-TOKENIZED (ideally cached) relation —
-    * the prelude consults `toked` four times (lens, doc count, token
-    * counts, token rows) and [[suffixLcp]] a fifth time for its slices,
-    * so tokenizing once and caching (round-10 verdict #3) removes three
-    * to four full regex passes over the corpus from the build's critical
-    * path. MEMORY_AND_DISK: the tokenized corpus is corpus-sized, so the
-    * cache must spill, never OOM, at scale. */
+  /** Symbols in the seed key of [[suffixRanks]]. The `documents` tables
+    * hold documents of at most 100 tokens, so 8, 16 and 32 all let the
+    * full resolve fire on the loop's first round (kMax 12, 6 and 3).
+    * A/B on 4 cores: `doc_suffix_ranks` wall in `perfbench` job_chains
+    * (sf0.01, medians of 3 seeds) 2.33 / 2.30 / 2.23 s for 8 / 16 / 32,
+    * inside the runs' own 0.13–0.37 s spread; `graft.Bench` minimum at
+    * sf0.1 (one run each) 3.73 / 3.27 / 5.23 s. 16 keeps the key at half
+    * the bytes of 32. A whole-suffix key (seedTokens ≥ maxLen) would need
+    * no loop at all, but its key bytes grow with the square of document
+    * length. */
+  private[graft] val seedTokens = 16
+
+  /** [[suffixRanks]] over a PRE-TOKENIZED (ideally cached) relation: the
+    * build reads `toked` twice (the length aggregate and the seed key)
+    * and [[suffixLcp]] a third time for its slices. MEMORY_AND_DISK: the
+    * tokenized corpus is corpus-sized, so the cache must spill, never
+    * OOM, at scale. */
   private def suffixRanksToked(toked: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = toked.sparkSession
     val lens = toked.select(col("doc_id"),
       (size(col("toks")) + 1).cast("long").as("len"))
-    val ndocsRow = toked.agg(count(lit(1)).as("nd"))
-    val tokCnt = toked.select(explode(col("toks")).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-    // NOTE (round 10): submitting the three eager prelude pieces as
-    // concurrent futures was tried and REVERTED — it intermittently
-    // corrupted the rank permutation (two suffixes sharing a final
-    // rank; caught by the brute-force LCP spec in the full-suite run).
-    // Concurrent first-materialization of sibling exclusivePrefixSum
-    // pipelines over the shared un-cached `toked` lineage is not safe
-    // to assume, and the overlap bought nothing at local[32] anyway
-    // (sub-100 ms jobs). The prelude runs sequentially, on purpose.
-    // ONE fused pass yields both per-doc prefix sums: the token offset
-    // (Σ len) and the doc ordinal (Σ 1) share the same doc_id order
-    val offsets = exclusivePrefixSum2(
-        lens.withColumn("one", lit(1L)), "doc_id", "len", "one")
-      .select(col("doc_id"), col("offset1").as("offset"),
-        col("offset2").as("ord"))
-    // token bucket starts: r = nd + 1 + (occurrences of smaller tokens),
-    // group size = the token's own count; doc ordinals the same way
-    val tokStart = exclusivePrefixSum(tokCnt, "term", "cnt")
-      .join(tokCnt, "term") // vocab-scale join back for the group size
-    val tokRows = toked
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("i", "term")))
-      .join(tokStart, "term") // vocab-scale, unhinted (vocab grows with corpus)
-      .crossJoin(broadcast(ndocsRow))
-      .select(col("doc_id"), col("i"), lit(false).as("sentinel"),
-        (col("nd") + lit(1L) + col("offset")).as("r"), col("cnt").as("gs"))
-    val sentRows = offsets.join(lens, "doc_id")
-      .select(col("doc_id"), (col("len") - 1).cast("int").as("i"),
-        lit(true).as("sentinel"), (col("ord") + lit(1L)).as("r"),
-        lit(1L).as("gs"))
-    val base = tokRows.unionByName(sentRows)
-      .join(offsets.select(col("doc_id"), col("offset")), "doc_id")
-      .select(col("doc_id"), col("i"), col("sentinel"),
-        (col("offset") + col("i")).as("gpos"), col("r"), col("gs"))
-      .localCheckpoint(false)
-
     // empty corpus: the aggregates come back NULL — return the empty
     // result instead of tripping a primitive-extraction NPE
-    val aggRow = lens.agg(max(col("len")), sum(col("len"))).head()
+    val aggRow = lens.agg(max(col("len")), sum(col("len")), count(lit(1))).head()
     if (aggRow.isNullAt(0))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -3493,10 +3440,32 @@ object TextOps {
           .add("doc_id", org.apache.spark.sql.types.LongType)
           .add("pos", org.apache.spark.sql.types.IntegerType)
           .add("suffix_rank", org.apache.spark.sql.types.LongType))
-    val (maxLen, totalL) = (aggRow.getLong(0), aggRow.getLong(1))
+    val (maxLen, totalL, nd) =
+      (aggRow.getLong(0), aggRow.getLong(1), aggRow.getLong(2))
+    // in doc_id order: the doc ordinal (docs before) and the offset of
+    // its first position (positions before)
+    val docs = sortedRuns(lens, col("doc_id"), col("len"), Seq("doc_id"))
+      .select(col("doc_id"), col("before").as("ord"), col("wbefore").as("off"))
+    // every position i ∈ 0..size(toks), i = size being the sentinel, keyed
+    // by its first seedTokens symbols: the tokens, and the doc ordinal
+    // when the sentinel falls inside the window. Array order (a shorter
+    // prefix first) then puts a sentinel below every token and orders
+    // sentinels by doc, so a run start is the position's bucket-start rank
+    val positions = toked.join(docs, "doc_id")
+      .select(col("doc_id"), col("toks"), col("ord"), col("off"),
+        explode(sequence(lit(0), size(col("toks")))).as("i"))
+      .withColumn("gpos", col("off") + col("i"))
+    val base = sortedRuns(positions,
+        struct(slice(col("toks"), col("i") + 1, lit(seedTokens)),
+          when(col("i") + seedTokens > size(col("toks")), col("ord"))),
+        lit(1L), Seq("doc_id", "i", "gpos"))
+      .select(col("doc_id"), col("i").cast("int").as("pos"), col("gpos"),
+        (col("before") + 1L).as("r"), col("run").as("gs"))
+      .localCheckpoint(false)
+
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var live = base.select(col("gpos"), col("r"), col("gs"))
-    var step = 1L
+    var step = seedTokens.toLong
     var exhausted = false
     while (!exhausted && step < maxLen) {
       parts += live.filter(col("gs") === 1L).select(col("gpos"), col("r"))
@@ -3507,28 +3476,20 @@ object TextOps {
       // (kMax+1)·step ≥ maxLen
       val kMax = ((maxLen - 1) / step).toInt
       if (n == 0) exhausted = true
-      // threshold A/B'd again in round 16 (verdict #4, last measured r10):
-      // firing the full-resolve one round EARLIER (kMax ≤ 32, probe budget
-      // 3.3M — fires at step 4 on sf0.1 with n=83,568, kMax=25) measured
-      // 6.24 s vs 5.3–5.6 s for this shape on the same idle protocol: the
-      // wide pivot + 25-column sort over a 2.1M-row broadcast costs more
-      // than the one ~0.5 s round it saves. Later firing (pure doubling to
-      // the end) was the pre-r9 shape, also measured worse. This gate is
-      // the measured floor, not a guess.
+      // the gate as measured on the seeded build: the first round runs at
+      // step 16 with kMax 6 (documents of ≤100 tokens) and n = 1,733 of
+      // L = 27,665 positions at sf0.01, 17,849 of 275,704 at sf0.1, so it
+      // fires at once at every scale; longer documents double until
+      // kMax ≤ 16
       else if (n < 100000L && kMax >= 2 && kMax <= 16) {
-        // FULL-RESOLVE TAIL (round-9 verdict #5 — the measured cost of
-        // the tail was per-round scheduling, ~0.55 s/round at sf0.1
-        // regardless of n): once the contested set is small and the
-        // remaining prefix fits a bounded composite key, finish in ONE
-        // round instead of ceil(log2(maxLen/step)) more. Sorting a tie
-        // group by the ranks at +s, +2s, …, +kMax·s is block-aligned
-        // lexicographic comparison of the ENTIRE remaining suffix — the
-        // exact keys the remaining doubling rounds would consult,
-        // consulted at once — and sentinel uniqueness makes every
-        // composite distinct, so every row settles. Bounds: ≤16 sort
-        // columns and n·kMax ≤ 1.6M broadcast probe rows; when docs are
-        // long relative to step the branch simply doesn't fire yet and
-        // doubling continues.
+        // FULL-RESOLVE: sorting a tie group by the ranks at +s, +2s, …,
+        // +kMax·s is block-aligned lexicographic comparison of the ENTIRE
+        // remaining suffix — the exact keys the remaining doubling rounds
+        // would consult, consulted at once — and sentinel uniqueness
+        // makes every composite distinct, so every row settles. Bounds:
+        // ≤16 sort columns and n·kMax ≤ 1.6M broadcast probe rows; when
+        // docs are long relative to step the branch does not fire yet
+        // and doubling continues.
         val lookup = (parts.toSeq :+ cont.select(col("gpos"), col("r")))
           .reduce(_ unionByName _)
           .select(col("gpos").as("ahead"), col("r").as("rv"))
@@ -3553,12 +3514,9 @@ object TextOps {
         val wFull = Window.partitionBy(col("r"))
           .orderBy((1 to kMax).map(k => col(s"rk$k")): _*)
         // composite-key uniqueness is an INVARIANT (sentinel argument),
-        // not an assumption to trust silently: rank()==row_number() iff
-        // the composite has no tie, and both ride the SAME window exec,
-        // so the check is free. A tie — the failure mode behind round
-        // 10's reverted concurrent prelude, and what rank() alone would
-        // turn into duplicate final ranks — now kills the job loudly
-        // (round-10 advisor).
+        // checked for free: rank()==row_number() iff the composite has no
+        // tie, and both ride the SAME window exec. A tie, which rank()
+        // alone would turn into duplicate final ranks, kills the job.
         val rnk = rank().over(wFull)
         val rn = row_number().over(wFull)
         parts += paired.select(col("gpos"),
@@ -3602,12 +3560,11 @@ object TextOps {
     }
     // step >= maxLen: remaining groups are unique by the sentinel bound
     if (!exhausted) parts += live.select(col("gpos"), col("r"))
-    val ranks = parts.reduce(_ unionByName _)
-    base.filter(!col("sentinel"))
-      .select(col("doc_id"), col("i").as("pos"), col("gpos"))
-      .join(ranks, "gpos")
-      .crossJoin(broadcast(ndocsRow))
-      .select(col("doc_id"), col("pos"), (col("r") - col("nd")).as("suffix_rank"))
+    // the lowest nd ranks are the sentinels
+    base.select(col("doc_id"), col("pos"), col("gpos"))
+      .join(parts.reduce(_ unionByName _), "gpos")
+      .filter(col("r") > nd)
+      .select(col("doc_id"), col("pos"), (col("r") - nd).as("suffix_rank"))
   }
 
   /** LCP ARRAY over [[suffixRanks]] — the second half of the Lee et al.
@@ -3637,16 +3594,13 @@ object TextOps {
     * (rank, doc_id, pos, prev_doc_id, prev_pos, lcp) for every rank ≥ 2. */
   def suffixLcp(documents: DataFrame, cap: Int = 64): DataFrame = {
     require(cap >= 1 && cap <= 512, s"cap in [1,512], got $cap")
-    // one tokenization, cached across the rank build's four prelude
-    // scans (round-10 verdict #3) — those run EAGERLY inside
-    // suffixRanksToked (the per-round counts materialize the
-    // checkpoints), so they all hit the cache. The unpersist in the
-    // finally fires at plan-CONSTRUCTION time, before any caller
+    // one tokenization, cached while suffixRanksToked runs its jobs
+    // (the length aggregate and the seed key read it). The unpersist in
+    // the finally fires at plan-CONSTRUCTION time, before any caller
     // materializes the returned relation, so the slice join below pays
-    // one honest re-tokenization pass when the LCP artifact is first
-    // materialized (round-11 review — there is no sound lazy hook to
-    // release the cache after an action the caller owns; one regex pass
-    // per artifact build, then the caller's persist() takes over).
+    // one re-tokenization pass when the LCP artifact is first
+    // materialized: there is no lazy hook to release the cache after an
+    // action the caller owns.
     val toked = tokedDocs(documents)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ranks =
@@ -3664,8 +3618,7 @@ object TextOps {
     // the build cap travels WITH the artifact (column metadata survives
     // select/persist/caching): a consumer whose threshold exceeds the
     // cap this relation was built with would silently read saturated
-    // values as exact — dupSpans validates against this tag (round-10
-    // advisor)
+    // values as exact — dupSpans validates against this tag
     val capMeta = new org.apache.spark.sql.types.MetadataBuilder()
       .putLong(lcpCapMetaKey, cap.toLong).build()
     hi.join(lo, "rank")

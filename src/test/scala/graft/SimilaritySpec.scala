@@ -1066,28 +1066,9 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("pq codebooks: the training job count does not grow with the subspace count") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    // jobs launched while the codebooks train; a marker job flushes the
-    // async listener bus, which delivers events in order
-    def trainingJobs(numSubspaces: Int): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val flushed = new java.util.concurrent.CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          if (Option(js.properties).exists(
-                _.getProperty("spark.job.description") == "flush-marker"))
-            flushed.countDown()
-          else jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        Similarity.pqCodebooks(emb, numSubspaces = numSubspaces, k = 4, iters = 2)
-        spark.sparkContext.setJobDescription("flush-marker")
-        try spark.sparkContext.parallelize(Seq(1)).count()
-        finally spark.sparkContext.setJobDescription(null)
-        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get
+    // jobs launched while the codebooks train
+    def trainingJobs(numSubspaces: Int): Int = JobCount(spark) {
+      Similarity.pqCodebooks(emb, numSubspaces = numSubspaces, k = 4, iters = 2)
     }
     val (two, four) = (trainingJobs(2), trainingJobs(4))
     assert(two > 0 && two == four,

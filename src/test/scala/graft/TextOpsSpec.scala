@@ -1219,12 +1219,13 @@ class TextOpsSpec extends AnyFunSuite {
   test("suffix ranks beyond the seed window: a periodic long doc, duplicates, prefixes, window-boundary lengths") {
     import spark.implicits._
     // k: the token window the rank build seeds its doubling with
-    val k = 16
+    val k = TextOps.seedTokens
     def abDoc(n: Int) = Seq.tabulate(n)(j => if (j % 2 == 0) "a" else "b").mkString(" ")
     val texts = Seq(
-      // longer than 17·k tokens with period 2: a tie group survives the
-      // seed window AND one doubling round before the full resolve fires
-      1L -> abDoc(17 * 32 + 9),
+      // 34·k + 9 tokens with period 2: tie groups survive the seed window
+      // and the doubling rounds at steps k and 2·k (the full resolve
+      // needs (maxLen − 1) / step ≤ 16, first true at step 4·k)
+      1L -> abDoc(34 * k + 9),
       2L -> "b a n a n a b a n a n a",
       3L -> "b a n a n a b a n a n a", // exact duplicate
       4L -> "b a n a n a",              // a prefix of doc 2
@@ -1236,6 +1237,25 @@ class TextOpsSpec extends AnyFunSuite {
       11L -> null.asInstanceOf[String])
     val got = suffixRankMap(texts.toDF("doc_id", "text"))
     assert(got == bruteSuffixRanks(texts))
+  }
+
+  test("suffix ranks: a bounded construction job chain, and a result that reads only checkpoints") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.LogicalRDD
+    // every job runs while the relation is built: a return to per-round
+    // chains from single-token ranks (32 jobs at sf0.01) fails this bound
+    var ranks: org.apache.spark.sql.DataFrame = null
+    val jobs = JobCount(spark) { ranks = TextOps.suffixRanks(docs) }
+    assert(jobs <= 12, s"$jobs construction jobs")
+    // the tokenized corpus is released when the build returns, so the
+    // result must not reach back to the documents — also when no doubling
+    // round runs (every document shorter than the seed window)
+    val short = TextOps.suffixRanks(Seq(1L -> "b a", 2L -> "a b a").toDF("doc_id", "text"))
+    for (df <- Seq(ranks, short))
+      assert(df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LogicalRDD]),
+        df.queryExecution.analyzed.treeString)
+    assert(short.collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap ==
+      bruteSuffixRanks(Seq(1L -> "b a", 2L -> "a b a")))
   }
 
   test("suffix LCP array: matches a brute-force sorted-suffix comparison exactly") {
