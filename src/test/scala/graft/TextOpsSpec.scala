@@ -1154,7 +1154,9 @@ class TextOpsSpec extends AnyFunSuite {
   /** Brute-force suffix ranks: every token suffix of every document,
     * sorted with the engine's sentinel order (the sentinel of a document
     * sorts below every token, and sentinels order by doc ordinal).
-    * (doc_id, pos) → rank in 1..Ntokens. */
+    * Tokens compare as Java strings, which is Spark's binary UTF-8 order
+    * on the ASCII texts these specs use. (doc_id, pos) → rank in
+    * 1..Ntokens. */
   private def bruteSuffixRanks(docs: Seq[(Long, String)]): Map[(Long, Int), Long] = {
     val toks = docs.map { case (id, t) =>
       id -> (if (t == null) Array.empty[String]
