@@ -1461,6 +1461,83 @@ class TextOpsSpec extends AnyFunSuite {
     assert(none.isEmpty)
   }
 
+  /** Longest repeated substring by brute force, the oracle's shape: every
+    * (start, length) gram of every document, lengths tried from the
+    * longest document down, so the first length with a gram seen twice
+    * is the answer. The witness is the smallest such gram in UTF-8 byte
+    * order (binary collation on both engines), with its positional
+    * count. None when no token repeats. */
+  private def bruteLrs(texts: Seq[String]): Option[(Long, String, Long)] = {
+    val toks = texts.map(t => if (t == null) Array.empty[String]
+      else t.trim.split("\\s+").filter(_.nonEmpty))
+    def utf8Le(a: String, b: String) = java.util.Arrays.compareUnsigned(
+      a.getBytes("UTF-8"), b.getBytes("UTF-8")) <= 0
+    (toks.map(_.length).maxOption.getOrElse(0) to 1 by -1).iterator.map { l =>
+      l -> toks.flatMap(ts => ts.sliding(l).filter(_.length == l).map(_.mkString(" ")))
+        .groupBy(identity).collect { case (g, gs) if gs.size >= 2 => g -> gs.size.toLong }
+    }.collectFirst { case (l, dups) if dups.nonEmpty =>
+      val g = dups.keys.reduce((a, b) => if (utf8Le(a, b)) a else b)
+      (l.toLong, g, dups(g))
+    }
+  }
+
+  private def lrsOf(texts: Seq[String]): Option[(Long, String, Long)] = {
+    import spark.implicits._
+    val out = TextOps.longestRepeatedSubstring(
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
+      .collect()
+    assert(out.length <= 1, out.mkString(";"))
+    out.headOption.map(r => (r.getAs[Long]("lrs_len"), r.getAs[String]("gram"),
+      r.getAs[Long]("n_occurrences")))
+  }
+
+  test("longest repeated substring equals the brute-force all-grams answer") {
+    import spark.implicits._
+    // real data: the sf0.001 documents
+    val texts = docs.select("text").as[String].collect().toSeq
+    val want = bruteLrs(texts)
+    assert(want.nonEmpty)
+    assert(lrsOf(texts) == want)
+    // planted runs of `a` unique tokens beside a 99-token document, so the
+    // search range is [0, 99] in every corpus; the lengths sit on, one
+    // below and one above the lengths a k-ary search over [0, 99] tests
+    // first with 4, 10 or 16 candidates per round, and at both ends
+    val longest = (0 until 99).map(i => s"u$i").mkString(" ")
+    for (a <- Seq(1, 9, 10, 11, 24, 25, 26, 49, 50, 51, 89, 90, 91, 97, 98)) {
+      val run = (0 until a).map(i => s"s$i").mkString(" ")
+      val corpus = Seq(longest, s"p $run", run, "q r")
+      assert(bruteLrs(corpus).map(_._1).contains(a.toLong))
+      assert(lrsOf(corpus) == bruteLrs(corpus), s"planted run of $a")
+    }
+    // the answer at the longest document: an exact duplicate of it
+    val dup = Seq(longest, "a b", longest)
+    assert(bruteLrs(dup) == Some((99L, longest, 2L)))
+    assert(lrsOf(dup) == bruteLrs(dup))
+  }
+
+  test("longest repeated substring: binary-collation witness, non-ASCII tokens, null and empty texts") {
+    // a tie at the longest length goes to the smallest gram in binary
+    // collation ("B" < "a"), and the count is that gram's own
+    val tie = Seq("B x c1", "a x c2", "B x c3", "a x c4", "a x c5")
+    assert(bruteLrs(tie) == Some((2L, "B x", 2L)))
+    assert(lrsOf(tie) == bruteLrs(tie))
+    // U+FF21 sorts before U+1F600 in UTF-8 bytes but after it in UTF-16
+    // units: the witness follows the bytes
+    val (fw, emoji) = ("Ａ", new String(Character.toChars(0x1F600)))
+    val wide = Seq(s"$emoji é z", s"$fw é y", s"$emoji é w", s"$fw é v", s"$emoji é")
+    assert(bruteLrs(wide) == Some((2L, s"$fw é", 2L)))
+    assert(lrsOf(wide) == bruteLrs(wide))
+    // null, empty and blank texts add no tokens
+    val sparse = Seq(null, "", "   ", "k m k", null)
+    assert(bruteLrs(sparse) == Some((1L, "k", 2L)))
+    assert(lrsOf(sparse) == bruteLrs(sparse))
+    // no token repeats: zero rows, also for a corpus of no tokens at all
+    for (none <- Seq(Seq("a b c", null, "d e", ""), Seq(null, ""))) {
+      assert(bruteLrs(none).isEmpty)
+      assert(lrsOf(none).isEmpty)
+    }
+  }
+
   test("Kneser-Ney bigram: hand-computed fixture, exact to the 1e-4 grid") {
     import spark.implicits._
     // corpus "a b a b c" + "z": c12 = {ab:2, ba:1, bc:1}
