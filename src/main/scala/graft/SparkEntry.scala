@@ -841,8 +841,8 @@ object SparkEntry {
     "doc_dedup_excise_sa" -> ((s, dir) =>
       TextOps.exciseDupIntervals(Tables.documents(s, dir),
         lcpRel = Some(lcpRel(s, dir)))),
-    // longest repeated substring: binary-searched answer length over
-    // linear gram probes vs the oracle's brute-force all-length table
+    // longest repeated substring: k-ary length search on 8-byte gram
+    // fingerprints + one exact pass vs the oracle's all-length table
     "doc_lrs" -> ((s, dir) =>
       TextOps.longestRepeatedSubstring(Tables.documents(s, dir))),
     // unigram-LM (SentencePiece-class) subword segmentation: Viterbi DP

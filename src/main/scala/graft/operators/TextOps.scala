@@ -33,9 +33,9 @@ object TextOps {
     * retry-deterministic), skipped when the scan already spans the
     * cluster, so at 100 TB the plan is unchanged. Applied ONLY to
     * operators where a full-run A/B won (doc_kn_logprob,
-    * doc_block_dedup, doc_bloom_decontaminate): a blanket reader-level
-    * spread measurably HURT iterative/multi-reference operators (see
-    * Tables.read and OPTIMIZATION_r16.md). */
+    * doc_block_dedup, doc_bloom_decontaminate, doc_lrs): a blanket
+    * reader-level spread measurably HURT iterative/multi-reference
+    * operators (see Tables.read and OPTIMIZATION_r16.md). */
   private def spreadScan(documents: DataFrame): DataFrame =
     Spread.byKey(documents, col("doc_id"))
 
@@ -3738,58 +3738,140 @@ object TextOps {
 
   /** Longest repeated token substring across the WHOLE corpus — the
     * question a suffix array answers via adjacent-rank LCPs, asked the
-    * Spark-first way: binary-search the answer length with O(log maxLen)
-    * linear gram probes ("does any `l`-token gram occur twice?"), then
-    * one witness pass at the found length. Each probe is one positional-
-    * shingle explode + a count≥2 hash agg — corpus-linear, shuffle only
-    * on gram keys — so the whole query is ~7 linear passes instead of
-    * the O(L·maxLen) all-length table the DuckDB oracle brute-forces
+    * Spark-first way: a k-ary search for the answer length ([[lrsSearch]])
+    * whose rounds each test [[lrsFan]] lengths in one corpus pass, then
+    * one exact string pass at the found length. A round is one typed
+    * pass over the checkpointed token hashes that emits (l, fingerprint)
+    * for every candidate l at every start position ([[gramFingerprints]])
+    * and a count≥2 hash agg on that key, so `[0, maxLen ≤ 100]` closes in
+    * two rounds — corpus-linear each, shuffle only on gram keys — instead
+    * of the O(L·maxLen) all-length table the DuckDB oracle brute-forces
     * (the near-dup contract: oracle exhaustive, engine sub-linear in the
-    * probe dimension). Probes compare gram STRINGS, not hashes: the
-    * search DECISIONS must be collision-free to match the oracle bit
-    * for bit (at 100 TB you would probe on the fused 8-byte
-    * gramXxHashes kernel and string-confirm only the final length).
+    * probe dimension).
     *
-    * Output: one row (lrs_len, gram, n_occurrences) — the length, the
-    * lexicographically smallest witness at that length (binary collation
-    * on both engines), and its positional occurrence count. ZERO rows if
-    * no token ever repeats. */
+    * The rounds compare 8-byte fingerprints, not gram strings: a round
+    * emits a gram at every start for each of its ten lengths, several
+    * times the gram tokens of one binary-search probe. Equal grams have
+    * equal fingerprints, so a round never misses a repeat; a collision
+    * can only overshoot, which the exact confirm (the string count≥2 agg
+    * at the found length) catches, and the search then reruns below it.
+    * The output is exact either way.
+    *
+    * (A gallop-then-binary-search bracket — probe 1,2,4,… before a binary
+    * phase so early probes avoid maxLen/2-token gram strings — lost its
+    * A/B: this corpus's planted near-dups make the answer close to the
+    * longest document, so doubling just DOUBLES the probe count at
+    * comparable per-probe cost; measured 2.5 → 7.2 s at sf0.1.)
+    *
+    * Output: a local relation of one row (lrs_len, gram, n_occurrences) —
+    * the length, the lexicographically smallest witness at that length
+    * (binary collation on both engines), and its positional occurrence
+    * count — collected while the relation is built, so reading it runs
+    * no job. ZERO rows if no token ever repeats. */
   def longestRepeatedSubstring(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    val toked = documents
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
+    import spark.implicits._
+    // spread ahead of the checkpoint: every round's kernel then runs on
+    // all cores (`doc_lrs` on 4 cores, fan 10: 1.02 → 0.98 s median of
+    // six job_chains runs at sf0.01; graft.Bench minimum at sf0.1
+    // 1.83–1.90 → 1.34–1.50 s)
+    val toked = spreadScan(documents)
+      .select(tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
+      .select(col("toks"), transform(col("toks"), t => xxhash64(t)).as("hs"))
       .localCheckpoint(false)
     val maxLen = toked.agg(max(size(col("toks")))).head() match {
       case r if r.isNullAt(0) => 0
       case r => r.getInt(0)
     }
-    def dupGrams(l: Int): DataFrame = toked
+    val hashes = toked.select(col("hs")).as[Array[Long]]
+    def repeats(ls: Seq[Int]): Int = {
+      val lens = ls.toArray
+      hashes.flatMap(hs => gramFingerprints(hs, lens)).toDF("l", "h")
+        .groupBy(col("l"), col("h")).count()
+        .filter(col("count") >= 2)
+        .select(col("l")).orderBy(col("l").desc).limit(1)
+        .as[Int].collect().headOption.getOrElse(0)
+    }
+    def confirm(l: Int): Option[(String, Long)] = toked
       .select(explode(positionalShingles(col("toks"), l)).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2)
-    // (A gallop-then-binary-search bracket — probe 1,2,4,… before the
-    // binary phase so early probes avoid maxLen/2-token gram strings —
-    // was A/B'd this round and REJECTED: this corpus's planted near-dups
-    // make the true answer hundreds of tokens, so doubling just DOUBLES
-    // the probe count at comparable per-probe cost; measured 2.5 → 7.2 s
-    // at sf0.1. Plain binary search over [0, maxLen] stands.)
-    var lo = 0
-    var hi = maxLen
-    while (lo < hi) {
-      val mid = (lo + hi + 1) / 2
-      if (!dupGrams(mid).isEmpty) lo = mid else hi = mid - 1
+      .orderBy(col("g").asc).limit(1)
+      .as[(String, Long)].collect().headOption
+    val rows = lrsSearch(maxLen, repeats, confirm).toSeq.map {
+      case (l, (g, c)) => org.apache.spark.sql.Row(l.toLong, g, c)
     }
-    if (lo == 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new org.apache.spark.sql.types.StructType()
-          .add("lrs_len", org.apache.spark.sql.types.LongType)
-          .add("gram", org.apache.spark.sql.types.StringType)
-          .add("n_occurrences", org.apache.spark.sql.types.LongType))
-    else
-      dupGrams(lo).orderBy(col("g").asc).limit(1)
-        .select(lit(lo.toLong).as("lrs_len"), col("g").as("gram"),
-          col("c").as("n_occurrences"))
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), new StructType()
+      .add("lrs_len", LongType, nullable = false)
+      .add("gram", StringType, nullable = false)
+      .add("n_occurrences", LongType, nullable = false))
+  }
+
+  /** Lengths one [[longestRepeatedSubstring]] round tests. Ten is the
+    * fewest that close `[0, 99]` in two rounds: a round leaves a bracket
+    * of at most ⌈width/fan⌉ − 1, so two rounds close any maxLen ≤
+    * fan·(fan + 1). A/B of `doc_lrs` wall on 4 cores, as the median of
+    * three `job_chains` runs at sf0.01 and the `graft.Bench` minimum of
+    * two runs at sf0.1, without the spread ahead of the checkpoint:
+    * fan 4 1.10 / 1.37–1.39 s (three rounds at sf0.01), fan 10 1.11 /
+    * 1.83–1.90 s, fan 16 1.13 / 2.20–2.59 s; with it (other seeds),
+    * fan 4 1.07 / 1.08–1.27 s and fan 10 0.97 / 1.34–1.50 s. A smaller
+    * fan carries less gram volume per round, which wins at sf0.1, but
+    * pays for its extra rounds in jobs at sf0.01. */
+  private[graft] val lrsFan = 10
+
+  /** The driver side of [[longestRepeatedSubstring]]: the longest length
+    * in [0, maxLen] with a repeat, and its witness. `repeats(ls)` is the
+    * largest of the ascending lengths `ls` at which some fingerprint
+    * occurs twice, or 0; `confirm(l)` checks length l exactly. Each round
+    * tests [[lrsFan]] evenly spaced lengths up to `hi` and keeps the
+    * bracket from the largest repeating one to just below the next. A
+    * fingerprint test never misses a real repeat, so the answer never
+    * exceeds `hi`; a collision can push `lo` above it, and then the
+    * confirm fails and the search reruns below the rejected length. */
+  private[graft] def lrsSearch[W](maxLen: Int, repeats: Seq[Int] => Int,
+                                  confirm: Int => Option[W]): Option[(Int, W)] = {
+    @annotation.tailrec
+    def narrow(lo: Int, hi: Int): Int =
+      if (lo >= hi) lo
+      else {
+        val step = (hi - lo + lrsFan - 1) / lrsFan
+        val ls = ((lo + step) until hi by step) :+ hi
+        val f = math.max(lo, repeats(ls))
+        narrow(f, ls.find(_ > f).fold(hi)(_ - 1))
+      }
+    @annotation.tailrec
+    def search(hi: Int): Option[(Int, W)] = narrow(0, hi) match {
+      case 0 => None
+      case l => confirm(l) match {
+        case Some(w) => Some((l, w))
+        case None => search(l - 1)
+      }
+    }
+    search(maxLen)
+  }
+
+  /** Odd multiplier of the rolling gram fingerprint. */
+  private val gramBase = 0x9E3779B97F4A7C15L
+
+  /** (l, fingerprint) of every l-token gram of one document, for each of
+    * the ascending lengths `ls`, from its token hashes `hs` (xxhash64).
+    * The fingerprint is the rolling `h·B + hash(token)` over 2⁶⁴, read off
+    * the prefix values P as P(i + l) − P(i)·Bˡ, so each (start, length)
+    * costs O(1) and no gram string is built. */
+  private def gramFingerprints(hs: Array[Long], ls: Array[Int]): Iterator[(Int, Long)] = {
+    val n = hs.length
+    val p = new Array[Long](n + 1)
+    var i = 0
+    while (i < n) { p(i + 1) = p(i) * gramBase + hs(i); i += 1 }
+    ls.iterator.takeWhile(_ <= n).flatMap { l =>
+      var bl = 1L
+      var k = 0
+      while (k < l) { bl *= gramBase; k += 1 }
+      Iterator.range(0, n - l + 1).map(s => (l, p(s + l) - p(s) * bl))
+    }
   }
 
   /** Unigram-LM subword segmentation (the SentencePiece/Kudo 2018 model

@@ -1538,6 +1538,55 @@ class TextOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("lrs search: a fingerprint collision costs a rerun, never a wrong answer") {
+    // fakes: the true answer `t` repeats at every length up to t, and the
+    // fingerprint probe also reports the lengths in `fake`, which the
+    // exact confirm rejects
+    def run(maxLen: Int, t: Int, fake: Set[Int]) = {
+      var rounds = 0
+      var confirms = 0
+      val got = TextOps.lrsSearch[String](maxLen,
+        ls => { rounds += 1; ls.filter(l => l <= t || fake(l)).maxOption.getOrElse(0) },
+        l => { confirms += 1; if (l <= t) Some(s"w$l") else None })
+      (got, rounds, confirms)
+    }
+    // no collision: every answer in [0, 99] closes in at most two rounds
+    // and one confirm, and a corpus with no repeat needs no confirm
+    for (t <- 0 to 99) {
+      val (got, rounds, confirms) = run(99, t, Set.empty)
+      assert(got == (if (t == 0) None else Some((t, s"w$t"))), s"t=$t")
+      assert(rounds <= 2 && confirms == (if (t == 0) 0 else 1), s"t=$t: $rounds, $confirms")
+    }
+    // a collision at a first-round length above the answer: the confirm
+    // rejects it and the search reruns below it
+    val (g1, r1, c1) = run(99, 57, Set(90))
+    assert(g1 == Some((57, "w57")) && c1 == 2 && r1 > 2, (g1, r1, c1))
+    // ...at a second-round length
+    val (g2, _, c2) = run(99, 92, Set(95))
+    assert(g2 == Some((92, "w92")) && c2 == 2, (g2, c2))
+    // ...and a corpus whose only "repeats" are collisions gives no row
+    assert(run(99, 0, Set(40, 99))._1.isEmpty)
+    // every answer, under collisions at any lengths above it
+    val rnd = new scala.util.Random(7)
+    for (maxLen <- Seq(0, 1, 2, 11, 100, 250); t <- 0 to maxLen) {
+      val fake = Set.fill(3)(t + 1 + rnd.nextInt(maxLen - t + 1)).filter(_ <= maxLen)
+      assert(run(maxLen, t, fake)._1 == (if (t == 0) None else Some((t, s"w$t"))),
+        s"maxLen=$maxLen t=$t fake=$fake")
+    }
+  }
+
+  test("longest repeated substring: a bounded construction job chain, and a result that runs no job") {
+    // the spread checkpoint, the max length, two rounds of two jobs and
+    // the exact confirm: a return to one probe per binary-search step
+    // (16 jobs at sf0.001) fails this bound
+    var lrs: org.apache.spark.sql.DataFrame = null
+    val jobs = JobCount(spark) { lrs = TextOps.longestRepeatedSubstring(docs) }
+    assert(jobs <= 9, s"$jobs construction jobs")
+    var rows: Array[org.apache.spark.sql.Row] = null
+    assert(JobCount(spark) { rows = lrs.collect() } == 0)
+    assert(rows.length == 1)
+  }
+
   test("Kneser-Ney bigram: hand-computed fixture, exact to the 1e-4 grid") {
     import spark.implicits._
     // corpus "a b a b c" + "z": c12 = {ab:2, ba:1, bc:1}
