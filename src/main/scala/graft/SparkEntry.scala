@@ -823,10 +823,10 @@ object SparkEntry {
     // sorts instead of global windows, O(log maxDocLen) rounds
     "doc_suffix_ranks" -> ((s, dir) =>
       TextOps.suffixRanks(Tables.documents(s, dir))),
-    // ...the LCP array over that permutation (r9 verdict #7 — the Lee et
-    // al. pipeline's second half): adjacent-rank pairs by dense-rank
-    // equi-join, cap-bounded suffix slices, closed-form first-mismatch
-    // LCP on both engines
+    // ...the LCP array over that permutation (the Lee et al. pipeline's
+    // second half): adjacent-rank pairs by dense-rank equi-join,
+    // cap-bounded suffix slices, closed-form first-mismatch LCP on both
+    // engines
     "doc_lcp" -> ((s, dir) => lcpRel(s, dir)),
     // ...and the dedup DECISION: maximal per-doc duplicated intervals
     // (lcp >= 8 pairs mark both sides, islands-merge per doc) — exact

@@ -33,7 +33,8 @@ object TextOps {
     * retry-deterministic), skipped when the scan already spans the
     * cluster, so at 100 TB the plan is unchanged. Applied ONLY to
     * operators where a full-run A/B won (doc_kn_logprob,
-    * doc_block_dedup, doc_bloom_decontaminate, doc_lrs): a blanket
+    * doc_block_dedup, doc_bloom_decontaminate, doc_lrs,
+    * doc_suffix_ranks): a blanket
     * reader-level spread measurably HURT iterative/multi-reference
     * operators (see Tables.read and OPTIMIZATION_r16.md). */
   private def spreadScan(documents: DataFrame): DataFrame =
@@ -3293,54 +3294,73 @@ object TextOps {
 
   // ---------------------------------------------- suffix array (prefix doubling)
 
-  /** Sorted runs of `key`, without the single-partition window a global
-    * row number plans: range-partition `df` by the key (equal keys share
-    * a partition), sort within partitions and checkpoint, collect the P
-    * per-partition (rows, Σ weight) totals, then one pass emits every row
-    * with the rows (`before`) and the weight (`wbefore`) of all rows of a
-    * smaller key, and the size of its run of equal keys (`run`). A run is
-    * buffered while it is counted, so a task holds at most the largest
-    * run. Keys compare in their binary row form, the equality Spark's
-    * own grouping uses. Output: the `carry` columns as longs, then
-    * before, wbefore, run — a pure function of the data, never of the
-    * partitioning. */
-  private def sortedRuns(df: DataFrame, key: Column, weight: Column,
-                         carry: Seq[String]): DataFrame = {
+  /** Corpus totals the [[seedRanks]] pass collects: positions, sentinels
+    * (one per document), the longest document in positions (sentinel
+    * included), and the positions in runs of at least two equal keys
+    * (the first round's contested rows). */
+  private case class SeedTotals(rows: Long, sentinels: Long, maxLen: Long, tied: Long)
+
+  /** The seed pass of [[suffixRanks]]: sorted runs of `key` over
+    * `positions` (key, doc_id, pos, len), without the single-partition
+    * window a global row number plans. Range-partition by the key (equal
+    * keys share a partition, so runs never span partitions), sort within
+    * partitions and checkpoint, collect the P per-partition
+    * [[SeedTotals]], then one pass emits every position with r = 1 + the
+    * rows of a smaller key and gs = the size of its run of equal keys. A
+    * run is buffered while it is counted, so a task holds at most the
+    * largest run. Keys compare in their binary row form, the equality
+    * Spark's own grouping uses. Output: (doc_id, pos, len, r, gs) as
+    * longs — a pure function of the data, never of the partitioning. */
+  private def seedRanks(positions: DataFrame): (DataFrame, SeedTotals) = {
     import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val sorted = df.select(struct(key).as("key") +: weight.cast("long").as("w")
-        +: carry.map(c => col(c).cast("long")): _*)
+    val sorted = positions.select(col("key"), col("doc_id"), col("pos"), col("len"))
       .repartitionByRange(col("key"))
       .sortWithinPartitions(col("key"))
       .localCheckpoint(false)
     val rows = sorted.queryExecution.toRdd
-    val offs = rows
+    val perPart = rows
       .mapPartitionsWithIndex { (pid, it) =>
-        var n = 0L; var w = 0L
-        it.foreach { r => n += 1; w += r.getLong(1) }
-        Iterator((pid, n, w))
+        var n, sentinels, maxLen, tied, run = 0L
+        var prev: InternalRow = null
+        it.foreach { r =>
+          val k = r.getStruct(0, 2)
+          if (prev != null && k == prev) run += 1
+          else { if (run > 1) tied += run; run = 1; prev = k.copy() }
+          val len = r.getLong(3)
+          n += 1
+          if (r.getLong(2) == len - 1) sentinels += 1
+          maxLen = math.max(maxLen, len)
+        }
+        if (run > 1) tied += run
+        Iterator((pid, SeedTotals(n, sentinels, maxLen, tied)))
       }
-      .collect().sortBy(_._1)
-      .scanLeft((0L, 0L)) { case ((n, w), (_, pn, pw)) => (n + pn, w + pw) }
-    val nc = carry.size
-    val runs = rows.mapPartitionsWithIndex { (pid, it) =>
+      .collect().sortBy(_._1).map(_._2)
+    val totals = perPart.foldLeft(SeedTotals(0L, 0L, 0L, 0L)) { (a, b) =>
+      SeedTotals(a.rows + b.rows, a.sentinels + b.sentinels,
+        math.max(a.maxLen, b.maxLen), a.tied + b.tied)
+    }
+    val offs = perPart.scanLeft(0L)(_ + _.rows)
+    val ranked = rows.mapPartitionsWithIndex { (pid, it) =>
       val in = it.buffered
-      var (n, w) = offs(pid)
+      var n = offs(pid)
       Iterator.continually(()).takeWhile(_ => in.hasNext).flatMap { _ =>
-        val k = in.head.getStruct(0, 1).copy()
-        val (n0, w0) = (n, w)
-        val run = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
-        while (in.hasNext && in.head.getStruct(0, 1) == k) {
-          val r = in.next()
-          w += r.getLong(1)
-          run += (2 until 2 + nc).map(r.getLong)
+        val k = in.head.getStruct(0, 2).copy()
+        val r = n + 1
+        val run = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+        while (in.hasNext && in.head.getStruct(0, 2) == k) {
+          val x = in.next()
+          run += ((x.getLong(1), x.getLong(2), x.getLong(3)))
         }
         n += run.size
-        run.iterator.map(v => Row.fromSeq(v ++ Seq(n0, w0, run.size.toLong)))
+        run.iterator.map { case (d, p, l) => Row(d, p, l, r, run.size.toLong) }
       }
     }
-    df.sparkSession.createDataFrame(runs, StructType(
-      (carry ++ Seq("before", "wbefore", "run")).map(StructField(_, LongType, nullable = false))))
+    val base = positions.sparkSession.createDataFrame(ranked, StructType(
+        Seq("doc_id", "pos", "len", "r", "gs").map(StructField(_, LongType, nullable = false))))
+      .localCheckpoint(false)
+    (base, totals)
   }
 
   /** Distributed suffix-array construction over the WHOLE corpus by
@@ -3348,16 +3368,20 @@ object TextOps {
     * 1990; the Lee et al. 2022 exact-substring-dedup core primitive,
     * built the way a cluster has to build it — iterated group-local
     * refinement, NOT the sequential DC3/SA-IS scan a single machine would
-    * use). Token-level, corpus concatenated in doc_id order with one
-    * UNIQUE per-doc sentinel (ranked below every token, by doc ordinal),
-    * so every suffix is distinct, comparisons never leak meaning across
-    * a document boundary, and the final ranks are a permutation.
+    * use). Token-level: every document ends in one UNIQUE sentinel
+    * (ranked below every token, sentinels in doc_id order), so every
+    * suffix is distinct, comparisons never leak meaning across a document
+    * boundary, and the final ranks are a permutation. A position is keyed
+    * by (doc_id, pos); doc_id is the documents key, and a document whose
+    * doc_id is null has no key, so it contributes no suffixes.
     *
     * Rank representation is the BUCKET START — tied suffixes share
     * r = 1 + (number of positions provably smaller). The seed ranks
     * every position by its first [[seedTokens]] symbols in ONE sorted
-    * pass ([[sortedRuns]] over a (token window, doc ordinal) key), so
-    * doubling starts at step = seedTokens. Each doubling round is then
+    * pass ([[seedRanks]] over a (token window, doc_id) key), whose
+    * totals collect also yields the document count, the longest document
+    * and the first round's contested count, so doubling starts at
+    * step = seedTokens with no other pass. Each doubling round is then
     * GROUP-LOCAL: a tie group refines by the rank `step` positions ahead
     * (r₂), new r = r + rank-within-group(r₂), and every other rank is
     * untouched. Settled rows (group size 1) leave the loop permanently
@@ -3369,6 +3393,13 @@ object TextOps {
     * ceil(log2(maxDocLen / seedTokens)) rounds: sentinels bound every
     * within-document tie.
     *
+    * Partners never leave their document. Tied windows are sentinel-free
+    * (a window holding a sentinel is unique), so a contested row's
+    * partner pos + step lies inside its own document: each round is one
+    * measured-size-gated broadcast INNER join of the contested rows
+    * against the rank lookup on (doc_id, pos), plus two windows over one
+    * exchange; localCheckpoint truncates per-round lineage.
+    *
     * Bounds: the seed key holds at most seedTokens tokens per position,
     * so the sort's key bytes stay within seedTokens × the corpus, and
     * the whole build within O(L log maxLen). A run of equal seed keys is
@@ -3376,13 +3407,6 @@ object TextOps {
     * tie group: both are bounded by the largest group of identical
     * seedTokens-token prefixes, so a degenerate single-token corpus would
     * serialize into one task (the hot bucket of any bucket algorithm).
-    * Each round is one measured-size-gated broadcast join of the
-    * contested rows against the shifted rank lookup (partner absent ⇔
-    * gpos+step ≥ L, decided arithmetically — positions are dense — so the
-    * join stays INNER and broadcastable) plus two windows over one
-    * exchange; localCheckpoint truncates per-round lineage. The missing-
-    * partner rank 0 is never tie-breaking: equal r means both windows are
-    * sentinel-free, so both partners exist.
     *
     * Output: (doc_id, pos, suffix_rank) for every TOKEN position —
     * suffix_rank ∈ 1..Ntokens densely (sentinel suffixes, the lowest
@@ -3396,8 +3420,13 @@ object TextOps {
     * running more rounds). */
   def suffixRanks(documents: DataFrame): DataFrame = {
     // the tokenization is cached while the ranks are built; released
-    // before returning, by which point the result reads only checkpoints
-    val toked = tokedDocs(documents)
+    // before returning, by which point the result reads only checkpoints.
+    // Spread first: a one-split scan ran the seed sort's range sample and
+    // shuffle write in one task each. A/B in perfbench job_chains (4
+    // cores, seeds 501–508, alternating): doc_suffix_ranks median 1.52 →
+    // 1.37 s, faster in 8 of 8 pairs, for one more build job (the
+    // exchange) and cpu_s 6.96 → 7.21 s
+    val toked = tokedDocs(spreadScan(documents))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try suffixRanksToked(toked)
     finally toked.unpersist(blocking = false)
@@ -3421,60 +3450,45 @@ object TextOps {
   private[graft] val seedTokens = 16
 
   /** [[suffixRanks]] over a PRE-TOKENIZED (ideally cached) relation: the
-    * build reads `toked` twice (the length aggregate and the seed key)
-    * and [[suffixLcp]] a third time for its slices. MEMORY_AND_DISK: the
-    * tokenized corpus is corpus-sized, so the cache must spill, never
-    * OOM, at scale. */
+    * seed pass reads `toked` twice (its range sample and its shuffle
+    * write) and [[suffixLcp]] a third time for its slices.
+    * MEMORY_AND_DISK: the tokenized corpus is corpus-sized, so the cache
+    * must spill, never OOM, at scale. */
   private def suffixRanksToked(toked: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = toked.sparkSession
-    val lens = toked.select(col("doc_id"),
-      (size(col("toks")) + 1).cast("long").as("len"))
-    // empty corpus: the aggregates come back NULL — return the empty
-    // result instead of tripping a primitive-extraction NPE
-    val aggRow = lens.agg(max(col("len")), sum(col("len")), count(lit(1))).head()
-    if (aggRow.isNullAt(0))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new org.apache.spark.sql.types.StructType()
-          .add("doc_id", org.apache.spark.sql.types.LongType)
-          .add("pos", org.apache.spark.sql.types.IntegerType)
-          .add("suffix_rank", org.apache.spark.sql.types.LongType))
-    val (maxLen, totalL, nd) =
-      (aggRow.getLong(0), aggRow.getLong(1), aggRow.getLong(2))
-    // in doc_id order: the doc ordinal (docs before) and the offset of
-    // its first position (positions before)
-    val docs = sortedRuns(lens, col("doc_id"), col("len"), Seq("doc_id"))
-      .select(col("doc_id"), col("before").as("ord"), col("wbefore").as("off"))
-    // every position i ∈ 0..size(toks), i = size being the sentinel, keyed
-    // by its first seedTokens symbols: the tokens, and the doc ordinal
-    // when the sentinel falls inside the window. Array order (a shorter
-    // prefix first) then puts a sentinel below every token and orders
-    // sentinels by doc, so a run start is the position's bucket-start rank
-    val positions = toked.join(docs, "doc_id")
-      .select(col("doc_id"), col("toks"), col("ord"), col("off"),
+    // every position pos ∈ 0..size(toks) of a document with a doc_id,
+    // pos = size being the sentinel, keyed by its first seedTokens
+    // symbols: the tokens, and the doc_id when the sentinel falls inside
+    // the window. Array order (a shorter prefix first) then puts a
+    // sentinel below every token and orders sentinels by doc_id, so a run
+    // start is the position's bucket-start rank
+    val positions = toked.filter(col("doc_id").isNotNull)
+      .select(col("doc_id"), col("toks"),
         explode(sequence(lit(0), size(col("toks")))).as("i"))
-      .withColumn("gpos", col("off") + col("i"))
-    val base = sortedRuns(positions,
+      .select(
         struct(slice(col("toks"), col("i") + 1, lit(seedTokens)),
-          when(col("i") + seedTokens > size(col("toks")), col("ord"))),
-        lit(1L), Seq("doc_id", "i", "gpos"))
-      .select(col("doc_id"), col("i").cast("int").as("pos"), col("gpos"),
-        (col("before") + 1L).as("r"), col("run").as("gs"))
-      .localCheckpoint(false)
-
+          when(col("i") + seedTokens > size(col("toks")), col("doc_id"))).as("key"),
+        col("doc_id").cast("long").as("doc_id"), col("i").cast("long").as("pos"),
+        (size(col("toks")) + 1).cast("long").as("len"))
+    // an empty corpus has maxLen 0: no round runs and the result is empty
+    val (base, seed) = seedRanks(positions)
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var live = base.select(col("gpos"), col("r"), col("gs"))
+    var live = base
+    var n = seed.tied
     var step = seedTokens.toLong
     var exhausted = false
-    while (!exhausted && step < maxLen) {
-      parts += live.filter(col("gs") === 1L).select(col("gpos"), col("r"))
+    while (!exhausted && step < seed.maxLen) {
+      parts += live.filter(col("gs") === 1L).select(col("doc_id"), col("pos"), col("r"))
       val cont = live.filter(col("gs") > 1L)
-      val n = cont.count() // materializes this round's checkpoint
+      // rank lookup = everything settled so far + the contested rows'
+      // current ranks (all disjoint by (doc_id, pos))
+      val lookup = (parts.toSeq :+ cont.select(col("doc_id"), col("pos"), col("r")))
+        .reduce(_ unionByName _)
+        .select(col("doc_id"), col("pos").as("ahead"), col("r").as("rv"))
       // offsets needed to cover the whole remaining suffix in one
       // composite key: blocks at +step·k for k = 1..kMax, where
       // (kMax+1)·step ≥ maxLen
-      val kMax = ((maxLen - 1) / step).toInt
+      val kMax = ((seed.maxLen - 1) / step).toInt
       if (n == 0) exhausted = true
       // the gate as measured on the seeded build: the first round runs at
       // step 16 with kMax 6 (documents of ≤100 tokens) and n = 1,733 of
@@ -3489,27 +3503,19 @@ object TextOps {
         // makes every composite distinct, so every row settles. Bounds:
         // ≤16 sort columns and n·kMax ≤ 1.6M broadcast probe rows; when
         // docs are long relative to step the branch does not fire yet
-        // and doubling continues.
-        val lookup = (parts.toSeq :+ cont.select(col("gpos"), col("r")))
-          .reduce(_ unionByName _)
-          .select(col("gpos").as("ahead"), col("r").as("rv"))
-        val probes = cont.select(col("gpos"), col("r"),
+        // and doubling continues. A block past the document's end has no
+        // partner and pivots to null (below every rank); it never
+        // decides the order, because two composites differ at or before
+        // the first block that holds a sentinel, whose partner exists.
+        // Block 1 always has its partner, so every contested row is kept.
+        val probes = cont.select(col("doc_id"), col("pos"), col("len"), col("r"),
             explode(array((1 to kMax).map(k => lit(k.toLong)): _*)).as("k"))
-          .withColumn("ahead", col("gpos") + col("k") * step)
-        val hit = broadcast(probes.filter(col("ahead") < totalL))
-          .join(lookup, Seq("ahead"))
-          .select(col("gpos"), col("r"), col("k"), col("rv"))
-        // partner absent ⇔ gpos + k·step ≥ L, decided arithmetically;
-        // rank 0 (sorts below every real rank) is provably never
-        // tie-breaking — a suffix whose blocks reach the corpus end
-        // contains the FINAL sentinel in an earlier block, which is
-        // unique, so the composites differ before the 0
-        val miss = probes.filter(col("ahead") >= totalL)
-          .select(col("gpos"), col("r"), col("k"), lit(0L).as("rv"))
+          .withColumn("ahead", col("pos") + col("k") * step)
+          .filter(col("ahead") < col("len"))
         val pivotAggs = (1 to kMax).map(k =>
           max(when(col("k") === k.toLong, col("rv"))).as(s"rk$k"))
-        val paired = hit.unionByName(miss)
-          .groupBy(col("gpos"), col("r"))
+        val paired = broadcast(probes).join(lookup, Seq("doc_id", "ahead"))
+          .groupBy(col("doc_id"), col("pos"), col("r"))
           .agg(pivotAggs.head, pivotAggs.tail: _*)
         val wFull = Window.partitionBy(col("r"))
           .orderBy((1 to kMax).map(k => col(s"rk$k")): _*)
@@ -3519,7 +3525,7 @@ object TextOps {
         // alone would turn into duplicate final ranks, kills the job.
         val rnk = rank().over(wFull)
         val rn = row_number().over(wFull)
-        parts += paired.select(col("gpos"),
+        parts += paired.select(col("doc_id"), col("pos"),
           (col("r") + when(rnk === rn, rn).otherwise(raise_error(concat(
             lit("suffixRanks full-resolve invariant violated: composite "),
             lit("key tie within rank group "), col("r"),
@@ -3528,43 +3534,35 @@ object TextOps {
         exhausted = true
       }
       else {
-        // rank lookup = everything settled so far + the contested rows'
-        // current ranks (all disjoint by gpos); the contested side
-        // broadcasts once it is measurably small, so the lookup STREAMS
-        // (checkpoint-block scans, no shuffle) in the tail rounds
-        val lookup = (parts.toSeq :+ cont.select(col("gpos"), col("r")))
-          .reduce(_ unionByName _)
-          .select(col("gpos").as("ahead"), col("r").as("r2"))
-        val shifted = cont.select(col("gpos"), col("r"),
-          (col("gpos") + step).as("ahead"))
-        val contSide =
-          if (n < 2000000L) broadcast(shifted.filter(col("ahead") < totalL))
-          else shifted.filter(col("ahead") < totalL)
-        val joined = contSide.join(lookup, Seq("ahead"))
-          .select(col("gpos"), col("r"), col("r2"))
-        val ends = shifted.filter(col("ahead") >= totalL)
-          .select(col("gpos"), col("r"), lit(0L).as("r2"))
-        val paired = joined.unionByName(ends)
+        // the contested side broadcasts once it is measurably small, so
+        // the lookup STREAMS (checkpoint-block scans, no shuffle) in the
+        // tail rounds
+        val shifted = cont.select(col("doc_id"), col("pos"), col("len"), col("r"),
+          (col("pos") + step).as("ahead"))
+        val contSide = if (n < 2000000L) broadcast(shifted) else shifted
+        val paired = contSide.join(lookup, Seq("doc_id", "ahead"))
         // ONE exchange for both window functions: the new group size is
-        // the peer count under the SAME (r)-partitioned, r2-ordered sort
+        // the peer count under the SAME (r)-partitioned, rv-ordered sort
         // — a peers-only RANGE frame — instead of a second shuffle on
-        // (r, r2)
-        val wRank = Window.partitionBy(col("r")).orderBy(col("r2"))
+        // (r, rv)
+        val wRank = Window.partitionBy(col("r")).orderBy(col("rv"))
         val wPeers = wRank.rangeBetween(Window.currentRow, Window.currentRow)
-        live = paired.select(col("gpos"),
+        live = paired.select(col("doc_id"), col("pos"), col("len"),
             (col("r") + rank().over(wRank) - lit(1L)).as("r"),
             count(lit(1)).over(wPeers).as("gs"))
           .localCheckpoint(false)
+        n = live.filter(col("gs") > 1L).count() // materializes the checkpoint
         step <<= 1
       }
     }
     // step >= maxLen: remaining groups are unique by the sentinel bound
-    if (!exhausted) parts += live.select(col("gpos"), col("r"))
-    // the lowest nd ranks are the sentinels
-    base.select(col("doc_id"), col("pos"), col("gpos"))
-      .join(parts.reduce(_ unionByName _), "gpos")
+    if (!exhausted) parts += live.select(col("doc_id"), col("pos"), col("r"))
+    // the lowest ranks are the sentinels
+    val nd = seed.sentinels
+    parts.reduce(_ unionByName _)
       .filter(col("r") > nd)
-      .select(col("doc_id"), col("pos"), (col("r") - nd).as("suffix_rank"))
+      .select(col("doc_id"), col("pos").cast("int").as("pos"),
+        (col("r") - nd).as("suffix_rank"))
   }
 
   /** LCP ARRAY over [[suffixRanks]] — the second half of the Lee et al.
@@ -3595,9 +3593,9 @@ object TextOps {
   def suffixLcp(documents: DataFrame, cap: Int = 64): DataFrame = {
     require(cap >= 1 && cap <= 512, s"cap in [1,512], got $cap")
     // one tokenization, cached while suffixRanksToked runs its jobs
-    // (the length aggregate and the seed key read it). The unpersist in
-    // the finally fires at plan-CONSTRUCTION time, before any caller
-    // materializes the returned relation, so the slice join below pays
+    // (the seed sort's range sample and shuffle write read it). The
+    // unpersist in the finally fires at plan-CONSTRUCTION time, before any
+    // caller materializes the returned relation, so the slice join below pays
     // one re-tokenization pass when the LCP artifact is first
     // materialized: there is no lazy hook to release the cache after an
     // action the caller owns.
