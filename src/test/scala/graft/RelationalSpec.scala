@@ -448,6 +448,42 @@ class RelationalSpec extends AnyFunSuite {
     }
   }
 
+  test("scd2Incremental edge rows: null ts dropped, null event_type runs, null user_id, ts ties") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    def ts(s: String) = Timestamp.valueOf(s)
+    val events = Seq[(Long, Timestamp, Option[Long], String)](
+      // user 1: a null continues the view run; the view after it opens a
+      // new run; the row without a ts belongs to no slice
+      (1L, ts("2024-01-01 10:00:00"), Some(1L), "view"),
+      (2L, ts("2024-01-01 10:05:00"), Some(1L), null),
+      (3L, ts("2024-01-01 10:10:00"), Some(1L), "view"),
+      (4L, null, Some(1L), "click"),
+      // user 2: equal ts, event_id orders view before click
+      (6L, ts("2024-01-01 11:00:00"), Some(2L), "click"),
+      (5L, ts("2024-01-01 11:00:00"), Some(2L), "view"),
+      // user 3: a null after a null starts a new run
+      (9L, ts("2024-01-01 10:20:00"), Some(3L), null),
+      (10L, ts("2024-01-01 10:25:00"), Some(3L), null),
+      // no user_id: one group
+      (7L, ts("2024-01-01 12:00:00"), None, "view"),
+      (8L, ts("2024-01-01 12:30:00"), None, "view")
+    ).toDF("event_id", "ts", "user_id", "event_type")
+    val got = graft.operators.Incremental.scd2Incremental(events).collect()
+      .map(r => (Option(r.getAs[java.lang.Long]("user_id")).map(_.longValue),
+        r.getAs[String]("event_type"), r.getAs[Timestamp]("valid_from"),
+        r.getAs[Timestamp]("valid_to"), r.getAs[Long]("n_events"),
+        r.getAs[Boolean]("is_current")))
+    assert(got.sortBy(r => (r._1.getOrElse(Long.MinValue), r._3.getTime)).toSeq == Seq(
+      (None, "view", ts("2024-01-01 12:00:00"), null, 2L, true),
+      (Some(1L), "view", ts("2024-01-01 10:00:00"), ts("2024-01-01 10:10:00"), 2L, false),
+      (Some(1L), "view", ts("2024-01-01 10:10:00"), null, 1L, true),
+      (Some(2L), "view", ts("2024-01-01 11:00:00"), ts("2024-01-01 11:00:00"), 1L, false),
+      (Some(2L), "click", ts("2024-01-01 11:00:00"), null, 1L, true),
+      (Some(3L), null, ts("2024-01-01 10:20:00"), ts("2024-01-01 10:25:00"), 1L, false),
+      (Some(3L), null, ts("2024-01-01 10:25:00"), null, 1L, true)))
+  }
+
   test("histogram-sketch quantiles land within one bucket width of exact") {
     val events = Tables.events(spark, dir)
     val buckets = 256
