@@ -82,99 +82,71 @@ object Incremental {
   /** Batch replay of the STREAMING SCD Type-2 fold
     * ([[graft.streaming.StreamingEtl.scd2Streaming]]), proving stream ≡
     * batch on real data: events are cut into `slices` consecutive
-    * event-time ranges (the micro-batches), and the per-user open run —
-    * the streaming operator's ENTIRE state, (event_type, valid_from,
-    * n_events) — is threaded across slices as one weighted pseudo-event
-    * (ts = valid_from, weight = n_events, event_id = Long.MinValue so it
-    * sorts before every real event in its slice). Each slice re-runs the
-    * run-length machinery of [[Relational.scd2UserState]] with weighted
-    * counts; runs that close inside the slice are final output, the open
-    * run becomes the next slice's carry. Because slices are cut by global
-    * event time, per-user delivery is in order — exactly the streaming
-    * contract — and the fold's closed+open union equals the one-shot
+    * event-time ranges (the micro-batches), and each user's rows are fed
+    * to the stream's own per-user step
+    * ([[graft.streaming.StreamingEtl.scd2Fold]]) one slice at a time, the
+    * open run — the streaming operator's ENTIRE state — threaded from
+    * slice to slice. Because slices are cut by global event time,
+    * per-user delivery is in order — exactly the streaming contract — so
+    * the closed runs plus each user's last open run equal the one-shot
     * dimension build row for row. The driver proves it by hash-matching
     * `user_scd2_incremental` against the SAME oracle SQL as `user_scd2`.
     *
-    * The slice boundaries come from one min/max agg over the ts column —
-    * a 1-row collect (metadata-scale; at 100 TB the same two numbers are
-    * free from parquet footer statistics).
+    * Shape: one hash exchange on user_id, a sort on (user_id, ts,
+    * event_id) within each partition, and a streaming fold over the
+    * sorted rows that emits each run when it closes and the open run at
+    * the end of its user. A row without a ts lies in no slice and is
+    * dropped; a null user_id is one user. The slice bounds come from one
+    * min/max agg over the ts column — a 1-row collect (metadata-scale; at
+    * 100 TB the same two numbers are free from parquet footer
+    * statistics).
     */
   def scd2Incremental(events: DataFrame, slices: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    import graft.streaming.StreamingEtl.{scd2Fold, tsToUs, usToTs}
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types._
     val ev = events.select(
       col("user_id"), col("event_type"), col("ts"), col("event_id"))
     val bounds = ev.agg(min(col("ts")), max(col("ts"))).head()
-    if (bounds.isNullAt(0)) { // empty input: nothing to slice, nothing open
-      return events.sparkSession.createDataFrame(
-        events.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("user_id",
-            events.schema("user_id").dataType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("valid_from",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("valid_to",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("n_events",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("is_current",
-            org.apache.spark.sql.types.BooleanType, nullable = false))))
-    }
-    val (lo, hi) = (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
-    val span = math.max(1L, (hi - lo) / slices + 1) // ms; last slice inclusive
-
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ws = Window.partitionBy(col("user_id")).orderBy(col("seg").asc)
-
-    var state: DataFrame = null // open runs: user_id, event_type, valid_from, n_events
-    val closed = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    for (i <- 0 until slices) {
-      val sliceLo = lit(new java.sql.Timestamp(lo + i * span))
-      val sliceHi = lit(new java.sql.Timestamp(lo + (i + 1) * span))
-      val slice = ev
-        .filter(col("ts") >= sliceLo && col("ts") < sliceHi)
-        .withColumn("wt", lit(1L))
-      val withCarry =
-        if (state == null) slice
-        else state.select(
-          col("user_id"), col("event_type"), col("valid_from").as("ts"),
-          lit(Long.MinValue).as("event_id"), col("n_events").as("wt"))
-          .unionByName(slice)
-      val runs = withCarry
-        .withColumn("chg",
-          when(lag(col("event_type"), 1).over(w).isNull ||
-            lag(col("event_type"), 1).over(w) =!= col("event_type"), 1L)
-            .otherwise(0L))
-        .withColumn("seg", sum(col("chg")).over(run))
-        .groupBy(col("user_id"), col("seg"))
-        .agg(
-          min(col("event_type")).as("event_type"),
-          min(col("ts")).as("valid_from"),
-          sum(col("wt")).as("n_events"))
-        .withColumn("valid_to", lead(col("valid_from"), 1).over(ws))
-        // checkpoint each slice's runs (round-17): `runs` is referenced by
-        // BOTH the slice's closed output and the next slice's carry, and the
-        // carry chains — without the barrier slice 1's window machinery
-        // appears ~2^slices times in the final plan. Materializing here is
-        // exactly what the streaming original does with its per-batch state
-        // store; the rows are run-segment scale (≤ users × segments).
-        // never released early: `closed`'s final union reads this unrecomputable block
-        .localCheckpoint(true)
-      closed += runs.filter(col("valid_to").isNotNull)
-        .select(col("user_id"), col("event_type"), col("valid_from"),
-          col("valid_to"), col("n_events"), lit(false).as("is_current"))
-      state = runs.filter(col("valid_to").isNull)
-        .select(col("user_id"), col("event_type"), col("valid_from"),
-          col("n_events"))
-    }
-    val open = state.select(
-      col("user_id"), col("event_type"), col("valid_from"),
-      lit(null).cast("timestamp").as("valid_to"), col("n_events"),
-      lit(true).as("is_current"))
-    closed.reduce(_.unionByName(_)).unionByName(open)
+    // no ts at all: every row is dropped below, any bounds will do
+    val (lo, hi) =
+      if (bounds.isNullAt(0)) (0L, 0L)
+      else (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
+    val spanUs = math.max(1L, (hi - lo) / slices + 1) * 1000L // last slice inclusive
+    val loUs = lo * 1000L
+    def slice(r: Row): Long = Math.floorDiv(tsToUs(r.getTimestamp(2)) - loUs, spanUs)
+    val out = StructType(Seq(
+      StructField("user_id", ev.schema("user_id").dataType),
+      StructField("event_type", StringType),
+      StructField("valid_from", TimestampType),
+      StructField("valid_to", TimestampType),
+      StructField("n_events", LongType, nullable = false),
+      StructField("is_current", BooleanType, nullable = false)))
+    ev.filter(col("ts").isNotNull)
+      .repartition(col("user_id"))
+      .sortWithinPartitions(col("user_id"), col("ts"), col("event_id"))
+      .mapPartitions { rows: Iterator[Row] =>
+        val it = rows.buffered
+        var open = Option.empty[graft.streaming.StreamingEtl.Scd2State]
+        // one (user, slice) micro-batch per step
+        Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+          val (uid, s) = (it.head.get(0), slice(it.head))
+          val batch = Iterator.continually(it)
+            .takeWhile(i => i.hasNext && i.head.get(0) == uid && slice(i.head) == s)
+            .map { i => val r = i.next(); (r.getString(1), r.getTimestamp(2)) }
+          val emitted = scala.collection.mutable.ArrayBuffer[Row]()
+          open = scd2Fold(open, batch) { (run, to) =>
+            emitted += Row(uid, run.eventType, usToTs(run.validFromUs), to,
+              run.nEvents, false)
+          }
+          if (!it.hasNext || it.head.get(0) != uid) {
+            emitted ++= open.map(run => Row(uid, run.eventType,
+              usToTs(run.validFromUs), null, run.nEvents, true))
+            open = None
+          }
+          emitted
+        }
+      }(Encoders.row(out))
   }
 
   // -------------------------- incremental JOIN-view maintenance (delta rules)

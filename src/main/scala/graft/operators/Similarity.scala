@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.DeterministicAgg.{avgRounded, exactSum, roundFixed, roundFixedLocal}
+import graft.functions.DeterministicAgg.{avgRounded, roundFixed, roundFixedLocal}
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label) — the ANN/vector side of the LLM-pipeline
@@ -433,9 +433,9 @@ object Similarity {
     * iterations. Output is the centroid table after `iters` update steps in
     * long format (cluster_id, dim, centroid_val), rounded to 1e-6.
     *
-    * Per iteration ([[lloyd]]): one narrow pass for assignment (N·k·d
-    * flops) + one posexplode/hash-agg (shuffle on (dim, cluster)) + a
-    * k·d-row collect — the codebook is metadata-scale by construction, the
+    * Per iteration ([[lloyd]]): one Spark job, a corpus pass that assigns
+    * (N·k·d flops) and sums per (dim, cluster), folded into a k·d table on
+    * the driver — the codebook is metadata-scale by construction, the
     * corpus is never collected. This is the coarse-quantizer
     * trainer the IVF scaladoc promises ("a production system would use
     * k-means centroids").
@@ -474,62 +474,87 @@ object Similarity {
     * permuted slices, everything else the whole vector.
     *
     * The seeds (the first k vec_ids' vectors) are collected once and
-    * sliced on the driver. Each iteration is ONE pass for all groups: a
-    * corpus scan ([[Spread.byKey]]-spread when it is sub-parallel)
-    * assigns every group's nearest centroid in the same row (per-group
-    * cosine argmax), posexplodes the vector once into one exact-decimal
-    * aggregate on (position, cluster), and collects the G·k·w centroid
-    * rows. Groups never read each other and decimal sums are order-free,
-    * so each group's doubles equal a standalone run on its sub-vector.
+    * sliced on the driver. The corpus RDD ([[Spread.byKey]]-spread when
+    * it is sub-parallel) is built once, so every iteration after the
+    * first reads the same shuffle output. Each iteration is ONE Spark job
+    * for all groups: a `treeAggregate` that assigns every group's nearest
+    * centroid per row with the [[nearestAnchorIds]] kernel
+    * ([[graft.functions.CodebookUtil.nearestIds]]) and folds exact
+    * per-(group, position, cluster) decimal sums and counts
+    * ([[graft.functions.DeterministicAgg.wideDecimalLocal]], the
+    * `exactSum` arithmetic); the driver divides `sum.doubleValue / count`.
+    * Groups never read each other and decimal sums are order-free, so
+    * each group's doubles equal a standalone run on its sub-vector, and
+    * the oracle's unrolled SQL iterations match bit for bit.
     * Empty seed set (empty corpus / k = 0) → empty codebooks. */
   private[graft] def lloyd(embeddings: DataFrame, k: Int, iters: Int)(
       groupsOf: Int => Seq[Seq[Int]]): IndexedSeq[Trained] = {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.CodebookUtil.nearestIds
+    import graft.functions.DeterministicAgg.wideDecimalLocal
     require(iters >= 1, s"k-means needs at least one iteration, got $iters")
     val seeds = anchors(embeddings, k)
     val d = seeds.headOption.fold(0)(_._2.length)
-    val groups = groupsOf(d).toIndexedSeq
+    val groups = groupsOf(d).map(_.toArray).toIndexedSeq
     if (seeds.isEmpty) return groups.map(_ => Trained(Nil))
     require(groups.flatten.max < d,
       s"position groups reach dim ${groups.flatten.max}, vectors have $d dims")
-    // position → (group, dim within the group)
-    val owner = (for ((ps, g) <- groups.zipWithIndex; (p, j) <- ps.zipWithIndex)
-      yield p -> (g, j)).toMap
-    val groupOf = typedLit((0 until d).map(p => owner.get(p).fold(-1)(_._1)))
-    // a contiguous group slices (cheaper per row than gathering items)
-    def sub(ps: Seq[Int]): Column =
-      if (ps == (ps.head until ps.head + ps.size)) slice(col("v"), ps.head + 1, ps.size)
-      else array(ps.map(p => col("v").getItem(p)): _*)
     // spread across the cores: one iteration carries every group's
     // assignment and update, which a single-split scan would run on one
-    val e = Spread.byKey(embeddings, col("vec_id"))
-      .select(vec(col("embedding")).as("v"))
+    val vectors = Spread.byKey(embeddings, col("vec_id"))
+      .select(vec(col("embedding")).as("v")).queryExecution.toRdd
     var books = groups.map(ps => seeds.map { case (id, x, _) =>
-      val xs = ps.map(x)
+      val xs = ps.toSeq.map(x)
       (id, xs, math.sqrt(xs.map(y => y * y).sum))
     })
+    // per group: (cluster index · width + position index) → sum, count
+    type Acc = IndexedSeq[(Array[java.math.BigDecimal], Array[Long])]
     var last = IndexedSeq.empty[Seq[(Long, Int, Double)]]
     for (_ <- 1 to iters) {
-      // one scalar code per group, computed once per row below the
-      // posexplode; each position then takes the code of its group
-      val coded = e.select(col("v") +: groups.indices.map { g =>
-        nearestAnchorIds(sub(groups(g)), books(g), keep = 1).getItem(0).as(s"c$g")
-      }: _*)
-      val cluster = groups.indices.tail.foldLeft(col("c0")) { (acc, g) =>
-        when(try_element_at(groupOf, col("pos") + 1) === g, col(s"c$g"))
-          .otherwise(acc)
+      val ids = books.map(_.map(_._1).toArray)
+      val flat = books.map(_.flatMap(_._2).toArray)
+      val norms = books.map(_.map(_._3).toArray)
+      val zero: Acc = groups.indices.map { g =>
+        val n = ids(g).length * groups(g).length
+        (new Array[java.math.BigDecimal](n), new Array[Long](n))
       }
-      val cents = coded
-        .select(groups.indices.map(g => col(s"c$g")) :+
-          posexplode(col("v")).as(Seq("pos", "x")): _*)
-        .groupBy(col("pos"), cluster.as("cluster_id"))
-        .agg((exactSum(col("x")) / count(col("x"))).as("centroid_val"))
-        .collect().toSeq
-        // positions no group reads aggregate under some code; drop them
-        .flatMap(r => owner.get(r.getInt(0)).map { case (g, j) =>
-          g -> (r.getLong(1), j, r.getDouble(2))
-        })
-        .groupBy(_._1)
-      last = groups.indices.map(g => cents.getOrElse(g, Nil).map(_._2))
+      val acc = vectors.treeAggregate(zero)((acc, row) => {
+        if (!row.isNullAt(0)) {
+          val v = row.getArray(0)
+          def at(p: Int): Any =
+            if (p < v.numElements && !v.isNullAt(p)) v.getDouble(p) else null
+          for (g <- groups.indices if ids(g).nonEmpty) {
+            val ps = groups(g)
+            // a missing or null position makes the sub-vector invalid, and
+            // the kernel then picks the lowest id, as for the SQL sub-vector
+            val code = nearestIds(new GenericArrayData(ps.map(at)), ids(g),
+              flat(g), norms(g), ps.length, l2 = false, keep = 1).getLong(0)
+            val base = java.util.Arrays.binarySearch(ids(g), code) * ps.length
+            val (sums, counts) = acc(g)
+            for (j <- ps.indices) at(ps(j)) match {
+              case x: Double =>
+                val w = wideDecimalLocal(x)
+                sums(base + j) = if (sums(base + j) == null) w else sums(base + j).add(w)
+                counts(base + j) += 1
+              case _ =>
+            }
+          }
+        }
+        acc
+      }, (a, b) => {
+        for (g <- a.indices; i <- a(g)._2.indices if b(g)._2(i) > 0) {
+          val (sa, ca) = a(g)
+          sa(i) = if (sa(i) == null) b(g)._1(i) else sa(i).add(b(g)._1(i))
+          ca(i) += b(g)._2(i)
+        }
+        a
+      })
+      last = groups.indices.map { g =>
+        val (sums, counts) = acc(g)
+        val w = groups(g).length
+        for (i <- counts.indices if counts(i) > 0)
+          yield (ids(g)(i / w), i % w, sums(i).doubleValue / counts(i))
+      }
       // zero-norm centroids (a cluster whose members cancel exactly) make
       // the next round's cosine NaN — and Spark and DuckDB ORDER NaN
       // differently, so they must never reach an assignment; the oracle

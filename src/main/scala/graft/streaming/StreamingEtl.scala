@@ -543,9 +543,10 @@ object StreamingEtl {
 
   /** The open run a user's SCD-2 state carries across micro-batches:
     * current attribute value, interval start (epoch µs — full event-time
-    * precision, a ms-only clock would collide sub-ms changes), and the
-    * run's event count. */
-  final case class Scd2State(eventType: String, validFromUs: Long, nEvents: Long)
+    * precision, a ms-only clock would collide sub-ms changes), the run's
+    * event count, and whether its last row had a null event_type. */
+  final case class Scd2State(eventType: String, validFromUs: Long, nEvents: Long,
+                             endsInNull: Boolean)
 
   /** An emitted SCD-2 validity row. `validTo` null on the open (current)
     * run — re-emitted refreshed each batch in Update mode; closed rows
@@ -555,24 +556,49 @@ object StreamingEtl {
                            validTo: java.sql.Timestamp,
                            nEvents: Long, isCurrent: Boolean)
 
-  private def tsToUs(t: java.sql.Timestamp): Long =
-    t.getTime / 1000 * 1000000L + t.getNanos / 1000
-  private def usToTs(us: Long): java.sql.Timestamp = {
+  private[graft] def tsToUs(t: java.sql.Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+  private[graft] def usToTs(us: Long): java.sql.Timestamp = {
     val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
     t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
     t
   }
+
+  /** The per-user SCD-2 step, shared by [[scd2Streaming]] (one call per
+    * micro-batch) and [[graft.operators.Incremental.scd2Incremental]] (one
+    * call per event-time slice): fold one user's (event_type, ts) rows, in
+    * (ts, event_id) order, into the open run. Each run a row closes goes
+    * to `close` with the closing row's ts as its valid_to; the open run
+    * after the last row is returned.
+    *
+    * A row continues the run when the row before it had a non-null
+    * event_type and the row's own is null or equal to it — the change
+    * flag of [[graft.operators.Relational.scd2UserState]], whose `lag`
+    * compares against the previous ROW: so a null continues a run, and
+    * the row after a null always opens a new one. */
+  private[graft] def scd2Fold(open: Option[Scd2State],
+                              rows: Iterator[(String, java.sql.Timestamp)])(
+      close: (Scd2State, java.sql.Timestamp) => Unit): Option[Scd2State] =
+    rows.foldLeft(open) { case (cur, (typ, ts)) =>
+      cur match {
+        case Some(s) if !s.endsInNull && (typ == null || typ == s.eventType) =>
+          Some(s.copy(nEvents = s.nEvents + 1, endsInNull = typ == null))
+        case _ =>
+          cur.foreach(close(_, ts))
+          Some(Scd2State(typ, tsToUs(ts), 1L, endsInNull = typ == null))
+      }
+    }
 
   /** Streaming SCD Type-2 — the incremental form of the batch
     * [[graft.operators.Relational.scd2UserState]]: the dimension's
     * validity intervals are MAINTAINED as the change log streams in,
     * instead of recomputed from the archive. State per user is exactly
     * the one open run (O(1) forever — the closed history is output, not
-    * state); each micro-batch folds its rows in (ts, event_id) order,
-    * emits every run it closes (final rows) plus the refreshed open run
-    * (is_current = true, replaced on the next change — Update-mode
-    * semantics). In-order delivery per user is the contract (the CDC
-    * norm); a batch replay over the archive reconciles late data,
+    * state); each micro-batch folds its rows in (ts, event_id) order
+    * ([[scd2Fold]]), emits every run it closes (final rows) plus the
+    * refreshed open run (is_current = true, replaced on the next change —
+    * Update-mode semantics). In-order delivery per user is the contract
+    * (the CDC norm); a batch replay over the archive reconciles late data,
     * exactly like the dedup/heavy-hitter pairs' two-pass discipline.
     */
   def scd2Streaming(events: DataFrame): Dataset[Scd2Row] = {
@@ -584,20 +610,11 @@ object StreamingEtl {
       .flatMapGroupsWithState[Scd2State, Scd2Row](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         case (uid, rows, state: GroupState[Scd2State]) =>
-          var cur = state.getOption
           val closed = scala.collection.mutable.ArrayBuffer[Scd2Row]()
-          rows.toSeq.sortBy(r => (tsToUs(r._3), r._4)).foreach {
-            case (_, typ, ts, _) =>
-              cur match {
-                case Some(s) if s.eventType == typ =>
-                  cur = Some(s.copy(nEvents = s.nEvents + 1))
-                case Some(s) =>
-                  closed += Scd2Row(uid, s.eventType, usToTs(s.validFromUs),
-                    ts, s.nEvents, isCurrent = false)
-                  cur = Some(Scd2State(typ, tsToUs(ts), 1L))
-                case None =>
-                  cur = Some(Scd2State(typ, tsToUs(ts), 1L))
-              }
+          val sorted = rows.toSeq.sortBy(r => (tsToUs(r._3), r._4))
+          val cur = scd2Fold(state.getOption, sorted.iterator.map(r => (r._2, r._3))) {
+            (s, to) => closed += Scd2Row(uid, s.eventType, usToTs(s.validFromUs),
+              to, s.nEvents, isCurrent = false)
           }
           cur.foreach(state.update)
           (closed ++ cur.map(s => Scd2Row(uid, s.eventType,

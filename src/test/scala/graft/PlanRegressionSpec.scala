@@ -386,13 +386,13 @@ class PlanRegressionSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"), p)
   }
 
-  test("user_scd2_incremental: each slice reuses ONE user exchange; no cartesian") {
+  test("user_scd2_incremental: ONE user exchange feeds the sorted fold; no checkpoint") {
     val p = plan("user_scd2_incremental")
-    // 3 slices x (windows + run agg) plus the slice scans — but per slice
-    // the change-flag window, run-sum window, run agg, and lead window all
-    // share the user_id exchange; only the final union adds none
-    assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"), p)
-    assert(!p.contains("Exchange SinglePartition"), p)
+    // every slice is folded in the same sorted pass: one hash exchange on
+    // user_id, and no slice is materialized ahead of the fold
+    assert(count(p, "Exchange hashpartitioning\\(user_id") == 1, p)
+    assert(count(p, "Exchange") == 1, p)
+    assert(!p.contains("Scan ExistingRDD"), p)
   }
 
   test("large_orders: the HAVING-filtered order set and customer both broadcast") {

@@ -484,6 +484,38 @@ class RelationalSpec extends AnyFunSuite {
       (Some(3L), null, ts("2024-01-01 10:25:00"), null, 1L, true)))
   }
 
+  test("scd2Incremental: a null that ends a slice still opens a new run after it") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    def ts(s: String) = Timestamp.valueOf(s)
+    // two slices of 10 minutes: the null is slice 0's last row, so the
+    // open run carries it into slice 1
+    val events = Seq(
+      (1L, ts("2024-01-01 10:00:00"), 1L, "view"),
+      (2L, ts("2024-01-01 10:09:00"), 1L, null),
+      (3L, ts("2024-01-01 10:20:00"), 1L, "view"),
+      (4L, ts("2024-01-01 10:01:00"), 2L, "click"),
+      (5L, ts("2024-01-01 10:08:00"), 2L, null),
+      (6L, ts("2024-01-01 10:15:00"), 2L, null)
+    ).toDF("event_id", "ts", "user_id", "event_type")
+    val inc = graft.operators.Incremental.scd2Incremental(events, 2)
+    val oneShot = Relational.scd2UserState(events)
+    assert(inc.exceptAll(oneShot).count() == 0 && oneShot.exceptAll(inc).count() == 0,
+      inc.collect().mkString("\n"))
+    assert(oneShot.count() == 4)
+  }
+
+  test("scd2Incremental builds with at most two Spark jobs") {
+    // the slice bounds are the only collect: the fold over the slices is
+    // one lazy plan, not a job per slice
+    var inc: org.apache.spark.sql.DataFrame = null
+    val jobs = JobCount(spark) {
+      inc = graft.operators.Incremental.scd2Incremental(Tables.events(spark, dir))
+    }
+    assert(jobs <= 2, s"$jobs construction jobs")
+    assert(inc.count() > 0)
+  }
+
   test("histogram-sketch quantiles land within one bucket width of exact") {
     val events = Tables.events(spark, dir)
     val buckets = 256

@@ -1065,14 +1065,16 @@ class SimilaritySpec extends AnyFunSuite {
       "permuted group diverged from solo run")
   }
 
-  test("pq codebooks: the training job count does not grow with the subspace count") {
-    // jobs launched while the codebooks train
-    def trainingJobs(numSubspaces: Int): Int = JobCount(spark) {
-      Similarity.pqCodebooks(emb, numSubspaces = numSubspaces, k = 4, iters = 2)
+  test("pq codebooks: one training job per iteration, whatever the subspace count") {
+    // jobs launched while the codebooks train: the seed collect and the
+    // corpus spread once, then one job per Lloyd iteration
+    def trainingJobs(numSubspaces: Int, iters: Int): Int = JobCount(spark) {
+      Similarity.pqCodebooks(emb, numSubspaces = numSubspaces, k = 4, iters = iters)
     }
-    val (two, four) = (trainingJobs(2), trainingJobs(4))
-    assert(two > 0 && two == four,
-      s"training jobs: $two with 2 subspaces, $four with 4")
+    val (two, four, threeIters) = (trainingJobs(2, 2), trainingJobs(4, 2), trainingJobs(4, 3))
+    val setUp = two - 2
+    assert(two == four && threeIters == four + 1 && setUp >= 0 && setUp <= 2,
+      s"training jobs: $two with 2 subspaces, $four with 4, $threeIters with 3 iterations")
   }
 
   test("hnsw build: geometric layers, rank-capped out-degree, edges stay within layer membership") {

@@ -810,6 +810,45 @@ class StreamingEtlSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming SCD2: a null event_type continues a run, and the row after it opens one") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, String, Timestamp, Long)]
+    val q = StreamingEtl.scd2Streaming(
+        input.toDF().toDF("user_id", "event_type", "ts", "event_id"))
+      .writeStream.format("memory").queryName("scd2nulls").outputMode("update").start()
+    try {
+      // the null ends batch 1, so the open run carries it across the boundary
+      input.addData(
+        (1L, "view", ts("2024-01-01 10:00:00"), 1L),
+        (1L, null, ts("2024-01-01 10:05:00"), 2L))
+      q.processAllAvailable()
+      input.addData((1L, "view", ts("2024-01-01 10:10:00"), 3L))
+      q.processAllAvailable()
+      val rows = spark.table("scd2nulls").collect()
+      val closed = rows.filter(!_.getAs[Boolean]("isCurrent"))
+        .map(r => (r.getAs[String]("eventType"), r.getAs[Timestamp]("validFrom"),
+          r.getAs[Timestamp]("validTo"), r.getAs[Long]("nEvents"))).toSet
+      val current = rows.filter(_.getAs[Boolean]("isCurrent"))
+        .maxBy(_.getAs[Timestamp]("validFrom").getTime)
+      val archive = Seq(
+        (1L, ts("2024-01-01 10:00:00"), 1L, "view"),
+        (2L, ts("2024-01-01 10:05:00"), 1L, null),
+        (3L, ts("2024-01-01 10:10:00"), 1L, "view"))
+        .toDF("event_id", "ts", "user_id", "event_type")
+      val oneShot = graft.operators.Relational.scd2UserState(archive).collect()
+        .map(r => (r.getAs[String]("event_type"), r.getAs[Timestamp]("valid_from"),
+          r.getAs[Timestamp]("valid_to"), r.getAs[Long]("n_events"))).toSet
+      // the one-shot build: {view, null} then {view}, two runs
+      assert(oneShot == Set(
+        ("view", ts("2024-01-01 10:00:00"), ts("2024-01-01 10:10:00"), 2L),
+        ("view", ts("2024-01-01 10:10:00"), null, 1L)))
+      assert(closed + ((current.getAs[String]("eventType"),
+        current.getAs[Timestamp]("validFrom"), null, current.getAs[Long]("nEvents"))) ==
+        oneShot, rows.mkString("\n"))
+    } finally q.stop()
+  }
+
   test("streaming histogram sketch: cross-batch counts equal the batch histogram") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
