@@ -102,7 +102,7 @@ object Incremental {
     * statistics).
     */
   def scd2Incremental(events: DataFrame, slices: Int = 3): DataFrame = {
-    import graft.streaming.StreamingEtl.{scd2Fold, tsToUs, usToTs}
+    import graft.streaming.StreamingEtl.{Scd2State, scd2Fold, tsToUs, usToTs}
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
     val ev = events.select(
@@ -127,7 +127,7 @@ object Incremental {
       .sortWithinPartitions(col("user_id"), col("ts"), col("event_id"))
       .mapPartitions { rows: Iterator[Row] =>
         val it = rows.buffered
-        var open = Option.empty[graft.streaming.StreamingEtl.Scd2State]
+        var open = Option.empty[Scd2State]
         // one (user, slice) micro-batch per step
         Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
           val (uid, s) = (it.head.get(0), slice(it.head))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
+import StreamingEtl.{tsToUs, usToTs}
+
 /** STREAM–STREAM backward as-of join on `transformWithState` — the one
   * operator family round 7 left unclaimed (the native batch/stream-static
   * as-of is [[graft.plans.AsOf]]; this adds cross-batch RIGHT-side state).
@@ -62,13 +64,6 @@ object StreamAsOf {
   /** Right-side state: candidate match rows (epoch µs, as [[BufLeft]]). */
   final case class BufRight(tsUs: Long, errorId: Long, value: Double)
 
-  private def tsToUs(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-  private def usToTs(us: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
   private def wmToUs(wmMs: Long): Long = wmMs * 1000L
 
   /** Join output: left columns plus the matched right columns (None when

@@ -386,13 +386,14 @@ class PlanRegressionSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"), p)
   }
 
-  test("user_scd2_incremental: ONE user exchange feeds the sorted fold; no checkpoint") {
+  test("user_scd2_incremental: each slice reuses ONE user exchange; no cartesian") {
     val p = plan("user_scd2_incremental")
     // every slice is folded in the same sorted pass: one hash exchange on
     // user_id, and no slice is materialized ahead of the fold
     assert(count(p, "Exchange hashpartitioning\\(user_id") == 1, p)
     assert(count(p, "Exchange") == 1, p)
     assert(!p.contains("Scan ExistingRDD"), p)
+    assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"), p)
   }
 
   test("large_orders: the HAVING-filtered order set and customer both broadcast") {

@@ -1065,7 +1065,7 @@ class SimilaritySpec extends AnyFunSuite {
       "permuted group diverged from solo run")
   }
 
-  test("pq codebooks: one training job per iteration, whatever the subspace count") {
+  test("pq codebooks: the training job count does not grow with the subspace count") {
     // jobs launched while the codebooks train: the seed collect and the
     // corpus spread once, then one job per Lloyd iteration
     def trainingJobs(numSubspaces: Int, iters: Int): Int = JobCount(spark) {
