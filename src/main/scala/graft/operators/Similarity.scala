@@ -516,13 +516,13 @@ object Similarity {
       val norms = books.map(_.map(_._3).toArray)
       val zero: Acc = groups.indices.map { g =>
         val n = ids(g).length * groups(g).length
-        (new Array[java.math.BigDecimal](n), new Array[Long](n))
+        (Array.fill(n)(java.math.BigDecimal.ZERO), new Array[Long](n))
       }
       val acc = vectors.treeAggregate(zero)((acc, row) => {
         if (!row.isNullAt(0)) {
           val v = row.getArray(0)
           def at(p: Int): Any =
-            if (p < v.numElements && !v.isNullAt(p)) v.getDouble(p) else null
+            if (p < v.numElements() && !v.isNullAt(p)) v.getDouble(p) else null
           for (g <- groups.indices if ids(g).nonEmpty) {
             val ps = groups(g)
             // a missing or null position makes the sub-vector invalid, and
@@ -533,8 +533,7 @@ object Similarity {
             val (sums, counts) = acc(g)
             for (j <- ps.indices) at(ps(j)) match {
               case x: Double =>
-                val w = wideDecimalLocal(x)
-                sums(base + j) = if (sums(base + j) == null) w else sums(base + j).add(w)
+                sums(base + j) = sums(base + j).add(wideDecimalLocal(x))
                 counts(base + j) += 1
               case _ =>
             }
@@ -542,10 +541,9 @@ object Similarity {
         }
         acc
       }, (a, b) => {
-        for (g <- a.indices; i <- a(g)._2.indices if b(g)._2(i) > 0) {
-          val (sa, ca) = a(g)
-          sa(i) = if (sa(i) == null) b(g)._1(i) else sa(i).add(b(g)._1(i))
-          ca(i) += b(g)._2(i)
+        for (g <- a.indices; i <- a(g)._2.indices) {
+          a(g)._1(i) = a(g)._1(i).add(b(g)._1(i))
+          a(g)._2(i) += b(g)._2(i)
         }
         a
       })
