@@ -1095,6 +1095,19 @@ class TextOpsSpec extends AnyFunSuite {
     assert(TextOps.scoreWithQualityModel(empty).collect().isEmpty)
   }
 
+  test("trained quality model: the sf0.001 weights keep their exact bits") {
+    // the 4 doubles the oracle's unrolled iterations replay: any change to
+    // the pass arithmetic or the sum's type shows here as a flipped bit
+    val bits = TextOps.trainedQualityWeights(docs).map(java.lang.Double.doubleToRawLongBits)
+    assert(bits.toSeq == Seq(-4622959584947255227L, 4608149243641685962L,
+      -4616905644134534935L, 4610111805858170036L), bits.mkString(", "))
+  }
+
+  test("trained quality model: training starts at most one job per gradient pass, plus one") {
+    val jobs = JobCount(spark) { TextOps.trainedQualityWeights(docs) }
+    assert(jobs <= TextOps.qmIters + 1, s"$jobs training jobs")
+  }
+
   test("CDC chunking: bounds honor min/max and reconstruct the document") {
     val bounds = TextOps.withCdcBounds(docs)
       .select(col("doc_id"), col("text"), col("bounds")).collect()
