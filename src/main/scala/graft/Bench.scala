@@ -34,15 +34,6 @@ package graft
   * rule, catches transients) OR by a sustained external-CPU median above
   * 20% of the machine (catches exactly the r13 signature). bench.json keeps
   * ALL samples per query (wall + cpu + ext), not just the min.
-  *
-  * MEMO-WARM-ALWAYS protocol for the lcp family (round-12 verdict #6;
-  * PROTOCOL NOTE, round-13 advisor): the three suffix-array consumers ride
-  * SparkEntry.lcpRel's cluster-cached relation, re-materialized immediately
-  * BEFORE each timed sample (outside the timer) so a timed pass never
-  * silently includes a cache rebuild. Committed minima for doc_lcp /
-  * doc_dup_intervals / doc_dedup_excise_sa from r13 onward are therefore
-  * NOT comparable to pre-r13 bench.json values (which could include
-  * rebuild smear) — r13 re-baselined all three under the new protocol.
   */
 object Bench {
 
@@ -113,11 +104,8 @@ object Bench {
       "org.apache.spark.sql.execution.window",
       org.apache.logging.log4j.Level.ERROR)
 
-    val lcpConsumers = Set("doc_lcp", "doc_dup_intervals", "doc_dedup_excise_sa")
-
     val nCores = Runtime.getRuntime.availableProcessors()
     def runOnce(name: String): Sample = {
-      if (lcpConsumers(name)) SparkEntry.lcpRel(spark, sfDir).count(): Unit
       val busy0 = procStatBusy()
       val cpu0 = processCpuNs()
       val gc0 = gcPauseMs()

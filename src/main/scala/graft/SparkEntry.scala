@@ -24,65 +24,6 @@ object SparkEntry {
       TripEtl.enrichTrips(Tables.events(spark, dir), Tables.supplier(spark, dir)))
   }
 
-  /** Published quality-model weights, memoized per data dir (the model
-    * is a pure function of that dir's documents table and the fixed GD
-    * hyperparameters): the 16 training passes run AT MOST ONCE per dir
-    * per JVM, after which doc_model_train / doc_model_score plan builds
-    * consume the 4 cached doubles — the scorer's plan carries zero
-    * training jobs (r8 verdict #7). */
-  private val qmWeightsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Double]]
-  // memo lookups lock the map: TrieMap.getOrElseUpdate evaluates its
-  // builder OUTSIDE the atomic insert, so two concurrent cold calls
-  // would both run the expensive distributed build and discard one
-  private def qmWeights(s: SparkSession, dir: String): Array[Double] =
-    qmWeightsMemo.synchronized {
-      qmWeightsMemo.getOrElseUpdate(dir,
-        TextOps.trainedQualityWeights(Tables.documents(s, dir)))
-    }
-
-  /** Published LCP-array relation, memoized per data dir (a pure
-    * function of that dir's documents and the fixed cap): the suffix
-    * array + LCP build runs at most once per dir per JVM and the
-    * relation persists CLUSTER-side (a distributed cache, never a
-    * driver collect — unlike the retired hnswIdx memo), after which
-    * doc_lcp, doc_dup_intervals, and doc_dedup_excise_sa all ride the
-    * same artifact — exactly how a dedup deployment uses a suffix
-    * index: build once, consult many times. */
-  // a workload alternating across more data dirs than this rebuilds the
-  // corpus-scale artifact on every access — still correct, and the
-  // eviction log below makes any thrash observable
-  private[graft] val lcpMemoCapacity = 2
-  // LRU-BOUNDED (round-10 verdict #2): the memo caches corpus-scale
-  // persisted artifacts, so an unbounded evict-never map would pin one
-  // cluster-cache-sized relation per data dir ever touched by the JVM.
-  // accessOrder=true makes iteration order least-recently-USED first;
-  // past capacity the eldest artifact is unpersisted (releasing its
-  // cached blocks cluster-wide) and dropped. Rebuilding after eviction
-  // is just the cold path again — correctness never depends on the memo.
-  private[graft] val lcpMemo =
-    new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true)
-  private[graft] def lcpRel(s: SparkSession, dir: String): DataFrame =
-    lcpMemo.synchronized {
-      val hit = lcpMemo.get(dir)
-      if (hit != null) hit
-      else {
-        val df = TextOps.suffixLcp(Tables.documents(s, dir))
-        df.persist() // MEMORY_AND_DISK: spillable, never recompute-loops
-        lcpMemo.put(dir, df)
-        while (lcpMemo.size > lcpMemoCapacity) {
-          val it = lcpMemo.entrySet().iterator()
-          val eldest = it.next()
-          System.err.println(s"graft: lcpMemo evicting '${eldest.getKey}' " +
-            s"(capacity $lcpMemoCapacity, now caching '$dir') — frequent " +
-            "evictions mean thrash")
-          eldest.getValue.unpersist(blocking = false)
-          it.remove()
-        }
-        df
-      }
-    }
-
   /** The query names a comma-separated prefix list selects — the
     * `SPARK_GRAFT_QUERIES` subset of Bench and Verify, and Explain's
     * argument. Prefixes are trimmed and blank ones dropped; every prefix
@@ -723,18 +664,18 @@ object SparkEntry {
     // gradient sums; driver state is 4 doubles), the treeAggregate shape
     // of distributed LR; the oracle replays the unrolled iterations
     "doc_model_train" -> ((s, dir) =>
-      TextOps.trainQualityModel(Tables.documents(s, dir), qmWeights(s, dir))),
-    // ...then the filter pass: score every document with the PUBLISHED
-    // weights — a pure map (weights are literals in the projection), zero
-    // training jobs in the plan (r8 verdict #7): the GD loop runs once
-    // per data dir via the memoized publish step below, exactly the
-    // trainedCodebook/ivfTopKPrecomputed train-once discipline
+      TextOps.trainQualityModel(Tables.documents(s, dir))),
+    // ...then the filter pass: score every document with the trained
+    // weights — a pure map once training returns (weights are literals in
+    // the projection)
     "doc_model_score" -> ((s, dir) =>
-      TextOps.scoreWithQualityModel(Tables.documents(s, dir), qmWeights(s, dir))),
+      TextOps.scoreWithQualityModel(Tables.documents(s, dir))),
     // ...and the reliability report: per-probability-bin mean predicted
     // score vs empirical positive rate — bins-bounded agg, pure-map input
-    "doc_model_calibration" -> ((s, dir) =>
-      TextOps.qualityCalibration(Tables.documents(s, dir), qmWeights(s, dir))),
+    "doc_model_calibration" -> ((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      TextOps.qualityCalibration(docs, TextOps.trainedQualityWeights(docs))
+    }),
     // CCNet-style perplexity filter: mean unigram log10-prob of each doc's
     // tokens under the corpus's own unigram distribution (log10 evaluated
     // once per DISTINCT term and 1e-6-quantized pre-sum, so the decimal-
@@ -827,20 +768,18 @@ object SparkEntry {
     // second half): adjacent-rank pairs by dense-rank equi-join,
     // cap-bounded suffix slices, closed-form first-mismatch LCP on both
     // engines
-    "doc_lcp" -> ((s, dir) => lcpRel(s, dir)),
+    "doc_lcp" -> ((s, dir) => TextOps.suffixLcp(Tables.documents(s, dir))),
     // ...and the dedup DECISION: maximal per-doc duplicated intervals
     // (lcp >= 8 pairs mark both sides, islands-merge per doc) — exact
     // extents even where the per-pair lcp saturates at the cap.
     // (doc_dup_spans was taken: that is the positional-gram RATIO query)
     "doc_dup_intervals" -> ((s, dir) =>
-      TextOps.dupSpans(Tables.documents(s, dir),
-        lcpRel = Some(lcpRel(s, dir)))),
+      TextOps.dupSpans(Tables.documents(s, dir))),
     // ...and the excision TRANSFORM those intervals drive — the suffix-
     // array end of Lee et al. end-to-end (within-doc repeats excised
     // too, unlike the cross-doc gram transform doc_dedup_excise)
     "doc_dedup_excise_sa" -> ((s, dir) =>
-      TextOps.exciseDupIntervals(Tables.documents(s, dir),
-        lcpRel = Some(lcpRel(s, dir)))),
+      TextOps.exciseDupIntervals(Tables.documents(s, dir))),
     // longest repeated substring: k-ary length search on 8-byte gram
     // fingerprints + one exact pass vs the oracle's all-length table
     "doc_lrs" -> ((s, dir) =>
@@ -1749,6 +1688,13 @@ object SparkEntry {
         WHERE bit_count(xor(x.simhash, y.simhash)) <= $maxHamming"""
   }
 
+  /** DuckDB dot product and L2 norm of DOUBLE[] lists, folded left to
+    * right in index order — one text for every vector oracle below. */
+  private def dot(a: String, b: String) =
+    s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
+  private def nrm(a: String) =
+    s"sqrt(list_reduce(list_transform($a, x -> x * x), (a, b) -> a + b))"
+
   /** DuckDB replica of [[graft.operators.Similarity.kmeansCentroids]] with
     * the iterations UNROLLED as generated CTEs: same first-k init, same
     * cosine-argmax assignment (identical fold order), same exact-decimal
@@ -1760,10 +1706,6 @@ object SparkEntry {
                            source: String = "embeddings",
                            emit: String = "centroids",
                            kSql: Option[String] = None): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def nrm(a: String) =
-      s"sqrt(list_reduce(list_transform($a, x -> x * x), (a, b) -> a + b))"
     val iterCtes = (1 to iters).map { i =>
       s"""a$i AS (
             SELECT vec_id, v, vnrm, cluster_id FROM (
@@ -1836,10 +1778,6 @@ object SparkEntry {
                                   source: String = "embeddings",
                                   targetClusterSize: Int = 250,
                                   kMin: Int = 8): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def nrm(a: String) =
-      s"sqrt(list_reduce(list_transform($a, x -> x * x), (a, b) -> a + b))"
     val kSql = s"(SELECT greatest($kMin, CAST(ceil(count(*) / " +
       s"${targetClusterSize}.0) AS BIGINT)) FROM en)"
     s"""WITH asg AS (
@@ -2126,10 +2064,6 @@ object SparkEntry {
   private def pqSearchOracle(numSubspaces: Int, w: Int, k: Int, iters: Int,
                              numQueries: Int, topK: Int,
                              ivf: Option[(Int, Int)] = None): String = {
-    def nrm(a: String) =
-      s"sqrt(list_reduce(list_transform($a, x -> x * x), (a, b) -> a + b))"
-    def dotIdx(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
     // IVF gate (when composed): first-c anchors, arnk=1 corpus assignment,
     // arnk<=nprobe query probes — the ivfOracle structure verbatim, joined
     // into `terms` as a (query, neighbor) pair gate (each neighbor has ONE
@@ -2147,14 +2081,14 @@ object SparkEntry {
           SELECT vec_id AS neighbor_id, anchor_id FROM (
             SELECT ev.vec_id, anch.anchor_id,
               row_number() OVER (PARTITION BY ev.vec_id ORDER BY
-                (${dotIdx("ev.v", "anch.va")} / (ev.nrm * anch.nrm_a)) DESC,
+                (${dot("ev.v", "anch.va")} / (ev.nrm * anch.nrm_a)) DESC,
                 anch.anchor_id ASC) AS arnk
             FROM ev CROSS JOIN anch) WHERE arnk = 1),
         qprobes AS (
           SELECT query_id, anchor_id FROM (
             SELECT ev.vec_id AS query_id, anch.anchor_id,
               row_number() OVER (PARTITION BY ev.vec_id ORDER BY
-                (${dotIdx("ev.v", "anch.va")} / (ev.nrm * anch.nrm_a)) DESC,
+                (${dot("ev.v", "anch.va")} / (ev.nrm * anch.nrm_a)) DESC,
                 anch.anchor_id ASC) AS arnk
             FROM ev CROSS JOIN anch WHERE ev.vec_id < $numQueries)
           WHERE arnk <= $nprobe),
@@ -2265,10 +2199,6 @@ object SparkEntry {
     * so the top-k hash-matches. */
   private def rqSearchOracle(k: Int, iters: Int, numQueries: Int,
                              topK: Int): String = {
-    def nrm(a: String) =
-      s"sqrt(list_reduce(list_transform($a, x -> x * x), (a, b) -> a + b))"
-    def dotIdx(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
     val src0 = rqResidualSrc(0, k, iters)
     val src1 = rqResidualSrc(1, k, iters)
     s"""WITH cb0 AS (
@@ -2297,9 +2227,9 @@ object SparkEntry {
           FROM embeddings WHERE vec_id < $numQueries),
         scored AS (
           SELECT q.query_id, c0.vec_id AS neighbor_id,
-            (${dotIdx("q.v", "b0.cv")} + ${dotIdx("q.v", "b1.cv")}) /
+            (${dot("q.v", "b0.cv")} + ${dot("q.v", "b1.cv")}) /
               (q.qnrm * sqrt((b0.nsq + b1.nsq) +
-                2.0 * ${dotIdx("b0.cv", "b1.cv")})) AS c0v
+                2.0 * ${dot("b0.cv", "b1.cv")})) AS c0v
           FROM codes0 c0
           JOIN codes1 c1 ON c1.vec_id = c0.vec_id
           JOIN cb0n b0 ON b0.cluster_id = c0.code
@@ -2325,10 +2255,6 @@ object SparkEntry {
     * emb_knn and emb_kmeans oracles — fully deterministic, so it must
     * hash-match. */
   private def ivfOracle(numQueries: Int, k: Int, c: Int, nprobe: Int): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def nrm(a: String) =
-      s"sqrt(list_reduce(list_transform($a, x -> x * x), (a, b) -> a + b))"
     s"""WITH e AS (
           SELECT vec_id, embedding::DOUBLE[] AS v,
             ${nrm("embedding::DOUBLE[]")} AS nrm
@@ -2372,8 +2298,6 @@ object SparkEntry {
     * engines, so the composition is deterministic. */
   private def recallOracle(numQueries: Int, k: Int, c: Int,
                            nprobe: Int): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
     s"""WITH ivf_res AS (${ivfOracle(numQueries, k, c, nprobe)}),
         knn_res AS (
           WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2405,8 +2329,6 @@ object SparkEntry {
     * [[recallOracle]]-shaped block per truncation width, the approx side
     * being the exact-knn formula over `v[1:d]`, unioned in `dims` order. */
   private def mrlOracle(numQueries: Int, k: Int, dims: Seq[Int]): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
     def knn(vExpr: String) =
       s"""WITH e AS (SELECT vec_id, (embedding::DOUBLE[])$vExpr AS v FROM embeddings),
           q AS (SELECT vec_id AS query_id, v AS vq FROM e WHERE vec_id < $numQueries),
@@ -2529,8 +2451,6 @@ object SparkEntry {
   private def hnswOracle(m: Int, numTables: Int, maxLevel: Int, dim: Int,
                          bucketCap: Int,
                          source: String = "embeddings"): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
     val levelCase = (maxLevel to 1 by -1)
       .map(l => s"WHEN h % ${1L << (2 * l)} = 0 THEN $l").mkString(" ")
     s"""WITH ${lshBandingCtes(numTables, dim, None, source)},
@@ -2585,10 +2505,6 @@ object SparkEntry {
                              upperRounds: Int, beamRounds: Int,
                              m: Int, numTables: Int,
                              maxLevel: Int): String = {
-    def dotIdx(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def nrm(a: String) =
-      s"sqrt(list_reduce(list_transform($a, x -> x * x), (a, b) -> a + b))"
     val upperCtes = (for {
       (l, li) <- (maxLevel to 1 by -1).zipWithIndex
       r <- 1 to upperRounds
@@ -2636,7 +2552,7 @@ object SparkEntry {
           FROM embeddings),
         qc AS MATERIALIZED (
           SELECT q.vec_id AS query_id, c.vec_id AS node,
-            ${dotIdx("q.v", "c.v")} / (q.nm * c.nm) AS cos
+            ${dot("q.v", "c.v")} / (q.nm * c.nm) AS cos
           FROM env q CROSS JOIN env c
           WHERE q.vec_id < $numQueries),
         ent AS (
@@ -2668,10 +2584,6 @@ object SparkEntry {
   private def lshBandingCtes(numTables: Int, dim: Int,
                              bitsClamp: Option[Int],
                              source: String): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def nrm(a: String) =
-      s"sqrt(list_reduce(list_transform($a, x -> x * x), (a, b) -> a + b))"
     val maxBits = 16
     val planeRows = graft.operators.Similarity.planes(numTables * maxBits, dim)
       .zipWithIndex.map { case (p, i) =>
@@ -2704,8 +2616,6 @@ object SparkEntry {
   private def lshOracle(threshold: Double, numTables: Int, dim: Int,
                         bucketCap: Int,
                         source: String = "embeddings"): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]), (x, y) -> x + y)"
     val recallClamp =
       graft.operators.Similarity.maxBitsForRecall(threshold, numTables)
     s"""WITH ${lshBandingCtes(numTables, dim, Some(recallClamp), source)},

@@ -2405,9 +2405,9 @@ object Similarity {
   /** The published serving artifact: adjacency (id-sorted neighbor
     * arrays), the vector table, and the entry point — what a serving
     * node loads once and walks many times. Built by [[hnswIndex]],
-    * consumed by [[hnswSearchWithIndex]]; the
-    * trainedCodebook/trainedQualityWeights publish-once discipline at
-    * index scale. */
+    * consumed by [[hnswSearchWithIndex]]; like trainedCodebook and
+    * trainedQualityWeights, an artifact the caller holds and passes in,
+    * at index scale. */
   case class HnswIndex(adj: Map[(Int, Long), Array[Long]],
                        vecs: Map[Long, Array[Double]],
                        entry: Long, topLevel: Int)

@@ -2755,16 +2755,21 @@ object TextOps {
     *
     * Returns one row: corpus size, train accuracy, and the four weights.
     */
-  def trainQualityModel(documents: DataFrame): DataFrame =
-    trainQualityModel(documents, null)
+  def trainQualityModel(documents: DataFrame): DataFrame = {
+    val feats = qmFeatures(documents)
+    qmReport(feats, qmTrainedWeights(feats))
+  }
 
-  /** Variant taking already-published weights (skips the GD loop; the
-    * report then audits the published model against the corpus). Pass
-    * null to train in-line. */
+  /** Audit form: the same report for already-published weights, with no
+    * training pass. */
   def trainQualityModel(documents: DataFrame,
                         published: Array[Double]): DataFrame = {
-    val feats = qmFeatures(documents)
-    val w = if (published != null) published else qmTrainedWeights(feats)
+    require(published != null && published.length == 4,
+      "published quality-model weights must be 4 doubles")
+    qmReport(qmFeatures(documents), published)
+  }
+
+  private def qmReport(feats: DataFrame, w: Array[Double]): DataFrame = {
     val z = qmMargin(w)
     val correct = (qmSig(z) > 0.5) === (col("y") === 1.0)
     feats.agg(
@@ -2778,9 +2783,9 @@ object TextOps {
   }
 
   /** Train-once entry point (the [[graft.operators.Similarity]]
-    * `trainedCodebook` discipline, round-8 verdict #7): runs the GD loop
-    * ONCE and returns the 4 published weights — a metadata-scale
-    * artifact callers cache and feed to the weights-consuming
+    * `trainedCodebook` discipline): runs the GD loop ONCE and returns the
+    * 4 published weights — a metadata-scale artifact a caller keeps and
+    * passes to the weights-consuming
     * [[scoreWithQualityModel]] overload, so the scoring query is a pure
     * map with ZERO training jobs in its plan. At 100 TB this is the
     * train/serve split every model-based curation pipeline has: the 16
@@ -2806,8 +2811,8 @@ object TextOps {
       col("y").as("label"))
   }
 
-  /** Convenience form that trains in-line (16 eager aggregation jobs at
-    * plan-build time). Prefer [[trainedQualityWeights]] +
+  /** Convenience form that trains in-line (`qmIters` eager jobs at
+    * plan-build time, one per gradient pass). Prefer [[trainedQualityWeights]] +
     * the weights overload when the same model scores more than once. */
   def scoreWithQualityModel(documents: DataFrame): DataFrame =
     scoreWithQualityModel(documents, trainedQualityWeights(documents))
@@ -2849,30 +2854,36 @@ object TextOps {
     * passes; weights never touch an RDD. Gradient of the squared
     * fast-sigmoid loss, constant 2 folded into the learning rate. */
   private def qmTrainedWeights(feats: DataFrame): Array[Double] = {
-    import graft.functions.DeterministicAgg.exactSum
-    // the 16 passes are EAGER (head() each) over the same tiny projection
-    // (doc_id + 3 feature doubles + label) — cache it for the loop so the
-    // parquet scan and the tokenizing feature extraction run ONCE, not 16
-    // times (sf0.1: 3.9 s -> feature cost paid once). Values are identical
-    // cached or not, and the decimal-exact sums are partition-order-proof,
-    // so the bit-exact oracle contract is untouched.
+    import graft.functions.DeterministicAgg.wideDecimalLocal
+    // every pass reads the same tiny projection (doc_id + 3 feature
+    // doubles + label): cache it so the parquet scan and the tokenizing
+    // feature extraction run once, not once per pass
     val cached = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       var w = Array(0.0, 0.0, 0.0, 0.0)
       for (_ <- 1 to qmIters) {
         val z = qmMargin(w)
         val com = (qmSig(z) - col("y")) * qmSigD(z)
-        val g = cached.agg(
-          exactSum(roundFixed(com, 6)).as("g0"),
-          exactSum(roundFixed(com * col("x1"), 6)).as("g1"),
-          exactSum(roundFixed(com * col("x2"), 6)).as("g2"),
-          exactSum(roundFixed(com * col("x3"), 6)).as("g3"),
-          count(lit(1)).as("n")).head()
+        // the 1e-6-quantized per-row terms, folded in ONE action as exact
+        // decimal(38,10) sums plus a row count: the arithmetic of a SQL
+        // sum of the terms cast to decimal, so partition order cannot
+        // move a bit, but one job a pass instead of an aggregate's two
+        val terms = cached.select(roundFixed(com, 6),
+          roundFixed(com * col("x1"), 6), roundFixed(com * col("x2"), 6),
+          roundFixed(com * col("x3"), 6))
+        val (g, n) = terms.queryExecution.toRdd.treeAggregate(
+          (Array.fill(4)(java.math.BigDecimal.ZERO), 0L))((acc, row) => {
+            for (j <- 0 until 4 if !row.isNullAt(j))
+              acc._1(j) = acc._1(j).add(wideDecimalLocal(row.getDouble(j)))
+            (acc._1, acc._2 + 1)
+          }, (a, b) => {
+            for (j <- 0 until 4) a._1(j) = a._1(j).add(b._1(j))
+            (a._1, a._2 + b._2)
+          })
         // empty corpus: no gradient, weights stay zero (empty-input
         // degradation — the queries still return their schema)
-        if (g.getLong(4) == 0L) return w
-        val n = g.getLong(4).toDouble
-        w = Array.tabulate(4)(j => w(j) - qmLr * g.getDouble(j) / n)
+        if (n == 0L) return w
+        w = Array.tabulate(4)(j => w(j) - qmLr * g(j).doubleValue / n)
       }
       w
     } finally cached.unpersist(blocking = false)
@@ -3652,9 +3663,9 @@ object TextOps {
       s"minLen in [2,cap=$cap], got $minLen")
     import org.apache.spark.sql.expressions.Window
     // `lcpRel`: a PUBLISHED [[suffixLcp]] relation (cached/bucketed) —
-    // the dedup decision and transform both ride the same LCP artifact,
-    // so a caller that computes it once (SparkEntry memoizes per dir)
-    // never rebuilds the suffix array per downstream query. The artifact
+    // the dedup decision and transform can both ride the same LCP
+    // artifact, so a caller that builds it once and passes it in never
+    // rebuilds the suffix array per downstream query. The artifact
     // must have been built with a cap ≥ minLen — a smaller build cap
     // would saturate below the threshold and silently MISS qualifying
     // pairs — so the build cap carried in the lcp column's metadata is

@@ -130,24 +130,12 @@ object Tables {
   private val eventsNanosReadSchema: StructType = StructType(
     eventsSchema.map(f => if (f.name == "ts") f.copy(dataType = LongType) else f))
 
-  /** The `ts` logical-type unit declared by the events.parquet FOOTER — a
-    * driver-side metadata read, no Spark job (same machinery as
-    * [[parquetRowCount]]). Cached per (resolved file, mtime, length): a
-    * plain per-path cache would keep serving the stale read plan if the
-    * driver regenerates events.parquet with a different encoding while a
-    * long-lived JVM session is up — exactly the drift this probe exists to
-    * survive. The stat call that builds the key is a driver-side metadata
-    * round-trip, negligible next to the query it guards.
-    */
-  private val tsUnitCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), LogicalTypeAnnotation.TimeUnit]()
-  private def eventsTsUnit(spark: SparkSession, sfDir: String): LogicalTypeAnnotation.TimeUnit =
-    tsUnitOfPath(spark, s"$sfDir/events.parquet")
-
   /** The `ts` logical-type unit declared by the footer of an events-shaped
     * parquet file (or the first file of a directory) — shared by the batch
     * reader and the streaming source, so both branch identically on the
-    * generator's encoding. */
+    * generator's encoding. A driver-side metadata read, no Spark job (same
+    * machinery as [[parquetRowCount]]), made on every call: a file rewritten
+    * with another encoding while the JVM is up is read the new way. */
   private[graft] def tsUnitOfPath(spark: SparkSession,
                                   path: String): LogicalTypeAnnotation.TimeUnit = {
     import org.apache.hadoop.fs.Path
@@ -156,28 +144,25 @@ object Tables {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val status =
+    val file =
       if (fs.getFileStatus(root).isDirectory) {
         val files = fs.listStatus(root)
           .filter(_.getPath.getName.endsWith(".parquet"))
         if (files.isEmpty) sys.error(
           s"cannot probe ts encoding: no parquet files yet under $path — " +
             "stage at least one file before opening the stream")
-        files.head
-      } else fs.getFileStatus(root)
-    val key = (status.getPath.toString, status.getModificationTime, status.getLen)
-    tsUnitCache.computeIfAbsent(key, { _ =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(status.getPath, conf))
-      try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        schema.getType(schema.getFieldIndex("ts"))
-          .asPrimitiveType().getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => t.getUnit
-          case other => sys.error(
-            s"events.ts in $path has unexpected logical type $other — testdata format changed?")
-        }
-      } finally r.close()
-    })
+        files.head.getPath
+      } else root
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try {
+      val schema = r.getFooter.getFileMetaData.getSchema
+      schema.getType(schema.getFieldIndex("ts"))
+        .asPrimitiveType().getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => t.getUnit
+        case other => sys.error(
+          s"events.ts in $path has unexpected logical type $other — testdata format changed?")
+      }
+    } finally r.close()
   }
 
   /** The nanos-aware read schema pair for events-shaped files, keyed by the

@@ -1346,51 +1346,73 @@ class TextOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("lcpMemo is LRU-bounded: a third dir evicts and unpersists the least-recently-used artifact") {
+  /** A data dir holding only a documents table with `texts`. */
+  private def docsDir(texts: Seq[String]): String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_docs_dir").toString
+    writeDocs(d, texts)
+    d
+  }
+  private def writeDocs(dir: String, texts: Seq[String]): Unit = {
     import spark.implicits._
+    texts.zipWithIndex.map { case (t, i) => (i.toLong + 1, t) }
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+  private def queryRows(name: String, dir: String) =
+    SparkEntry.queries(name)(spark, dir).collect().map(_.toString).sorted.toSeq
+  private val dupCorpus = Seq(
+    "the quick brown fox jumps over the lazy dog and runs far away home",
+    "a slow green turtle walks the quick brown fox jumps over the lazy dog",
+    "of the people by the people for the people shall not perish",
+    "the quick brown fox jumps over the lazy dog and runs far away home again")
+
+  test("lcpMemo is LRU-bounded: a third dir evicts and unpersists the least-recently-used artifact") {
     import org.apache.spark.storage.StorageLevel
-    // three tiny corpora on disk, shaped like a data dir (round-10
-    // verdict #2: the memo caches PERSISTED corpus-scale relations, so
-    // it must evict + unpersist past capacity instead of pinning one
-    // artifact per dir forever)
-    val base = java.nio.file.Files.createTempDirectory("lcp_memo_spec").toString
-    val dirs = (0 until 3).map { i =>
-      val d = s"$base/d$i"
-      Seq((1L, s"a b c d$i"), (2L, s"b c d$i e")).toDF("doc_id", "text")
-        .write.parquet(s"$d/documents.parquet")
-      d
+    // the name predates the memo's removal; the property is now stronger:
+    // a query over any number of dirs keeps nothing cached once it is read.
+    // The local checkpoints the relation reads are its data, not a cache,
+    // and go with the relation
+    val sc = spark.sparkContext
+    def cachedRdds = sc.getPersistentRDDs.collect {
+      case (id, rdd) if !rdd.isCheckpointed => id
+    }.toSet
+    val before = cachedRdds
+    for (i <- 0 until 3) {
+      val lcp = SparkEntry.queries("doc_lcp")(spark,
+        docsDir(Seq(s"a b c d$i a b c", s"b c d$i e")))
+      assert(lcp.collect().nonEmpty)
+      assert(lcp.storageLevel == StorageLevel.NONE, s"dir $i left a cached relation")
     }
-    // drain, don't just clear: entries left by other suites on this
-    // shared SparkSession hold PERSISTED blocks — clearing the map
-    // without unpersisting would leak them for the rest of the JVM test
-    // run (round-11 advisor)
-    SparkEntry.lcpMemo.synchronized {
-      SparkEntry.lcpMemo.values.forEach(_.unpersist(blocking = false): Unit)
-      SparkEntry.lcpMemo.clear()
+    assert(cachedRdds == before, s"persisted RDDs left behind: ${cachedRdds -- before}")
+  }
+
+  test("doc_model_train and doc_lcp answer for the corpus on disk, not an earlier one in the same dir") {
+    val changed = dupCorpus.map(_ + " plus a fresh tail of words")
+    val dir = docsDir(dupCorpus)
+    val old = Seq("doc_model_train", "doc_lcp").map(q => q -> queryRows(q, dir)).toMap
+    writeDocs(dir, changed)
+    val fresh = docsDir(changed)
+    for (q <- Seq("doc_model_train", "doc_lcp")) {
+      val want = queryRows(q, fresh)
+      assert(want != old(q), s"$q: the two corpora must give different answers")
+      assert(queryRows(q, dir) == want, s"$q served the overwritten corpus")
     }
-    assert(SparkEntry.lcpMemoCapacity == 2)
-    val first = SparkEntry.lcpRel(spark, dirs(0))
-    val second = SparkEntry.lcpRel(spark, dirs(1))
-    assert(first.storageLevel != StorageLevel.NONE)
-    // same dir returns the SAME cached relation, no rebuild
-    assert(SparkEntry.lcpRel(spark, dirs(0)) eq first)
-    // third dir: capacity 2 evicts the least-recently-used (dirs(1) —
-    // dirs(0) was touched after it) and RELEASES its cached blocks
-    val third = SparkEntry.lcpRel(spark, dirs(2))
-    assert(second.storageLevel == StorageLevel.NONE,
-      "evicted artifact must be unpersisted")
-    assert(first.storageLevel != StorageLevel.NONE)
-    assert(third.storageLevel != StorageLevel.NONE)
-    assert(SparkEntry.lcpMemo.synchronized(!SparkEntry.lcpMemo.containsKey(dirs(1))))
-    assert(SparkEntry.lcpMemo.synchronized(SparkEntry.lcpMemo.size) == 2)
-    // an evicted dir just takes the cold path again — correctness never
-    // depended on the memo
-    val rebuilt = SparkEntry.lcpRel(spark, dirs(1))
-    assert(!(rebuilt eq second) && rebuilt.storageLevel != StorageLevel.NONE)
-    SparkEntry.lcpMemo.synchronized {
-      SparkEntry.lcpMemo.values.forEach(_.unpersist(blocking = false): Unit)
-      SparkEntry.lcpMemo.clear()
+  }
+
+  test("the six shared-artifact queries build with the same job count alone and after their siblings") {
+    val six = Seq("doc_model_train", "doc_model_score", "doc_model_calibration",
+      "doc_lcp", "doc_dup_intervals", "doc_dedup_excise_sa")
+    def build(q: String, dir: String): Int =
+      JobCount(spark) { SparkEntry.queries(q)(spark, dir) }
+    val alone = six.map(q => q -> build(q, docsDir(dupCorpus))).toMap
+    // forward and reverse: every query is built after all five siblings
+    // in one of the two orders
+    for (order <- Seq(six, six.reverse)) {
+      val dir = docsDir(dupCorpus)
+      val after = order.map(q => q -> build(q, dir)).toMap
+      assert(after == alone, s"order ${order.mkString(",")}: $after vs alone $alone")
     }
+    for (q <- six.take(3))
+      assert(alone(q) <= TextOps.qmIters + 1, s"$q: ${alone(q)} build jobs")
   }
 
   test("dupSpans rejects an lcpRel built with a smaller cap than minLen, and any untagged relation") {
@@ -1412,7 +1434,7 @@ class TextOpsSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("graft.lcp.cap"), e2.getMessage)
     // an adequately-capped artifact passes through and the tag survives
-    // persist/select (the memoized SparkEntry path)
+    // persist/select (a caller that builds the relation once and shares it)
     val ok = TextOps.suffixLcp(fix, cap = 8).persist()
     try {
       assert(TextOps.dupSpans(fix, minLen = 6, cap = 8,
