@@ -3311,48 +3311,98 @@ object TextOps {
     * (the first round's contested rows). */
   private case class SeedTotals(rows: Long, sentinels: Long, maxLen: Long, tied: Long)
 
+  /** Contested rows of [[suffixRanks]] (positions whose tie group holds
+    * at least two rows) as primitive columns: doc_id, pos, document
+    * length in positions, and the group's bucket-start rank r. */
+  private[graft] final case class Tied(doc: Array[Long], pos: Array[Long],
+                                       len: Array[Long], r: Array[Long]) {
+    def size: Int = r.length
+  }
+
+  private def concatTied(ts: Seq[Tied]): Tied = Tied(Array.concat(ts.map(_.doc): _*),
+    Array.concat(ts.map(_.pos): _*), Array.concat(ts.map(_.len): _*),
+    Array.concat(ts.map(_.r): _*))
+
+  /** Appends [[Tied]] rows column by column. */
+  private final class TiedBuf {
+    private val cols = Array.fill(4)(new scala.collection.mutable.ArrayBuilder.ofLong)
+    def add(d: Long, p: Long, l: Long, r: Long): Unit = {
+      cols(0) += d; cols(1) += p; cols(2) += l; cols(3) += r
+    }
+    def result(): Tied = Tied(cols(0).result(), cols(1).result(),
+      cols(2).result(), cols(3).result())
+  }
+
+  /** The most contested rows the full resolve of [[suffixRanks]] takes.
+    * At sf0.01 the first round has 1,733 of 27,665 positions, at sf0.1
+    * 17,849 of 275,704; past the gate the contested rows are never
+    * collected and doubling rounds shrink them first. With kMax ≤ 16
+    * this bounds the broadcast partner keys at 1.6M. */
+  private val resolveGate = 100000L
+
   /** The seed pass of [[suffixRanks]]: sorted runs of `key` over
     * `positions` (key, doc_id, pos, len), without the single-partition
-    * window a global row number plans. Range-partition by the key (equal
-    * keys share a partition, so runs never span partitions), sort within
-    * partitions and checkpoint, collect the P per-partition
-    * [[SeedTotals]], then one pass emits every position with r = 1 + the
-    * rows of a smaller key and gs = the size of its run of equal keys. A
-    * run is buffered while it is counted, so a task holds at most the
-    * largest run. Keys compare in their binary row form, the equality
-    * Spark's own grouping uses. Output: (doc_id, pos, len, r, gs) as
-    * longs — a pure function of the data, never of the partitioning. */
-  private def seedRanks(positions: DataFrame): (DataFrame, SeedTotals) = {
+    * window a global row number plans. Range-partition by the key into
+    * the session's shuffle partitions (equal keys share a partition, so
+    * runs never span partitions; an explicit count, which adaptive
+    * execution does not coalesce, so the sort runs on every core), sort
+    * within partitions and checkpoint, then one job collects the P
+    * per-partition [[SeedTotals]] and, while the corpus holds fewer than
+    * [[resolveGate]] of them, the rows in runs of at least two with their
+    * partition-local run start; the partition offsets turn that start
+    * into the bucket-start rank. A last pass emits every position with
+    * r = 1 + the rows of a smaller key and gs = the size of its run of
+    * equal keys. A run is buffered while it is counted, so a task holds
+    * at most the largest run. Keys compare in their binary row form, the
+    * equality Spark's own grouping uses. Output: (doc_id, pos, len, r, gs)
+    * as longs — a pure function of the data, never of the partitioning —
+    * still to be materialized, the totals, and the contested rows. */
+  private def seedRanks(positions: DataFrame): (DataFrame, SeedTotals, Option[Tied]) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val spark = positions.sparkSession
     val sorted = positions.select(col("key"), col("doc_id"), col("pos"), col("len"))
-      .repartitionByRange(col("key"))
+      .repartitionByRange(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("key"))
       .sortWithinPartitions(col("key"))
       .localCheckpoint(false)
     val rows = sorted.queryExecution.toRdd
+    val gate = resolveGate
     val perPart = rows
       .mapPartitionsWithIndex { (pid, it) =>
-        var n, sentinels, maxLen, tied, run = 0L
+        var n, sentinels, maxLen, tied, start = 0L
         var prev: InternalRow = null
+        val run = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+        var out = new TiedBuf
+        def close(): Unit = if (run.size > 1) {
+          tied += run.size
+          if (tied >= gate) out = null
+          if (out != null) run.foreach { case (d, p, l) => out.add(d, p, l, start) }
+        }
         it.foreach { r =>
           val k = r.getStruct(0, 2)
-          if (prev != null && k == prev) run += 1
-          else { if (run > 1) tied += run; run = 1; prev = k.copy() }
+          if (prev == null || k != prev) {
+            close(); run.clear(); start = n; prev = k.copy()
+          }
           val len = r.getLong(3)
+          run += ((r.getLong(1), r.getLong(2), len))
           n += 1
           if (r.getLong(2) == len - 1) sentinels += 1
           maxLen = math.max(maxLen, len)
         }
-        if (run > 1) tied += run
-        Iterator((pid, SeedTotals(n, sentinels, maxLen, tied)))
+        close()
+        Iterator((pid, SeedTotals(n, sentinels, maxLen, tied), Option(out).map(_.result())))
       }
-      .collect().sortBy(_._1).map(_._2)
-    val totals = perPart.foldLeft(SeedTotals(0L, 0L, 0L, 0L)) { (a, b) =>
+      .collect().sortBy(_._1)
+    val totals = perPart.map(_._2).foldLeft(SeedTotals(0L, 0L, 0L, 0L)) { (a, b) =>
       SeedTotals(a.rows + b.rows, a.sentinels + b.sentinels,
         math.max(a.maxLen, b.maxLen), a.tied + b.tied)
     }
-    val offs = perPart.scanLeft(0L)(_ + _.rows)
+    val offs = perPart.map(_._2.rows).scanLeft(0L)(_ + _)
+    val tied =
+      if (totals.tied >= gate) None
+      else Some(concatTied(perPart.toSeq.map { case (pid, _, t) =>
+        t.get.copy(r = t.get.r.map(offs(pid) + _ + 1)) }))
     val ranked = rows.mapPartitionsWithIndex { (pid, it) =>
       val in = it.buffered
       var n = offs(pid)
@@ -3368,10 +3418,128 @@ object TextOps {
         run.iterator.map { case (d, p, l) => Row(d, p, l, r, run.size.toLong) }
       }
     }
-    val base = positions.sparkSession.createDataFrame(ranked, StructType(
+    val base = spark.createDataFrame(ranked, StructType(
         Seq("doc_id", "pos", "len", "r", "gs").map(StructField(_, LongType, nullable = false))))
       .localCheckpoint(false)
-    (base, totals)
+    (base, totals, tied)
+  }
+
+  /** The contested rows (gs > 1) of a doubling round's (doc_id, pos, len,
+    * r, gs) relation and their count, in one job that also materializes
+    * the round's checkpoint; the rows only while fewer than
+    * [[resolveGate]]. */
+  private def roundTied(live: DataFrame): (Long, Option[Tied]) = {
+    val gate = resolveGate
+    val perPart = live.queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L
+      val out = new TiedBuf
+      it.foreach { x =>
+        if (x.getLong(4) > 1L) {
+          n += 1
+          if (n < gate) out.add(x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3))
+        }
+      }
+      Iterator((n, out.result()))
+    }.collect()
+    val n = perPart.map(_._1).sum
+    (n, if (n < gate) Some(concatTied(perPart.toSeq.map(_._2))) else None)
+  }
+
+  /** The full resolve of [[suffixRanks]] as a pure function: the final
+    * rank of each contested row. A tie group (equal r) sorts by the
+    * composite of the ranks at pos + k·step for k = 1..kMax, `rankAt`
+    * giving each partner's current rank; a partner at or past the end of
+    * the document counts as 0, below every rank. Row i of the group in
+    * that order takes rank r + i. Sentinels make every composite in a
+    * group distinct, so a tie breaks an invariant and throws. */
+  private[graft] def resolveTies(t: Tied, step: Long, kMax: Int,
+                                 rankAt: (Long, Long) => Long): Array[Long] = {
+    val keys = Array.tabulate(t.size) { i =>
+      Array.tabulate(kMax) { j =>
+        val p = t.pos(i) + (j + 1) * step
+        if (p < t.len(i)) rankAt(t.doc(i), p) else 0L
+      }
+    }
+    val order = Array.range(0, t.size).sortWith { (a, b) =>
+      if (t.r(a) != t.r(b)) t.r(a) < t.r(b)
+      else java.util.Arrays.compare(keys(a), keys(b)) < 0
+    }
+    val out = new Array[Long](t.size)
+    var i = 0
+    while (i < order.length) {
+      val g = t.r(order(i))
+      var j = 0
+      while (i + j < order.length && t.r(order(i + j)) == g) {
+        if (j > 0 && java.util.Arrays.equals(keys(order(i + j)), keys(order(i + j - 1))))
+          throw new IllegalStateException("suffixRanks full-resolve invariant " +
+            s"violated: composite key tie within rank group $g — duplicate " +
+            "final ranks would result")
+        out(order(i + j)) = g + j
+        j += 1
+      }
+      i += j
+    }
+    out
+  }
+
+  /** Distinct (doc_id, pos) keys, sorted, in two primitive arrays. */
+  private final class PosKeys(val doc: Array[Long], val pos: Array[Long])
+      extends Serializable {
+    /** The index of (d, p), or -1. */
+    def indexOf(d: Long, p: Long): Int = {
+      var lo = 0
+      var hi = doc.length - 1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val c = if (doc(mid) != d) java.lang.Long.compare(doc(mid), d)
+                else java.lang.Long.compare(pos(mid), p)
+        if (c == 0) return mid
+        if (c < 0) lo = mid + 1 else hi = mid - 1
+      }
+      -1
+    }
+  }
+
+  /** The full resolve of [[suffixRanks]] on the driver: broadcast the
+    * contested rows' partner keys, collect their ranks from `lookup`
+    * (doc_id, pos, r) in one pass, which also materializes `lookup` when
+    * it is a lazy checkpoint, and sort each tie group with
+    * [[resolveTies]]. Output: (doc_id, pos, r) for the contested rows
+    * over a parallelized RDD, so no row enters the plan text. */
+  private def fullResolve(t: Tied, step: Long, kMax: Int,
+                          lookup: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val spark = lookup.sparkSession
+    val sc = spark.sparkContext
+    val partners = (for (i <- 0 until t.size; k <- 1 to kMax
+                         if t.pos(i) + k * step < t.len(i))
+      yield (t.doc(i), t.pos(i) + k * step)).distinct.sorted
+    val keys = new PosKeys(partners.map(_._1).toArray, partners.map(_._2).toArray)
+    val bk = sc.broadcast(keys)
+    val found = lookup.select(col("doc_id"), col("pos"), col("r"))
+      .queryExecution.toRdd.mapPartitions { it =>
+        val k = bk.value
+        val ix = new scala.collection.mutable.ArrayBuilder.ofInt
+        val rk = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.foreach { x =>
+          val i = k.indexOf(x.getLong(0), x.getLong(1))
+          if (i >= 0) { ix += i; rk += x.getLong(2) }
+        }
+        Iterator((ix.result(), rk.result()))
+      }.collect()
+    bk.destroy()
+    val ranks = Array.fill(partners.size)(-1L)
+    for ((ix, rk) <- found; j <- ix.indices) ranks(ix(j)) = rk(j)
+    val resolved = resolveTies(t, step, kMax, { (d, p) =>
+      val r = ranks(keys.indexOf(d, p))
+      if (r < 0) throw new IllegalStateException(s"suffixRanks: no rank at ($d, $p)")
+      r
+    })
+    val rows = Array.tabulate(t.size)(i => Row(t.doc(i), t.pos(i), resolved(i)))
+    spark.createDataFrame(
+      sc.parallelize(rows.toSeq, math.max(1, math.min(sc.defaultParallelism, t.size / 4096))),
+      StructType(Seq("doc_id", "pos", "r").map(StructField(_, LongType, nullable = false))))
   }
 
   /** Distributed suffix-array construction over the WHOLE corpus by
@@ -3398,18 +3566,25 @@ object TextOps {
     * untouched. Settled rows (group size 1) leave the loop permanently
     * and serve as a read-only lookup side, so a round costs
     * O(unresolved positions), not O(corpus). Once the contested set is
-    * small AND the whole remaining suffix fits a ≤16-column composite
-    * key, a FULL-RESOLVE round finishes the sort in one pass (the
-    * remaining rounds' keys, consulted at once). The worst case stays
+    * under [[resolveGate]] AND the whole remaining suffix fits a
+    * ≤16-block composite key, the FULL RESOLVE finishes the sort on the
+    * driver (the remaining rounds' keys, consulted at once): the job
+    * that counted the contested rows also returned them, one pass over
+    * the rank lookup collects their partners' ranks, and the driver sorts
+    * each tie group. At ≤100-token documents that is the seed pass's own
+    * collect, so no doubling round runs. The worst case stays
     * ceil(log2(maxDocLen / seedTokens)) rounds: sentinels bound every
     * within-document tie.
     *
     * Partners never leave their document. Tied windows are sentinel-free
     * (a window holding a sentinel is unique), so a contested row's
-    * partner pos + step lies inside its own document: each round is one
-    * measured-size-gated broadcast INNER join of the contested rows
-    * against the rank lookup on (doc_id, pos), plus two windows over one
-    * exchange; localCheckpoint truncates per-round lineage.
+    * partner pos + step lies inside its own document: each doubling
+    * round is one measured-size-gated broadcast INNER join of the
+    * contested rows against the rank lookup on (doc_id, pos), plus two
+    * windows over one exchange; localCheckpoint truncates per-round
+    * lineage. The result is the settled rows of the checkpoints plus the
+    * resolved rows over a parallelized RDD, so reading it is one job with
+    * no exchange.
     *
     * Bounds: the seed key holds at most seedTokens tokens per position,
     * so the sort's key bytes stay within seedTokens × the corpus, and
@@ -3430,17 +3605,16 @@ object TextOps {
     * oracle's valid doc length — the operator handles any length by
     * running more rounds). */
   def suffixRanks(documents: DataFrame): DataFrame = {
-    // the tokenization is cached while the ranks are built; released
-    // before returning, by which point the result reads only checkpoints.
+    // the tokenization is not cached: the seed sort's range sample and
+    // shuffle write each tokenize, where a cache ran a job of its own to
+    // fill (without it and with the driver-side resolve, graft.Bench at
+    // sf0.1, 4 cores, 3 pairs: doc_suffix_ranks median 2.25 → 1.38 s).
     // Spread first: a one-split scan ran the seed sort's range sample and
     // shuffle write in one task each. A/B in perfbench job_chains (4
     // cores, seeds 501–508, alternating): doc_suffix_ranks median 1.52 →
     // 1.37 s, faster in 8 of 8 pairs, for one more build job (the
     // exchange) and cpu_s 6.96 → 7.21 s
-    val toked = tokedDocs(spreadScan(documents))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try suffixRanksToked(toked)
-    finally toked.unpersist(blocking = false)
+    suffixRanksToked(tokedDocs(spreadScan(documents)))
   }
 
   /** The shared tokenization: one regex pass per document, null-safe. */
@@ -3460,11 +3634,11 @@ object TextOps {
     * length. */
   private[graft] val seedTokens = 16
 
-  /** [[suffixRanks]] over a PRE-TOKENIZED (ideally cached) relation: the
-    * seed pass reads `toked` twice (its range sample and its shuffle
-    * write) and [[suffixLcp]] a third time for its slices.
-    * MEMORY_AND_DISK: the tokenized corpus is corpus-sized, so the cache
-    * must spill, never OOM, at scale. */
+  /** [[suffixRanks]] over a tokenized relation (doc_id, toks). The seed
+    * pass reads `toked` twice, its range sample and its shuffle write;
+    * [[suffixLcp]] caches it (MEMORY_AND_DISK: corpus-sized, so it must
+    * spill, never OOM, at scale) because it reads it a third time for its
+    * slices. */
   private def suffixRanksToked(toked: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // every position pos ∈ 0..size(toks) of a document with a doc_id,
@@ -3482,66 +3656,40 @@ object TextOps {
         col("doc_id").cast("long").as("doc_id"), col("i").cast("long").as("pos"),
         (size(col("toks")) + 1).cast("long").as("len"))
     // an empty corpus has maxLen 0: no round runs and the result is empty
-    val (base, seed) = seedRanks(positions)
+    val (base, seed, seedTied) = seedRanks(positions)
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var live = base
     var n = seed.tied
+    var tied = seedTied
     var step = seedTokens.toLong
     var exhausted = false
     while (!exhausted && step < seed.maxLen) {
+      // rank lookup = everything settled in earlier rounds + this round's
+      // rows at their current ranks (all disjoint by (doc_id, pos))
+      val lookup = (parts.toSeq :+ live.select(col("doc_id"), col("pos"), col("r")))
+        .reduce(_ unionByName _)
       parts += live.filter(col("gs") === 1L).select(col("doc_id"), col("pos"), col("r"))
       val cont = live.filter(col("gs") > 1L)
-      // rank lookup = everything settled so far + the contested rows'
-      // current ranks (all disjoint by (doc_id, pos))
-      val lookup = (parts.toSeq :+ cont.select(col("doc_id"), col("pos"), col("r")))
-        .reduce(_ unionByName _)
-        .select(col("doc_id"), col("pos").as("ahead"), col("r").as("rv"))
       // offsets needed to cover the whole remaining suffix in one
       // composite key: blocks at +step·k for k = 1..kMax, where
       // (kMax+1)·step ≥ maxLen
       val kMax = ((seed.maxLen - 1) / step).toInt
       if (n == 0) exhausted = true
-      // the gate as measured on the seeded build: the first round runs at
-      // step 16 with kMax 6 (documents of ≤100 tokens) and n = 1,733 of
-      // L = 27,665 positions at sf0.01, 17,849 of 275,704 at sf0.1, so it
+      // documents of ≤100 tokens give kMax 6 at step 16, so the resolve
       // fires at once at every scale; longer documents double until
       // kMax ≤ 16
-      else if (n < 100000L && kMax >= 2 && kMax <= 16) {
+      else if (tied.isDefined && kMax <= 16) {
         // FULL-RESOLVE: sorting a tie group by the ranks at +s, +2s, …,
         // +kMax·s is block-aligned lexicographic comparison of the ENTIRE
         // remaining suffix — the exact keys the remaining doubling rounds
         // would consult, consulted at once — and sentinel uniqueness
-        // makes every composite distinct, so every row settles. Bounds:
-        // ≤16 sort columns and n·kMax ≤ 1.6M broadcast probe rows; when
-        // docs are long relative to step the branch does not fire yet
-        // and doubling continues. A block past the document's end has no
-        // partner and pivots to null (below every rank); it never
-        // decides the order, because two composites differ at or before
-        // the first block that holds a sentinel, whose partner exists.
-        // Block 1 always has its partner, so every contested row is kept.
-        val probes = cont.select(col("doc_id"), col("pos"), col("len"), col("r"),
-            explode(array((1 to kMax).map(k => lit(k.toLong)): _*)).as("k"))
-          .withColumn("ahead", col("pos") + col("k") * step)
-          .filter(col("ahead") < col("len"))
-        val pivotAggs = (1 to kMax).map(k =>
-          max(when(col("k") === k.toLong, col("rv"))).as(s"rk$k"))
-        val paired = broadcast(probes).join(lookup, Seq("doc_id", "ahead"))
-          .groupBy(col("doc_id"), col("pos"), col("r"))
-          .agg(pivotAggs.head, pivotAggs.tail: _*)
-        val wFull = Window.partitionBy(col("r"))
-          .orderBy((1 to kMax).map(k => col(s"rk$k")): _*)
-        // composite-key uniqueness is an INVARIANT (sentinel argument),
-        // checked for free: rank()==row_number() iff the composite has no
-        // tie, and both ride the SAME window exec. A tie, which rank()
-        // alone would turn into duplicate final ranks, kills the job.
-        val rnk = rank().over(wFull)
-        val rn = row_number().over(wFull)
-        parts += paired.select(col("doc_id"), col("pos"),
-          (col("r") + when(rnk === rn, rn).otherwise(raise_error(concat(
-            lit("suffixRanks full-resolve invariant violated: composite "),
-            lit("key tie within rank group "), col("r"),
-            lit(" — duplicate final ranks would result")))
-            .cast("long")) - lit(1L)).as("r"))
+        // makes every composite distinct, so every row settles. A block
+        // past the document's end counts as 0 (below every rank); it
+        // never decides the order, because two composites differ at or
+        // before the first block that holds a sentinel, whose partner
+        // exists. The contested rows came with the job that counted
+        // them, so the resolve is one pass over the lookup, on the driver
+        parts += fullResolve(tied.get, step, kMax, lookup)
         exhausted = true
       }
       else {
@@ -3551,7 +3699,9 @@ object TextOps {
         val shifted = cont.select(col("doc_id"), col("pos"), col("len"), col("r"),
           (col("pos") + step).as("ahead"))
         val contSide = if (n < 2000000L) broadcast(shifted) else shifted
-        val paired = contSide.join(lookup, Seq("doc_id", "ahead"))
+        val paired = contSide.join(
+          lookup.select(col("doc_id"), col("pos").as("ahead"), col("r").as("rv")),
+          Seq("doc_id", "ahead"))
         // ONE exchange for both window functions: the new group size is
         // the peer count under the SAME (r)-partitioned, rv-ordered sort
         // — a peers-only RANGE frame — instead of a second shuffle on
@@ -3562,7 +3712,9 @@ object TextOps {
             (col("r") + rank().over(wRank) - lit(1L)).as("r"),
             count(lit(1)).over(wPeers).as("gs"))
           .localCheckpoint(false)
-        n = live.filter(col("gs") > 1L).count() // materializes the checkpoint
+        val (m, t) = roundTied(live) // materializes the checkpoint
+        n = m
+        tied = t
         step <<= 1
       }
     }
@@ -3690,11 +3842,14 @@ object TextOps {
     }
     val qualifying = lcpRel.getOrElse(suffixLcp(documents, cap))
       .filter(col("lcp") >= minLen)
+    // both ends of each pair from one read of the LCP relation
     val spans0 = qualifying
-      .select(col("doc_id"), col("pos").as("s"),
-        (col("pos") + col("lcp")).as("e"))
-      .unionByName(qualifying.select(col("prev_doc_id").as("doc_id"),
-        col("prev_pos").as("s"), (col("prev_pos") + col("lcp")).as("e")))
+      .select(explode(array(
+        struct(col("doc_id").as("doc_id"), col("pos").as("s"),
+          (col("pos") + col("lcp")).as("e")),
+        struct(col("prev_doc_id").as("doc_id"), col("prev_pos").as("s"),
+          (col("prev_pos") + col("lcp")).as("e")))).as("iv"))
+      .select(col("iv.doc_id").as("doc_id"), col("iv.s").as("s"), col("iv.e").as("e"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("s"), col("e"))
     spans0
       .withColumn("runmax",
@@ -3789,10 +3944,10 @@ object TextOps {
       .filter(size(col("toks")) > 0)
       .select(col("toks"), transform(col("toks"), t => xxhash64(t)).as("hs"))
       .localCheckpoint(false)
-    val maxLen = toked.agg(max(size(col("toks")))).head() match {
-      case r if r.isNullAt(0) => 0
-      case r => r.getInt(0)
-    }
+    // the longest document, from the job that materializes the checkpoint
+    val maxLen = toked.queryExecution.toRdd
+      .mapPartitions(it => Iterator(it.foldLeft(0)((m, r) => math.max(m, r.getArray(0).numElements()))))
+      .collect().foldLeft(0)(math.max)
     val hashes = toked.select(col("hs")).as[Array[Long]]
     def repeats(ls: Seq[Int]): Int = {
       val lens = ls.toArray

@@ -1303,6 +1303,38 @@ class TextOpsSpec extends AnyFunSuite {
       bruteSuffixRanks(Seq(1L -> "b a", 2L -> "a b a")))
   }
 
+  test("suffix ranks full resolve: a tie group sorts by its composite, a partner past the end is lowest, a tie throws") {
+    // step 2, kMax 3: row i's composite reads the ranks at pos + 2, + 4, + 6
+    val rank = Map((1L, 2L) -> 7L, (1L, 4L) -> 3L, (1L, 6L) -> 9L,
+      (1L, 5L) -> 7L, (1L, 7L) -> 3L, (1L, 9L) -> 2L,
+      (2L, 2L) -> 7L, (2L, 4L) -> 3L,
+      (3L, 3L) -> 4L, (3L, 4L) -> 1L)
+    val t = TextOps.Tied(doc = Array(1L, 1L, 2L, 3L, 3L), pos = Array(0L, 3L, 0L, 1L, 2L),
+      len = Array(10L, 10L, 5L, 4L, 5L), r = Array(5L, 5L, 5L, 1L, 1L))
+    val got = TextOps.resolveTies(t, 2L, 3, (d, p) => rank((d, p)))
+    // group 5: (7, 3, 9) > (7, 3, 2) > (7, 3, past the end); group 1:
+    // (4, past, past) > (1, past, past), each group ranked from its own r
+    assert(got.toSeq == Seq(7L, 6L, 5L, 2L, 1L))
+    // every partner rank is at least 1, so past the end sorts below rank 1
+    val edge = TextOps.Tied(Array(1L, 2L), Array(0L, 0L), Array(3L, 9L), Array(4L, 4L))
+    assert(TextOps.resolveTies(edge, 2L, 2, (_, _) => 1L).toSeq == Seq(4L, 5L))
+    val tie = TextOps.Tied(Array(1L, 2L), Array(0L, 0L), Array(9L, 9L), Array(4L, 4L))
+    val e = intercept[IllegalStateException] {
+      TextOps.resolveTies(tie, 2L, 2, (_, p) => p)
+    }
+    assert(e.getMessage.contains("composite key tie within rank group 4"), e.getMessage)
+  }
+
+  test("suffix ranks: reading the result runs one job and no exchange") {
+    var ranks: org.apache.spark.sql.DataFrame = null
+    JobCount(spark) { ranks = TextOps.suffixRanks(docs) }
+    var rows: Array[org.apache.spark.sql.Row] = null
+    assert(JobCount(spark) { rows = ranks.collect() } == 1)
+    assert(rows.map(_.getLong(2)).sorted.toSeq == (1L to rows.length))
+    val plan = ranks.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+  }
+
   test("suffix LCP array: matches a brute-force sorted-suffix comparison exactly") {
     import spark.implicits._
     val fix = Seq(10L -> "b a n a n a", 20L -> "a n a b a n",
@@ -1650,6 +1682,14 @@ class TextOpsSpec extends AnyFunSuite {
     var rows: Array[org.apache.spark.sql.Row] = null
     assert(JobCount(spark) { rows = lrs.collect() } == 0)
     assert(rows.length == 1)
+  }
+
+  test("longest repeated substring: the longest document comes from the checkpointing job") {
+    // the spread, the checkpoint with the longest document folded in,
+    // and two rounds and the confirm of two jobs each; a separate max
+    // aggregate over the checkpoint ran two jobs (9 at sf0.001)
+    val jobs = JobCount(spark) { TextOps.longestRepeatedSubstring(docs) }
+    assert(jobs <= 8, s"$jobs construction jobs")
   }
 
   test("Kneser-Ney bigram: hand-computed fixture, exact to the 1e-4 grid") {
